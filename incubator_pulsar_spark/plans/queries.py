@@ -169,13 +169,12 @@ def _stream_shuffle_partitions(spark, n_keys: int) -> int:
     per batch) but the floor of 8 WINS over it on runners narrower
     than 8 cores (ADVICE r13 — max(8, min(dp, ·)) returns 8 when
     dp < 8, which is intended: 8 state partitions on 4 cores cost two
-    task waves, cheaper than starving the per-group Arrow work).
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides for cluster tuning."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    task waves, cheaper than starving the per-group Arrow work)."""
     dp = spark.sparkContext.defaultParallelism
     return max(8, min(dp, -(-int(n_keys) // 128)))
+
+
+STREAM_GATE_TIMEOUT_S = 600
 
 
 def _run_stream_gate(spark, out, sink: str, ck: str, parts: int) -> None:
@@ -183,16 +182,58 @@ def _run_stream_gate(spark, out, sink: str, ck: str, parts: int) -> None:
     shuffle width pinned to ``parts`` (the state-store partition count
     is fixed by the conf at first batch and checkpointed; gates build
     fresh checkpoints every run, so the narrow width is safe). The
-    session conf is restored after the drain."""
+    session conf is restored after the drain. A drain that outlives
+    ``STREAM_GATE_TIMEOUT_S`` stops the query and raises: its sink is
+    partial, and a gate must never read it back as a result."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(600)
+        if not q.awaitTermination(STREAM_GATE_TIMEOUT_S):
+            err, progress = q.exception(), q.lastProgress
+            q.stop()
+            raise RuntimeError(
+                f"stream gate did not drain within {STREAM_GATE_TIMEOUT_S}"
+                f" s; its sink {sink} is partial (exception: {err}; "
+                f"lastProgress: {progress})")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _replay_gate(spark, sf_dir, tag: str, rows: DataFrame, *, key: str,
+                 order, shuffle: list, build: Callable,
+                 sentinel: Callable | None = None) -> DataFrame:
+    """The stream gates' replay: ``rows`` split into two half-span
+    bands of the long ``order`` column (a name or expression), each
+    band written as one file DISORDERED by md5 over ``shuffle``, then
+    replayed availableNow one file per micro-batch through
+    ``build(stream, lo, n_keys)`` (``lo`` = the minimum ``order``);
+    returns the sink read back. Two bands keep the cross-batch carry
+    at half the fixed per-micro-batch cost of four (optimization r14).
+    ``sentinel(hi)`` gives extra rows that ride inside the last band
+    (``hi`` = the maximum ``order``)."""
+    import shutil as _sh
+
+    d = _scratch(tag, sf_dir)
+    _sh.rmtree(d, ignore_errors=True)
+    src, sink, ck = d + "/src", d + "/sink", d + "/ck"
+    o = F.col(order) if isinstance(order, str) else order
+    lo, hi, nk = rows.agg(F.min(o), F.max(o),
+                          F.approx_count_distinct(key)).collect()[0]
+    width = -(-(hi - lo + 1) // 2)
+    banded = rows.withColumn(
+        "_band", F.floor((o - F.lit(lo)) / F.lit(width)).cast("int"))
+    if sentinel is not None:
+        banded = banded.unionByName(
+            sentinel(hi).withColumn("_band", F.lit(1)))
+    _write_band_files(banded, src, 2, F.md5(F.concat_ws("|", *shuffle)))
+    stream = (spark.readStream.schema(rows.schema)
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    _run_stream_gate(spark, build(stream, lo, nk), sink, ck,
+                     _stream_shuffle_partitions(spark, nk))
+    return spark.read.parquet(sink)
 
 
 # --------------------------------------------------------------------------
@@ -7217,47 +7258,21 @@ def scd2_stream_events(spark, sf_dir):
     batch SCD2 derivation restricted to CLOSED runs (valid_to NOT
     NULL — open runs stay in state by contract), with n_dropped_late
     asserting no row was falsely dropped as late."""
-    import shutil as _sh
-
     from ..streaming.scd2 import scd2_stream_event_time
 
     ev = _t(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("key"),
         F.col("event_type").alias("value"),
         F.col("ts").cast("timestamp").alias("ts"))
-    d = _scratch("scd2stream", sf_dir)
-    _sh.rmtree(d, ignore_errors=True)
-    src, sink, ck = d + "/src", d + "/sink", d + "/ck"
-    t0 = ev.agg(F.min("ts"), F.max("ts"),
-                F.approx_count_distinct("key")).collect()[0]
-    lo, hi, nk = t0[0], t0[1], t0[2]
-    import datetime as _dt
-
-    n_bands = 2
-    span_us = int(hi.timestamp() * 1e6) - int(lo.timestamp() * 1e6) + 1
-    width_us = -(-span_us // n_bands)
-    band = F.floor(
-        (F.unix_micros(F.col("ts")) - F.lit(int(lo.timestamp() * 1e6)))
-        / F.lit(width_us)).cast("int")
-    sent = spark.createDataFrame(
-        [("\x00flush", "x", hi + _dt.timedelta(hours=1))],
-        "key string, value string, ts timestamp")
-    banded = (ev.withColumn("_band", band)
-              .unionByName(sent.withColumn(
-                  "_band", F.lit(n_bands - 1).cast("int"))))
-    _write_band_files(
-        banded, src, n_bands,
-        F.md5(F.concat_ws("|", "key", F.col("ts").cast("string"))))
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    buckets = max(8, -(-int(nk) // 32))
-    out = scd2_stream_event_time(stream, delay="10 seconds",
-                                 state_buckets=buckets)
-    _run_stream_gate(spark, out, sink, ck,
-                     _stream_shuffle_partitions(spark, buckets * 32))
-    return (spark.read.parquet(sink)
-            .filter(F.col("key") != "\x00flush")
+    sink = _replay_gate(
+        spark, sf_dir, "scd2stream", ev, key="key", order=F.unix_micros("ts"),
+        shuffle=["key", F.col("ts").cast("string")],
+        build=lambda s, lo, nk: scd2_stream_event_time(
+            s, delay="10 seconds", state_buckets=max(8, -(-int(nk) // 32))),
+        sentinel=lambda hi: spark.range(1).select(
+            F.lit("\x00flush").alias("key"), F.lit("x").alias("value"),
+            F.timestamp_micros(F.lit(hi + 3_600_000_000)).alias("ts")))
+    return (sink.filter(F.col("key") != "\x00flush")
             .select(F.col("key").cast("long").alias("user_id"),
                     F.col("value").alias("event_type"),
                     "valid_from", "valid_to", "version",
@@ -7939,34 +7954,16 @@ def markov_stream_events(spark, sf_dir):
     probability must equal the batch `behavior.markov_transitions` on
     the same rows — transitions that STRADDLE batch boundaries are
     the point (the held last-state chains them)."""
-    import shutil as _sh
-
     from ..streaming.behavior import markov_stream
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("sequence"),
         "event_type")
-    d = _scratch("markovstream", sf_dir)
-    _sh.rmtree(d, ignore_errors=True)
-    src, sink, ck = d + "/src", d + "/sink", d + "/ck"
-    t0 = ev.agg(F.min("sequence"), F.max("sequence"),
-                F.approx_count_distinct("user_id")).collect()[0]
-    lo, hi, nk = t0[0], t0[1], t0[2]
-    # two half-span bands (optimization r14): the per-micro-batch
-    # machinery is the gate's fixed cost; 2 bands keep the cross-batch
-    # carry semantics at half the batches, same output
-    width = -(-(hi - lo + 1) // 2)
-    band = F.floor((F.col("sequence") - F.lit(lo))
-                   / F.lit(width)).cast("int")
-    _write_band_files(ev.withColumn("_band", band), src, 2,
-                      F.md5(F.concat_ws("|", "user_id", "sequence")))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    out = markov_stream(stream, key_col="user_id")
-    _run_stream_gate(spark, out, sink, ck,
-                     _stream_shuffle_partitions(spark, nk))
-    deltas = spark.read.parquet(sink)
+    deltas = _replay_gate(
+        spark, sf_dir, "markovstream", ev, key="user_id", order="sequence",
+        shuffle=["user_id", "sequence"],
+        build=lambda s, lo, nk: markov_stream(s, key_col="user_id"))
     cnt = (deltas.filter(F.col("state").isNotNull())
            .groupBy("state", "next_state")
            .agg(F.sum("n_delta").cast("long").alias("n")))
@@ -8008,31 +8005,15 @@ def retention_stream_events(spark, sf_dir):
     parity point vs the batch `cohort_retention` oracle). The week
     grid anchors at the corpus min epoch-ms (a config in the
     streaming form; derived here for oracle parity)."""
-    import shutil as _sh
-
     from ..streaming.behavior import retention_stream
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id",
         F.unix_millis(F.col("ts").cast("timestamp")).alias("sequence"))
-    d = _scratch("retstream", sf_dir)
-    _sh.rmtree(d, ignore_errors=True)
-    src, sink, ck = d + "/src", d + "/sink", d + "/ck"
-    lo, hi, nk = ev.agg(F.min("sequence"), F.max("sequence"),
-                        F.approx_count_distinct("user_id")).collect()[0]
-    # two half-span bands (optimization r14): same cross-batch
-    # crediting, half the fixed per-micro-batch cost
-    width = -(-(hi - lo + 1) // 2)
-    band = F.floor((F.col("sequence") - F.lit(lo))
-                   / F.lit(width)).cast("int")
-    _write_band_files(ev.withColumn("_band", band), src, 2,
-                      F.md5(F.concat_ws("|", "user_id", "sequence")))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    out = retention_stream(stream, anchor=int(lo))
-    _run_stream_gate(spark, out, sink, ck,
-                     _stream_shuffle_partitions(spark, nk))
-    deltas = spark.read.parquet(sink)
+    deltas = _replay_gate(
+        spark, sf_dir, "retstream", ev, key="user_id", order="sequence",
+        shuffle=["user_id", "sequence"],
+        build=lambda s, lo, nk: retention_stream(s, anchor=int(lo)))
     return (deltas.groupBy("cohort", "week_offset")
             .agg(F.sum("delta").cast("long").alias("n_users"),
                  F.max("n_dropped_late").cast("long").alias("n_dropped")))
@@ -8064,8 +8045,6 @@ def twap_stream_events(spark, sf_dir):
     `behavior.twap` oracle). Values pre-scale to integer 1e-4 units
     Spark-side (DECIMAL(18,4)·10⁴ → LONG) so the kernel is pure
     bigint — exact at any scale."""
-    import shutil as _sh
-
     from ..streaming.behavior import twap_stream
 
     ev = _t(spark, sf_dir, "events").select(
@@ -8073,24 +8052,10 @@ def twap_stream_events(spark, sf_dir):
         F.unix_millis(F.col("ts").cast("timestamp")).alias("sequence"),
         F.expr("CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS LONG)")
         .alias("v4"))
-    d = _scratch("twapstream", sf_dir)
-    _sh.rmtree(d, ignore_errors=True)
-    src, sink, ck = d + "/src", d + "/sink", d + "/ck"
-    lo, hi, nk = ev.agg(F.min("sequence"), F.max("sequence"),
-                        F.approx_count_distinct("event_type")).collect()[0]
-    # two half-span bands (optimization r14): same cross-batch
-    # interval carry, half the fixed per-micro-batch cost
-    width = -(-(hi - lo + 1) // 2)
-    band = F.floor((F.col("sequence") - F.lit(lo))
-                   / F.lit(width)).cast("int")
-    _write_band_files(ev.withColumn("_band", band), src, 2,
-                      F.md5(F.concat_ws("|", "event_type", "sequence")))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    out = twap_stream(stream)
-    _run_stream_gate(spark, out, sink, ck,
-                     _stream_shuffle_partitions(spark, nk))
-    deltas = spark.read.parquet(sink)
+    deltas = _replay_gate(
+        spark, sf_dir, "twapstream", ev, key="event_type", order="sequence",
+        shuffle=["event_type", "sequence"],
+        build=lambda s, lo, nk: twap_stream(s))
     return (deltas.groupBy("key")
             .agg(F.sum("n_delta").cast("long").alias("n_intervals"),
                  F.sum("dur_delta").cast("long").alias("total_ms"),
@@ -8132,8 +8097,6 @@ def entropy_stream_events(spark, sf_dir):
     round-6 division), so stream and batch share one float path.
     Cross-batch accumulation (counts spanning both band files) is
     the parity point vs the batch `state_entropy` oracle."""
-    import shutil as _sh
-
     from ..functions.behavior import entropy_from_counts
     from ..streaming.behavior import entropy_stream
 
@@ -8141,28 +8104,11 @@ def entropy_stream_events(spark, sf_dir):
         "user_id",
         F.unix_millis(F.col("ts").cast("timestamp")).alias("_ms"),
         "event_type")
-    d = _scratch("entstream", sf_dir)
-    _sh.rmtree(d, ignore_errors=True)
-    src, sink, ck = d + "/src", d + "/sink", d + "/ck"
-    lo, hi, nk = ev.agg(F.min("_ms"), F.max("_ms"),
-                        F.approx_count_distinct("user_id")).collect()[0]
-    # two half-span bands (optimization r14): same cross-batch count
-    # accumulation, half the fixed per-micro-batch cost
-    width = -(-(hi - lo + 1) // 2)
-    band = F.floor((F.col("_ms") - F.lit(lo))
-                   / F.lit(width)).cast("int")
-    _write_band_files(
-        ev.withColumn("_band", band).select("user_id", "event_type",
-                                            "_band"),
-        src, 2, F.md5(F.concat_ws("|", "user_id", "event_type")))
-    stream = (spark.readStream
-              .schema("user_id long, event_type string")
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    out = entropy_stream(stream)
-    _run_stream_gate(spark, out, sink, ck,
-                     _stream_shuffle_partitions(spark, nk))
-    latest = (spark.read.parquet(sink)
-              .groupBy("key")
+    sink = _replay_gate(
+        spark, sf_dir, "entstream", ev, key="user_id", order="_ms",
+        shuffle=["user_id", "event_type"],
+        build=lambda s, lo, nk: entropy_stream(s))
+    latest = (sink.groupBy("key")
               .agg(F.max_by(F.struct("states", "counts"), "version")
                    .alias("_m")))
     per = (latest.select(
@@ -8331,8 +8277,6 @@ def interval_stream_events(spark, sf_dir):
     opened in one batch stay open into later ones (the cross-batch
     frontier/heap carry is the parity point vs the batch
     `interval_coverage` oracle)."""
-    import shutil as _sh
-
     from ..streaming.interval import interval_stream
 
     ev = _t(spark, sf_dir, "events")
@@ -8340,25 +8284,10 @@ def interval_stream_events(spark, sf_dir):
     dur = (F.col("value").cast("decimal(18,4)") * 1000).cast("long")
     iv = ev.select(F.col("event_type"), ms.alias("s"),
                    (ms + dur).alias("e"))
-    d = _scratch("ivstream", sf_dir)
-    _sh.rmtree(d, ignore_errors=True)
-    src, sink, ck = d + "/src", d + "/sink", d + "/ck"
-    lo, hi, nk = iv.agg(F.min("s"), F.max("s"),
-                        F.approx_count_distinct("event_type")).collect()[0]
-    # two half-span start-ordered bands (optimization r14): intervals
-    # opened in band 0 still stay open into band 1 — same cross-batch
-    # frontier carry, half the fixed per-micro-batch cost
-    width = -(-(hi - lo + 1) // 2)
-    band = F.floor((F.col("s") - F.lit(lo))
-                   / F.lit(width)).cast("int")
-    _write_band_files(iv.withColumn("_band", band), src, 2,
-                      F.md5(F.concat_ws("|", "event_type", "s", "e")))
-    stream = (spark.readStream.schema(iv.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    out = interval_stream(stream)
-    _run_stream_gate(spark, out, sink, ck,
-                     _stream_shuffle_partitions(spark, nk))
-    deltas = spark.read.parquet(sink)
+    deltas = _replay_gate(
+        spark, sf_dir, "ivstream", iv, key="event_type", order="s",
+        shuffle=["event_type", "s", "e"],
+        build=lambda s, lo, nk: interval_stream(s))
     return (deltas.groupBy("key")
             .agg(F.sum("n_delta").cast("long").alias("n_intervals"),
                  F.sum("total_delta").cast("long").alias("total_ms"),

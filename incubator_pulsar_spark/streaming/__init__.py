@@ -5,5 +5,7 @@ Batch forms (operators/) are the oracle-checkable semantics; these are
 the same semantics expressed over unbounded input with checkpointed
 state. Everything here uses public Structured Streaming APIs only:
 file-source streams, watermarks, ``applyInPandasWithState``,
-``foreachBatch``.
+``foreachBatch``. The keyed-state operators of ``behavior``,
+``interval`` and ``scd2`` are pure per-key steps; ``keyed.keyed_fold``
+owns their ``applyInPandasWithState`` plumbing once.
 """

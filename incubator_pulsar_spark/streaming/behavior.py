@@ -1,11 +1,13 @@
 """Streaming behavioral analytics: the keyed-state twins of
 ``functions/behavior.py`` (the scd2_stream pattern — batch==stream
-parity is the contract, pytest- and gate-locked)."""
+parity is the contract, pytest- and gate-locked). Each operator is a
+pure per-key ``*_step`` over its state schema, folded by
+``keyed.keyed_fold``."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+from decimal import Decimal
+from functools import partial
 
 import pandas as pd
 
@@ -13,9 +15,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .keyed import keyed_fold
+
 MARKOV_STATE_SCHEMA = T.StructType([
     T.StructField("last_state", T.StringType()),
     T.StructField("last_order", T.LongType()),
+    T.StructField("n_dropped_late", T.LongType()),
+])
+MARKOV_OUT_SCHEMA = T.StructType([
+    T.StructField("state", T.StringType()),
+    T.StructField("next_state", T.StringType()),
+    T.StructField("n_delta", T.LongType()),
     T.StructField("n_dropped_late", T.LongType()),
 ])
 
@@ -49,57 +59,48 @@ def markov_stream(
 
     Output: (state, next_state, n_delta BIGINT, n_dropped_late BIGINT).
     """
-    out_schema = T.StructType([
-        T.StructField("state", T.StringType()),
-        T.StructField("next_state", T.StringType()),
-        T.StructField("n_delta", T.LongType()),
-        T.StructField("n_dropped_late", T.LongType()),
-    ])
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_state, last_order, n_dropped = state.get
-        else:
-            last_state, last_order, n_dropped = None, None, 0
-        rows = []
-        for pdf in pdfs:
-            for s, o in zip(pdf[state_col], pdf[order_col]):
-                rows.append((int(o), None if pd.isna(s) else str(s)))
-        rows.sort(key=lambda r: r[0])
-        deltas: dict[tuple, int] = {}
-        dropped_this_batch = False
-        for o, s in rows:
-            if last_order is not None and o < last_order:
-                n_dropped += 1
-                dropped_this_batch = True
-                continue
-            if last_state is not None:
-                k = (last_state, s)
-                deltas[k] = deltas.get(k, 0) + 1
-            last_state, last_order = s, o
-        if rows:
-            state.update((last_state, last_order, n_dropped))
-        out = [(a, b, n, n_dropped) for (a, b), n in deltas.items()]
-        if dropped_this_batch and not out:
-            # dropped-rows marker: keeps the counter observable even
-            # when the batch produced no transitions
-            out = [(None, None, 0, n_dropped)]
-        if out:
-            yield pd.DataFrame(
-                out, columns=["state", "next_state", "n_delta",
-                              "n_dropped_late"])
-
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col(order_col).cast("long").alias(order_col),
-        F.col(state_col).cast("string").alias(state_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, MARKOV_STATE_SCHEMA, "append", "NoTimeout")
+        F.col(order_col).cast("long").alias("order"),
+        F.col(state_col).cast("string").alias("state"))
+    return keyed_fold(keyed, markov_step, MARKOV_STATE_SCHEMA,
+                      MARKOV_OUT_SCHEMA)
+
+
+def markov_step(key, st, rows, ctx):
+    """``markov_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    last_state, last_order, n_dropped = st or (None, None, 0)
+    seq = sorted(((int(o), None if pd.isna(s) else str(s))
+                  for o, s in zip(rows["order"], rows["state"])),
+                 key=lambda r: r[0])
+    deltas: dict[tuple, int] = {}
+    dropped_this_batch = False
+    for o, s in seq:
+        if last_order is not None and o < last_order:
+            n_dropped += 1
+            dropped_this_batch = True
+            continue
+        if last_state is not None:
+            k = (last_state, s)
+            deltas[k] = deltas.get(k, 0) + 1
+        last_state, last_order = s, o
+    out = [(a, b, n, n_dropped) for (a, b), n in deltas.items()]
+    if dropped_this_batch and not out:
+        # dropped-rows marker: keeps the counter observable even
+        # when the batch produced no transitions
+        out = [(None, None, 0, n_dropped)]
+    return (last_state, last_order, n_dropped), out, bool(seq), False
 
 
 RETENTION_STATE_SCHEMA = T.StructType([
     T.StructField("first_period", T.IntegerType()),
     T.StructField("seen_periods", T.ArrayType(T.IntegerType())),
+    T.StructField("n_dropped_late", T.LongType()),
+])
+RETENTION_OUT_SCHEMA = T.StructType([
+    T.StructField("cohort", T.IntegerType()),
+    T.StructField("week_offset", T.IntegerType()),
+    T.StructField("delta", T.LongType()),
     T.StructField("n_dropped_late", T.LongType()),
 ])
 
@@ -136,54 +137,45 @@ def retention_stream(
     volume. Output: (cohort INT, week_offset INT, delta BIGINT,
     n_dropped_late BIGINT).
     """
-    out_schema = T.StructType([
-        T.StructField("cohort", T.IntegerType()),
-        T.StructField("week_offset", T.IntegerType()),
-        T.StructField("delta", T.LongType()),
-        T.StructField("n_dropped_late", T.LongType()),
-    ])
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            first, seen_list, n_dropped = state.get
-            seen = set(seen_list or [])
-        else:
-            first, seen, n_dropped = None, set(), 0
-        periods = []
-        for pdf in pdfs:
-            for o in pdf[order_col]:
-                periods.append(int((int(o) - anchor) // period))
-        periods.sort()
-        out = []
-        changed = False
-        for p in periods:
-            if first is None:
-                first = p
-            if p < first:
-                n_dropped += 1  # would rewrite the cohort: late, counted
-                changed = True
-                continue
-            if p not in seen:
-                seen.add(p)
-                out.append((first, p - first, 1, n_dropped))
-                changed = True
-        if changed or (periods and not state.exists):
-            state.update((first, sorted(seen), n_dropped))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["cohort", "week_offset", "delta",
-                              "n_dropped_late"])
-
     keyed = stream.select(
         F.col(user_col).cast("string").alias("key"),
-        F.col(order_col).cast("long").alias(order_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, RETENTION_STATE_SCHEMA, "append", "NoTimeout")
+        F.col(order_col).cast("long").alias("order"))
+    step = partial(retention_step, anchor=anchor, period=period)
+    return keyed_fold(keyed, step, RETENTION_STATE_SCHEMA,
+                      RETENTION_OUT_SCHEMA)
+
+
+def retention_step(key, st, rows, ctx, *, anchor, period):
+    """``retention_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    first, seen, n_dropped = st or (None, [], 0)
+    seen = set(seen or [])
+    periods = sorted(int((int(o) - anchor) // period) for o in rows["order"])
+    out = []
+    changed = False
+    for p in periods:
+        if first is None:
+            first = p
+        if p < first:
+            n_dropped += 1  # would rewrite the cohort: late, counted
+            changed = True
+            continue
+        if p not in seen:
+            seen.add(p)
+            out.append((first, p - first, 1, n_dropped))
+            changed = True
+    return (first, sorted(seen), n_dropped), out, changed, False
 
 
 TWAP_STATE_SCHEMA = T.StructType([
     T.StructField("last_order", T.LongType()),
     T.StructField("last_v4", T.LongType()),
+    T.StructField("n_dropped_late", T.LongType()),
+])
+TWAP_OUT_SCHEMA = T.StructType([
+    T.StructField("key", T.StringType()),
+    T.StructField("n_delta", T.LongType()),
+    T.StructField("dur_delta", T.LongType()),
+    T.StructField("wsum_delta", T.DecimalType(38, 4)),
     T.StructField("n_dropped_late", T.LongType()),
 ])
 
@@ -223,59 +215,47 @@ def twap_stream(
     n_delta BIGINT, dur_delta BIGINT, wsum_delta DECIMAL(38,4),
     n_dropped_late BIGINT).
     """
-    from decimal import Decimal
-
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("n_delta", T.LongType()),
-        T.StructField("dur_delta", T.LongType()),
-        T.StructField("wsum_delta", T.DecimalType(38, 4)),
-        T.StructField("n_dropped_late", T.LongType()),
-    ])
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last_o, last_v, n_dropped = state.get
-        else:
-            last_o, last_v, n_dropped = None, None, 0
-        rows = []
-        for pdf in pdfs:
-            for o, v in zip(pdf[order_col], pdf[value_col]):
-                rows.append((int(o), int(v)))
-        rows.sort()
-        n = dur = wsum = 0
-        dropped_this_batch = False
-        for o, v in rows:
-            if last_o is not None and o < last_o:
-                n_dropped += 1
-                dropped_this_batch = True
-                continue
-            if last_o is not None:
-                d = o - last_o
-                n += 1
-                dur += d
-                wsum += last_v * d  # Python bigint: exact, unbounded
-            last_o, last_v = o, v
-        if rows:
-            state.update((last_o, last_v, n_dropped))
-        if n or dropped_this_batch:
-            yield pd.DataFrame(
-                [(key[0], n, dur, Decimal(wsum).scaleb(-4), n_dropped)],
-                columns=["key", "n_delta", "dur_delta", "wsum_delta",
-                         "n_dropped_late"])
-
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col(order_col).cast("long").alias(order_col),
-        F.col(value_col).cast("long").alias(value_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, TWAP_STATE_SCHEMA, "append", "NoTimeout")
+        F.col(order_col).cast("long").alias("order"),
+        F.col(value_col).cast("long").alias("value"))
+    return keyed_fold(keyed, twap_step, TWAP_STATE_SCHEMA, TWAP_OUT_SCHEMA)
+
+
+def twap_step(key, st, rows, ctx):
+    """``twap_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    last_o, last_v, n_dropped = st or (None, None, 0)
+    seq = sorted((int(o), int(v))
+                 for o, v in zip(rows["order"], rows["value"]))
+    n = dur = wsum = 0
+    dropped_this_batch = False
+    for o, v in seq:
+        if last_o is not None and o < last_o:
+            n_dropped += 1
+            dropped_this_batch = True
+            continue
+        if last_o is not None:
+            d = o - last_o
+            n += 1
+            dur += d
+            wsum += last_v * d  # Python bigint: exact, unbounded
+        last_o, last_v = o, v
+    out = []
+    if n or dropped_this_batch:
+        out = [(key, n, dur, Decimal(wsum).scaleb(-4), n_dropped)]
+    return (last_o, last_v, n_dropped), out, bool(seq), False
 
 
 ENTROPY_STATE_SCHEMA = T.StructType([
     T.StructField("states", T.ArrayType(T.StringType())),
     T.StructField("counts", T.ArrayType(T.LongType())),
     T.StructField("version", T.LongType()),
+])
+ENTROPY_OUT_SCHEMA = T.StructType([
+    T.StructField("key", T.StringType()),
+    T.StructField("version", T.LongType()),
+    T.StructField("states", T.ArrayType(T.StringType())),
+    T.StructField("counts", T.ArrayType(T.LongType())),
 ])
 
 
@@ -306,39 +286,27 @@ def entropy_stream(
     BIGINT, states ARRAY<STRING>, counts ARRAY<BIGINT>), arrays
     co-indexed and sorted by state for deterministic emission.
     """
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("states", T.ArrayType(T.StringType())),
-        T.StructField("counts", T.ArrayType(T.LongType())),
-    ])
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            states, counts, version = state.get
-            m = dict(zip(states, counts))
-        else:
-            m, version = {}, 0
-        n_new = 0
-        for pdf in pdfs:
-            for s in pdf[state_col]:
-                s = None if pd.isna(s) else str(s)
-                m[s] = m.get(s, 0) + 1
-                n_new += 1
-        if n_new:
-            version += 1
-            # NULL state sorts first (deterministic emission order)
-            items = sorted(m.items(),
-                           key=lambda kv: (kv[0] is not None, kv[0]))
-            ks = [k for k, _ in items]
-            vs = [int(v) for _, v in items]
-            state.update((ks, vs, version))
-            yield pd.DataFrame(
-                [(key[0], version, ks, vs)],
-                columns=["key", "version", "states", "counts"])
-
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col(state_col).cast("string").alias(state_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, ENTROPY_STATE_SCHEMA, "append", "NoTimeout")
+        F.col(state_col).cast("string").alias("state"))
+    return keyed_fold(keyed, entropy_step, ENTROPY_STATE_SCHEMA,
+                      ENTROPY_OUT_SCHEMA)
+
+
+def entropy_step(key, st, rows, ctx):
+    """``entropy_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    states, counts, version = st or ([], [], 0)
+    m = dict(zip(states or [], counts or []))
+    n_new = 0
+    for s in rows["state"]:
+        s = None if pd.isna(s) else str(s)
+        m[s] = m.get(s, 0) + 1
+        n_new += 1
+    if not n_new:
+        return st, [], False, False
+    version += 1
+    # NULL state sorts first (deterministic emission order)
+    items = sorted(m.items(), key=lambda kv: (kv[0] is not None, kv[0]))
+    ks = [k for k, _ in items]
+    vs = [int(v) for _, v in items]
+    return (ks, vs, version), [(key, version, ks, vs)], True, False

@@ -1,13 +1,12 @@
 """Streaming interval analytics: the keyed-state twin of
 ``operators/interval.interval_coverage`` (the scd2/twap_stream
-pattern — batch==stream parity is the contract).
+pattern — batch==stream parity is the contract): the pure per-key
+``interval_step`` folded by ``keyed.keyed_fold``.
 """
 
 from __future__ import annotations
 
 import bisect
-from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -15,10 +14,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .keyed import keyed_fold
+
 INTERVAL_STATE_SCHEMA = T.StructType([
     T.StructField("hwm_start", T.LongType()),
     T.StructField("frontier", T.LongType()),
     T.StructField("open_ends", T.ArrayType(T.LongType())),
+    T.StructField("peak", T.LongType()),
+    T.StructField("n_dropped_late", T.LongType()),
+])
+INTERVAL_OUT_SCHEMA = T.StructType([
+    T.StructField("key", T.StringType()),
+    T.StructField("n_delta", T.LongType()),
+    T.StructField("total_delta", T.LongType()),
+    T.StructField("covered_delta", T.LongType()),
     T.StructField("peak", T.LongType()),
     T.StructField("n_dropped_late", T.LongType()),
 ])
@@ -60,63 +69,43 @@ def interval_stream(
     (key, n_delta, total_delta, covered_delta, peak, n_dropped_late —
     all BIGINT).
     """
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("n_delta", T.LongType()),
-        T.StructField("total_delta", T.LongType()),
-        T.StructField("covered_delta", T.LongType()),
-        T.StructField("peak", T.LongType()),
-        T.StructField("n_dropped_late", T.LongType()),
-    ])
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            hwm, frontier, open_ends, peak, n_dropped = state.get
-            open_ends = list(open_ends or [])
-        else:
-            hwm, frontier, open_ends, peak, n_dropped = (
-                None, None, [], 0, 0)
-        rows = []
-        for pdf in pdfs:
-            for s, e in zip(pdf[start_col], pdf[end_col]):
-                if pd.isna(s) or pd.isna(e):
-                    continue
-                s, e = int(s), int(e)
-                if e > s:
-                    rows.append((s, e))
-        rows.sort()
-        n = total = covered = 0
-        dropped_this_batch = False
-        for s, e in rows:
-            if hwm is not None and s < hwm:
-                n_dropped += 1
-                dropped_this_batch = True
-                continue
-            hwm = s
-            # prune closed intervals (end ≤ s: half-open boundary)
-            open_ends = open_ends[bisect.bisect_right(open_ends, s):]
-            bisect.insort(open_ends, e)
-            if len(open_ends) > peak:
-                peak = len(open_ends)
-            n += 1
-            total += e - s
-            if frontier is None or s >= frontier:
-                covered += e - s
-                frontier = e
-            else:
-                if e > frontier:
-                    covered += e - frontier
-                    frontier = e
-        if n or dropped_this_batch:
-            state.update((hwm, frontier, open_ends, peak, n_dropped))
-            yield pd.DataFrame(
-                [(key[0], n, total, covered, peak, n_dropped)],
-                columns=["key", "n_delta", "total_delta",
-                         "covered_delta", "peak", "n_dropped_late"])
-
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col(start_col).cast("long").alias(start_col),
-        F.col(end_col).cast("long").alias(end_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, INTERVAL_STATE_SCHEMA, "append", "NoTimeout")
+        F.col(start_col).cast("long").alias("start"),
+        F.col(end_col).cast("long").alias("end"))
+    return keyed_fold(keyed, interval_step, INTERVAL_STATE_SCHEMA,
+                      INTERVAL_OUT_SCHEMA)
+
+
+def interval_step(key, st, rows, ctx):
+    """``interval_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    hwm, frontier, open_ends, peak, n_dropped = st or (None, None, [], 0, 0)
+    open_ends = list(open_ends or [])
+    seq = sorted((int(s), int(e))
+                 for s, e in zip(rows["start"], rows["end"])
+                 if not (pd.isna(s) or pd.isna(e)) and e > s)
+    n = total = covered = 0
+    dropped_this_batch = False
+    for s, e in seq:
+        if hwm is not None and s < hwm:
+            n_dropped += 1
+            dropped_this_batch = True
+            continue
+        hwm = s
+        # prune closed intervals (end ≤ s: half-open boundary)
+        open_ends = open_ends[bisect.bisect_right(open_ends, s):]
+        bisect.insort(open_ends, e)
+        if len(open_ends) > peak:
+            peak = len(open_ends)
+        n += 1
+        total += e - s
+        if frontier is None or s >= frontier:
+            covered += e - s
+            frontier = e
+        elif e > frontier:
+            covered += e - frontier
+            frontier = e
+    if not (n or dropped_this_batch):
+        return st, [], False, False
+    return ((hwm, frontier, open_ends, peak, n_dropped),
+            [(key, n, total, covered, peak, n_dropped)], True, False)

@@ -1,10 +1,8 @@
 """Streaming SCD2: the change-history operator as a keyed stateful
-stream (the streaming twin of operators/compaction.scd2_history)."""
+stream (the streaming twin of operators/compaction.scd2_history). Both
+forms are pure per-key steps folded by ``keyed.keyed_fold``."""
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -12,11 +10,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .keyed import keyed_fold
+
 SCD2_STATE_SCHEMA = T.StructType([
     T.StructField("cur_value", T.StringType()),
     T.StructField("cur_from", T.LongType()),
     T.StructField("version", T.IntegerType()),
-    T.StructField("has_null_value", T.BooleanType()),
+    T.StructField("n_dropped_late", T.LongType()),
+])
+SCD2_OUT_SCHEMA = T.StructType([
+    T.StructField("key", T.StringType()),
+    T.StructField("value", T.StringType()),
+    T.StructField("valid_from", T.LongType()),
+    T.StructField("valid_to", T.LongType()),
+    T.StructField("version", T.IntegerType()),
     T.StructField("n_dropped_late", T.LongType()),
 ])
 
@@ -55,84 +62,43 @@ def scd2_stream(
     pattern from ``streaming/late.py`` folded into the output);
     consumers that want pure SCD2 rows drop the column.
     """
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("value", T.StringType()),
-        T.StructField("valid_from", T.LongType()),
-        T.StructField("valid_to", T.LongType()),
-        T.StructField("version", T.IntegerType()),
-        T.StructField("n_dropped_late", T.LongType()),
-    ])
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_value, cur_from, version, has_null, n_dropped = state.get
-            if has_null:
-                cur_value = None
-        else:
-            cur_value, cur_from, version, n_dropped = None, None, 0, 0
-        rows = []
-        for pdf in pdfs:
-            for v, o in zip(pdf[value_col], pdf[order_col]):
-                rows.append((int(o), None if pd.isna(v) else str(v)))
-        rows.sort(key=lambda r: r[0])
-        out = []
-        for o, v in rows:
-            if version == 0:
-                cur_value, cur_from, version = v, o, 1
-                continue
-            if o < cur_from:
-                n_dropped += 1  # older than the open run: drop, counted
-                continue
-            if v != cur_value:
-                out.append((key[0], cur_value, cur_from, o, version,
-                            n_dropped))
-                cur_value, cur_from, version = v, o, version + 1
-        if version > 0:
-            state.update((cur_value if cur_value is not None else None,
-                          cur_from, version, cur_value is None,
-                          n_dropped))
-            # the (possibly extended) open run — valid_to NULL
-            out.append((key[0], cur_value, cur_from, None, version,
-                        n_dropped))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["key", "value", "valid_from", "valid_to",
-                              "version", "n_dropped_late"])
-
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias(value_col),
-        F.col(order_col).cast("long").alias(order_col))
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, SCD2_STATE_SCHEMA, "append", "NoTimeout")
+        F.col(value_col).cast("string").alias("value"),
+        F.col(order_col).cast("long").alias("order"))
+    return keyed_fold(keyed, scd2_step, SCD2_STATE_SCHEMA, SCD2_OUT_SCHEMA)
 
 
-SCD2_ET_STATE_SCHEMA = T.StructType([
-    T.StructField("cur_value", T.StringType()),
-    T.StructField("cur_from", T.LongType()),
-    T.StructField("version", T.IntegerType()),
-    T.StructField("has_null_value", T.BooleanType()),
-    T.StructField("n_dropped_late", T.LongType()),
+def _value_rows(rows) -> list[tuple]:
+    """A step's (order, value) pairs; a NULL value is a run of its own."""
+    return [(int(o), None if pd.isna(v) else str(v))
+            for v, o in zip(rows["value"], rows["order"])]
+
+
+def scd2_step(key, st, rows, ctx):
+    """``scd2_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    cur_value, cur_from, version, n_dropped = st or (None, None, 0, 0)
+    out = []
+    for o, v in sorted(_value_rows(rows), key=lambda r: r[0]):
+        if version == 0:
+            cur_value, cur_from, version = v, o, 1
+            continue
+        if o < cur_from:
+            n_dropped += 1  # older than the open run: drop, counted
+            continue
+        if v != cur_value:
+            out.append((key, cur_value, cur_from, o, version, n_dropped))
+            cur_value, cur_from, version = v, o, version + 1
+    if version == 0:
+        return None, out, False, False
+    # the (possibly extended) open run — valid_to NULL
+    out.append((key, cur_value, cur_from, None, version, n_dropped))
+    return (cur_value, cur_from, version, n_dropped), out, True, False
+
+
+SCD2_ET_STATE_SCHEMA = T.StructType(SCD2_STATE_SCHEMA.fields + [
     T.StructField("buf_order", T.ArrayType(T.LongType())),
     T.StructField("buf_value", T.ArrayType(T.StringType())),
-    T.StructField("buf_null", T.ArrayType(T.BooleanType())),
-])
-
-# bucketed form: one state row holds EVERY key of the bucket — the
-# per-key fields above become co-indexed arrays, and the row buffer
-# flattens with a parallel key column
-SCD2_ET_BUCKET_STATE_SCHEMA = T.StructType([
-    T.StructField("ks", T.ArrayType(T.StringType())),
-    T.StructField("cur_value", T.ArrayType(T.StringType())),
-    T.StructField("cur_from", T.ArrayType(T.LongType())),
-    T.StructField("version", T.ArrayType(T.IntegerType())),
-    T.StructField("has_null_value", T.ArrayType(T.BooleanType())),
-    T.StructField("n_dropped_late", T.ArrayType(T.LongType())),
-    T.StructField("buf_key", T.ArrayType(T.StringType())),
-    T.StructField("buf_order", T.ArrayType(T.LongType())),
-    T.StructField("buf_value", T.ArrayType(T.StringType())),
-    T.StructField("buf_null", T.ArrayType(T.BooleanType())),
 ])
 
 
@@ -186,198 +152,72 @@ def scd2_stream_event_time(
     at the stream's current tail are impossible (runs close in
     order), so downstream can assert contiguity.
 
-    ``state_buckets=B`` packs keys into B composite state groups
-    (group key = ``pmod(xxhash64(key), B)``; per-key state and
-    buffers become co-indexed arrays inside the bucket's one state
-    row). Each key still folds with EXACTLY the per-key logic — the
-    output rows are identical (pytest-parity-locked) — but a
-    micro-batch touches B state rows and makes B per-group Arrow
-    invocations instead of |keys| (measured r14: the per-group
-    machinery was ~0.9 s of every ~1.8 s micro-batch at 1,500 keys
-    while the Python fold itself was negligible — a trivial-fn floor
-    probe ran at the full operator's wall time). Size B so buckets
-    hold tens of keys (keys/32 is the gate's choice); at cluster
-    scale keep B ≥ the stateful shuffle width so every state
-    partition stays busy. Late-row accounting is per KEY either way
-    (``n_dropped_late`` follows the key, not the bucket).
+    ``state_buckets=B`` is ``keyed_fold``'s bucketed grouping: keys
+    pack into B composite state rows (group key =
+    ``pmod(xxhash64(key), B)``) and the output rows are identical to
+    the per-key form (pytest-parity-locked), but a micro-batch touches
+    B state rows and makes B per-group Arrow invocations instead of
+    |keys| (measured r14: the per-group machinery was ~0.9 s of every
+    ~1.8 s micro-batch at 1,500 keys while the Python fold itself was
+    negligible — a trivial-fn floor probe ran at the full operator's
+    wall time). Size B so buckets hold tens of keys (keys/32 is the
+    gate's choice); at cluster scale keep B ≥ the stateful shuffle
+    width so every state partition stays busy. Late-row accounting is
+    per KEY either way (``n_dropped_late`` follows the key, not the
+    bucket).
     """
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("value", T.StringType()),
-        T.StructField("valid_from", T.LongType()),
-        T.StructField("valid_to", T.LongType()),
-        T.StructField("version", T.IntegerType()),
-        T.StructField("n_dropped_late", T.LongType()),
-    ])
-
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (cur_value, cur_from, version, has_null, n_dropped,
-             buf_order, buf_value, buf_null) = state.get
-            if has_null:
-                cur_value = None
-            buf = [(int(o), None if isnull else str(v))
-                   for o, v, isnull in zip(buf_order or [], buf_value or [],
-                                           buf_null or [])]
-        else:
-            cur_value, cur_from, version, n_dropped = None, None, 0, 0
-            buf = []
-        frontier = cur_from if version > 0 else None
-        n_buf0, n_drop0 = len(buf), n_dropped
-        for pdf in pdfs:
-            for v, o in zip(pdf[value_col], pdf["_order_us"]):
-                o = int(o)
-                if frontier is not None and o < frontier:
-                    n_dropped += 1  # below the finalized frontier
-                    continue
-                buf.append((o, None if pd.isna(v) else str(v)))
-        # watermark is millisecond-precision; event times are micros.
-        # Fold strictly-below-watermark rows only: a future row can
-        # arrive AT the watermark, never below it.
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        buf.sort(key=lambda r: r[0])
-        out = []
-        keep = []
-        for o, v in buf:
-            if o >= wm_us:
-                keep.append((o, v))
-                continue
-            if version == 0:
-                cur_value, cur_from, version = v, o, 1
-                continue
-            if v != cur_value:
-                # CLOSED run: valid_to = o < wm — final, emit once
-                out.append((key[0], cur_value, cur_from, o, version,
-                            n_dropped))
-                cur_value, cur_from, version = v, o, version + 1
-        # a TIMER invocation whose watermark moved nothing (no new
-        # rows, no folds, no drops) must not rewrite the array state —
-        # at scale every no-data batch re-invokes every buffered key,
-        # and the state-store writes dominate (measured on the sf0.1
-        # gate); it only re-arms its timer
-        changed = (len(buf) != n_buf0 or n_dropped != n_drop0
-                   or bool(out) or len(keep) != len(buf))
-        if changed and (version > 0 or keep or n_dropped):
-            state.update((
-                cur_value if cur_value is not None else None,
-                cur_from, version, cur_value is None, n_dropped,
-                [o for o, _ in keep], [v for _, v in keep],
-                [v is None for _, v in keep]))
-        if keep:
-            # re-check when the watermark moves (min granularity 1s
-            # above it — Spark demands timeout > watermark); a fired
-            # timer is consumed, so EVERY invocation with a live
-            # buffer must re-arm even when nothing else changed (state
-            # exists here: an unchanged buffer was written previously)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs()
-                                      + 1000)
-        if out:
-            yield pd.DataFrame(
-                out, columns=["key", "value", "valid_from", "valid_to",
-                              "version", "n_dropped_late"])
-
-    def bucket_fn(key: Any, pdfs: Iterator[pd.DataFrame],
-                  state) -> Iterator[pd.DataFrame]:
-        # st[k] = [cur_value, cur_from, version, n_dropped]
-        st: dict[str, list] = {}
-        bufs: dict[str, list] = {}
-        if state.exists:
-            (ks, cvs, cfs, vers, hns, nds,
-             bks, bos, bvs, bns) = state.get
-            for k, cv, cf, ve, hn, nd in zip(
-                    ks or [], cvs or [], cfs or [], vers or [],
-                    hns or [], nds or []):
-                st[k] = [None if hn else cv, cf, ve, nd]
-            for k, o, v, isnull in zip(bks or [], bos or [], bvs or [],
-                                       bns or []):
-                bufs.setdefault(k, []).append(
-                    (int(o), None if isnull else str(v)))
-        n_buf0 = sum(len(b) for b in bufs.values())
-        n_drop0 = sum(s[3] for s in st.values())
-        for pdf in pdfs:
-            for k, v, o in zip(pdf["key"], pdf[value_col],
-                               pdf["_order_us"]):
-                k, o = str(k), int(o)
-                s = st.get(k)
-                if s is not None and s[2] > 0 and o < s[1]:
-                    s[3] += 1  # below the key's finalized frontier
-                    continue
-                bufs.setdefault(k, []).append(
-                    (o, None if pd.isna(v) else str(v)))
-        n_buf_in = sum(len(b) for b in bufs.values())
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        out = []
-        keep_n = 0
-        for k in list(bufs):
-            buf = bufs[k]
-            buf.sort(key=lambda r: r[0])  # stable — the per-key rule
-            s = st.setdefault(k, [None, None, 0, 0])
-            cur_value, cur_from, version, n_dropped = s
-            keep = []
-            for o, v in buf:
-                if o >= wm_us:
-                    keep.append((o, v))
-                    continue
-                if version == 0:
-                    cur_value, cur_from, version = v, o, 1
-                    continue
-                if v != cur_value:
-                    out.append((k, cur_value, cur_from, o, version,
-                                n_dropped))
-                    cur_value, cur_from, version = v, o, version + 1
-            st[k] = [cur_value, cur_from, version, n_dropped]
-            if keep:
-                bufs[k] = keep
-                keep_n += len(keep)
-            else:
-                del bufs[k]
-        n_drop1 = sum(s[3] for s in st.values())
-        # mirror the per-key rule: new rows arrived, rows folded out of
-        # the buffer (even into an unclosed run), drops counted, or
-        # runs closed — any of these rewrites the bucket's state row
-        changed = (n_buf_in != n_buf0 or keep_n != n_buf_in
-                   or n_drop1 != n_drop0 or bool(out))
-        live = {k for k, s in st.items()
-                if s[2] > 0 or s[3] or k in bufs} | set(bufs)
-        if changed and live:
-            ks = sorted(live)
-            flat_k, flat_o, flat_v, flat_n = [], [], [], []
-            for k in ks:
-                for o, v in bufs.get(k, []):
-                    flat_k.append(k)
-                    flat_o.append(o)
-                    flat_v.append(v)
-                    flat_n.append(v is None)
-            state.update((
-                ks,
-                [st[k][0] for k in ks],
-                [st[k][1] for k in ks],
-                [st[k][2] for k in ks],
-                [st[k][0] is None for k in ks],
-                [st[k][3] for k in ks],
-                flat_k, flat_o, flat_v, flat_n))
-        if bufs:
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs()
-                                      + 1000)
-        if out:
-            yield pd.DataFrame(
-                out, columns=["key", "value", "valid_from", "valid_to",
-                              "version", "n_dropped_late"])
-
     keyed = (stream
              .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
              .withWatermark(ts_col, delay)
              .select(F.col(key_col).cast("string").alias("key"),
-                     F.col(value_col).cast("string").alias(value_col),
+                     F.col(value_col).cast("string").alias("value"),
                      F.col(ts_col),
-                     F.unix_micros(F.col(ts_col)).alias("_order_us")))
-    if state_buckets is None:
-        return keyed.groupBy("key").applyInPandasWithState(
-            fn, out_schema, SCD2_ET_STATE_SCHEMA, "append",
-            "EventTimeTimeout")
-    b = int(state_buckets)
-    bucketed = keyed.withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(b)).cast("int"))
-    return bucketed.groupBy("_bkt").applyInPandasWithState(
-        bucket_fn, out_schema, SCD2_ET_BUCKET_STATE_SCHEMA, "append",
-        "EventTimeTimeout")
+                     F.unix_micros(F.col(ts_col)).alias("order")))
+    return keyed_fold(keyed, scd2_event_time_step, SCD2_ET_STATE_SCHEMA,
+                      SCD2_OUT_SCHEMA, timeout="EventTimeTimeout",
+                      buckets=state_buckets)
+
+
+def scd2_event_time_step(key, st, rows, ctx):
+    """``scd2_stream_event_time``'s per-key fold (the ``keyed_fold``
+    step): buffer the new rows, fold every buffered row strictly below
+    the watermark through the run logic, keep the rest."""
+    cur_value, cur_from, version, n_dropped, buf_order, buf_value = (
+        st or (None, None, 0, 0, [], []))
+    buf = list(zip(buf_order or [], buf_value or []))
+    frontier = cur_from if version > 0 else None
+    n_buf0, n_drop0 = len(buf), n_dropped
+    for o, v in _value_rows(rows):
+        if frontier is not None and o < frontier:
+            n_dropped += 1  # below the finalized frontier
+            continue
+        buf.append((o, v))
+    # watermark is millisecond-precision; event times are micros.
+    # Fold strictly-below-watermark rows only: a future row can
+    # arrive AT the watermark, never below it.
+    wm_us = ctx.watermark_ms * 1000
+    buf.sort(key=lambda r: r[0])
+    out = []
+    keep = []
+    for o, v in buf:
+        if o >= wm_us:
+            keep.append((o, v))
+            continue
+        if version == 0:
+            cur_value, cur_from, version = v, o, 1
+            continue
+        if v != cur_value:
+            # CLOSED run: valid_to = o < wm — final, emit once
+            out.append((key, cur_value, cur_from, o, version, n_dropped))
+            cur_value, cur_from, version = v, o, version + 1
+    # a TIMER invocation whose watermark moved nothing (no new rows,
+    # no folds, no drops) must not rewrite the array state — at scale
+    # every no-data batch re-invokes every buffered key, and the
+    # state-store writes dominate (measured on the sf0.1 gate)
+    changed = (len(buf) != n_buf0 or n_dropped != n_drop0
+               or bool(out) or len(keep) != len(buf))
+    held = None
+    if version > 0 or keep or n_dropped:
+        held = (cur_value, cur_from, version, n_dropped,
+                [o for o, _ in keep], [v for _, v in keep])
+    return held, out, changed, bool(keep)

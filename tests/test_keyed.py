@@ -1,0 +1,319 @@
+"""The keyed-state fold (``streaming/keyed.py``) and its seven steps.
+
+The step tests are Spark-free: each step is a pure per-key function,
+so carries, late-row accounting and NULL runs are checked by calling
+it batch by batch with the state it returned. The parity test runs
+every step through ``keyed_fold`` per key and in 1 and 2 buckets.
+"""
+
+from __future__ import annotations
+
+from decimal import Decimal
+from functools import partial
+
+import pandas as pd
+import pytest
+
+from pyspark.sql import functions as F
+
+from incubator_pulsar_spark.streaming import behavior, interval, scd2
+from incubator_pulsar_spark.streaming.keyed import FoldContext, keyed_fold
+
+NO_WM = FoldContext(None)
+
+
+def _rows(**cols):
+    return pd.DataFrame(cols)
+
+
+def _replay(step, key, batches, ctx=NO_WM):
+    """Fold ``batches`` (frames) through ``step`` the way keyed_fold
+    does: state is written only on a reported change."""
+    st, outs = None, []
+    for rows in batches:
+        new, out, changed, _ = step(key, st, rows, ctx)
+        if changed and new is not None:
+            st = new
+        outs.append(out)
+    return st, outs
+
+
+class TestMarkovStep:
+    def test_carry_across_batches(self):
+        st, (o1, o2) = _replay(behavior.markov_step, "u", [
+            _rows(order=[20, 10], state=["b", "a"]),
+            _rows(order=[30], state=["a"])])
+        assert o1 == [("a", "b", 1, 0)]
+        assert o2 == [("b", "a", 1, 0)]  # straddles the boundary
+        assert st == ("a", 30, 0)
+
+    def test_late_row_dropped_counted_with_marker(self):
+        st, (_, o2) = _replay(behavior.markov_step, "u", [
+            _rows(order=[100, 200], state=["a", "b"]),
+            _rows(order=[150], state=["zzz"])])
+        assert o2 == [(None, None, 0, 1)]  # the batch only dropped
+        assert st == ("b", 200, 1)
+
+    def test_null_run_across_batches_matches_one_batch(self):
+        orders, states = [1, 2, 3, 4], ["a", None, None, "b"]
+        _, split = _replay(behavior.markov_step, "u", [
+            _rows(order=orders[:2], state=states[:2]),
+            _rows(order=orders[2:], state=states[2:])])
+        _, (whole,) = _replay(behavior.markov_step, "u", [
+            _rows(order=orders, state=states)])
+        assert sorted(split[0] + split[1], key=repr) == sorted(whole,
+                                                               key=repr)
+
+
+class TestRetentionStep:
+    step = staticmethod(partial(behavior.retention_step, anchor=0,
+                                period=10))
+
+    def test_carry_across_batches(self):
+        st, (o1, o2) = _replay(self.step, "u", [
+            _rows(order=[0, 5]), _rows(order=[12, 31])])
+        assert o1 == [(0, 0, 1, 0)]
+        assert o2 == [(0, 1, 1, 0), (0, 3, 1, 0)]
+        assert st == (0, [0, 1, 3], 0)
+
+    def test_cohort_rewrite_dropped_and_counted(self):
+        st, (_, o2, o3) = _replay(self.step, "u", [
+            _rows(order=[20]), _rows(order=[3]), _rows(order=[35])])
+        assert o2 == []  # no marker row: the count rides later rows
+        assert st[2] == 1 and o3 == [(2, 1, 1, 1)]
+
+
+class TestTwapStep:
+    def test_carry_across_batches(self):
+        st, (o1, o2) = _replay(behavior.twap_step, "a", [
+            _rows(order=[1000, 2000], value=[20000, 30000]),
+            _rows(order=[4000], value=[50000])])
+        assert o1 == [("a", 1, 1000, Decimal("2000.0000"), 0)]
+        assert o2 == [("a", 1, 2000, Decimal("6000.0000"), 0)]
+        assert st == (4000, 50000, 0)
+
+    def test_late_row_dropped_counted_with_marker(self):
+        st, (_, o2) = _replay(behavior.twap_step, "a", [
+            _rows(order=[1000, 2000], value=[1, 2]),
+            _rows(order=[1500], value=[9])])
+        assert o2 == [("a", 0, 0, Decimal(0), 1)]
+        assert st == (2000, 2, 1)
+
+
+class TestEntropyStep:
+    def test_carry_across_batches(self):
+        st, (o1, o2) = _replay(behavior.entropy_step, "u", [
+            _rows(state=["x", "y"]), _rows(state=["x", None])])
+        assert o1 == [("u", 1, ["x", "y"], [1, 1])]
+        assert o2 == [("u", 2, [None, "x", "y"], [1, 2, 1])]
+        assert st == ([None, "x", "y"], [1, 2, 1], 2)
+
+    def test_no_rows_changes_nothing(self):
+        st = (["x"], [1], 1)
+        assert behavior.entropy_step("u", st, _rows(state=[]), NO_WM) == (
+            st, [], False, False)
+
+
+class TestIntervalStep:
+    def test_open_interval_carries_across_batches(self):
+        st, (o1, o2) = _replay(interval.interval_step, "g", [
+            _rows(start=[0], end=[100]), _rows(start=[50], end=[60])])
+        assert o1 == [("g", 1, 100, 100, 1, 0)]
+        assert o2 == [("g", 1, 10, 0, 2, 0)]  # inside the union
+        assert st == (50, 100, [60, 100], 2, 0)
+
+    def test_late_start_dropped_counted_with_marker(self):
+        st, (_, o2) = _replay(interval.interval_step, "h", [
+            _rows(start=[10], end=[14]), _rows(start=[2], end=[3])])
+        assert o2 == [("h", 0, 0, 0, 1, 1)]
+        assert st[4] == 1
+
+
+class TestScd2Step:
+    def test_carry_closes_run_in_later_batch(self):
+        st, (o1, o2) = _replay(scd2.scd2_step, "k", [
+            _rows(value=["a", "a"], order=[1, 2]),
+            _rows(value=["b"], order=[3])])
+        assert o1 == [("k", "a", 1, None, 1, 0)]
+        assert o2 == [("k", "a", 1, 3, 1, 0), ("k", "b", 3, None, 2, 0)]
+        assert st == ("b", 3, 2, 0)
+
+    def test_late_row_dropped_and_counted(self):
+        st, (_, o2) = _replay(scd2.scd2_step, "k", [
+            _rows(value=["a", "b"], order=[100, 200]),
+            _rows(value=["zzz", "c"], order=[150, 300])])
+        assert o2 == [("k", "b", 200, 300, 2, 1), ("k", "c", 300, None, 3, 1)]
+        assert st == ("c", 300, 3, 1)
+
+    def test_null_run_across_batches(self):
+        # NULL-after-NULL across the boundary is no change: the NULL
+        # run opened in batch 1 is closed by 'b' in batch 2
+        st, (o1, o2) = _replay(scd2.scd2_step, "k", [
+            _rows(value=["a", None], order=[1, 2]),
+            _rows(value=[None, "b"], order=[3, 4])])
+        assert o1 == [("k", "a", 1, 2, 1, 0), ("k", None, 2, None, 2, 0)]
+        assert o2 == [("k", None, 2, 4, 2, 0), ("k", "b", 4, None, 3, 0)]
+        assert st == ("b", 4, 3, 0)
+
+
+class TestScd2EventTimeStep:
+    """Orders are event-time micros; the watermark is in ms."""
+
+    step = staticmethod(scd2.scd2_event_time_step)
+
+    def test_buffer_carries_until_watermark_passes(self):
+        st, out, changed, rearm = self.step(
+            "k", None, _rows(value=["b", "a"], order=[40_000, 10_000]),
+            FoldContext(0))
+        assert (out, changed, rearm) == ([], True, True)
+        assert st == (None, None, 0, 0, [10_000, 40_000], ["a", "b"])
+        # a timer whose watermark moved nothing only re-arms
+        empty = _rows(value=[], order=[])
+        assert self.step("k", st, empty, FoldContext(5)) == (
+            st, [], False, True)
+        st, out, changed, rearm = self.step("k", st, empty, FoldContext(50))
+        assert out == [("k", "a", 10_000, 40_000, 1, 0)]
+        assert (changed, rearm) == (True, False)
+        assert st == ("b", 40_000, 2, 0, [], [])
+
+    def test_row_below_frontier_dropped_and_counted(self):
+        st, out, changed, rearm = self.step(
+            "k", ("b", 40_000, 2, 0, [], []),
+            _rows(value=["z", "c"], order=[11_000, 80_000]),
+            FoldContext(100))
+        assert out == [("k", "b", 40_000, 80_000, 2, 1)]
+        assert st == ("c", 80_000, 3, 1, [], [])
+        assert changed and not rearm
+
+    def test_null_run_across_batches(self):
+        st, *_ = self.step(
+            "k", None, _rows(value=["a", None], order=[1_000, 2_000]),
+            FoldContext(3))
+        assert st == (None, 2_000, 2, 0, [], [])  # the open run is NULL
+        st, out, *_ = self.step(
+            "k", st, _rows(value=[None, "b"], order=[3_000, 4_000]),
+            FoldContext(5))
+        assert out == [("k", None, 2_000, 4_000, 2, 0)]
+        assert st == ("b", 4_000, 3, 0, [], [])
+
+
+# ---------------------------------------------------------------- parity
+
+_SRC = "key string, order long, value string"
+
+
+def _cases():
+    """name -> (prep(source) -> keyed, step, state schema, out schema,
+    timeout); built lazily because Columns need a live session."""
+    def et(df):
+        ts = F.timestamp_micros(F.col("order") * 1_000_000)
+        return (df.withColumn("ts", ts).withWatermark("ts", "10 seconds")
+                .select("key", "value", "ts",
+                        F.unix_micros("ts").alias("order")))
+
+    return {
+        "markov": (lambda df: df.select(
+            "key", "order", F.col("value").alias("state")),
+            behavior.markov_step, behavior.MARKOV_STATE_SCHEMA,
+            behavior.MARKOV_OUT_SCHEMA, "NoTimeout"),
+        "retention": (lambda df: df.select("key", "order"),
+                      partial(behavior.retention_step, anchor=0,
+                              period=10),
+                      behavior.RETENTION_STATE_SCHEMA,
+                      behavior.RETENTION_OUT_SCHEMA, "NoTimeout"),
+        "twap": (lambda df: df.select(
+            "key", "order", (F.col("order") * 7 % 13).alias("value")),
+            behavior.twap_step, behavior.TWAP_STATE_SCHEMA,
+            behavior.TWAP_OUT_SCHEMA, "NoTimeout"),
+        "entropy": (lambda df: df.select(
+            "key", F.col("value").alias("state")),
+            behavior.entropy_step, behavior.ENTROPY_STATE_SCHEMA,
+            behavior.ENTROPY_OUT_SCHEMA, "NoTimeout"),
+        "interval": (lambda df: df.select(
+            "key", F.col("order").alias("start"),
+            (F.col("order") + 5).alias("end")),
+            interval.interval_step, interval.INTERVAL_STATE_SCHEMA,
+            interval.INTERVAL_OUT_SCHEMA, "NoTimeout"),
+        "scd2": (lambda df: df, scd2.scd2_step, scd2.SCD2_STATE_SCHEMA,
+                 scd2.SCD2_OUT_SCHEMA, "NoTimeout"),
+        "scd2_event_time": (et, scd2.scd2_event_time_step,
+                            scd2.SCD2_ET_STATE_SCHEMA,
+                            scd2.SCD2_OUT_SCHEMA, "EventTimeTimeout"),
+    }
+
+
+class TestBucketParity:
+    """``buckets=None``, ``1`` and ``2`` give identical output rows for
+    every step: two disordered batches over six keys, a NULL value run
+    straddling the boundary, a late row for k0 in batch 2 and an
+    in-band sentinel that lets the event-time form flush."""
+
+    @staticmethod
+    def _source(spark, tmp_path):
+        import time
+
+        b1 = ([(f"k{i}", 40 + i, "b") for i in range(6)]
+              + [(f"k{i}", 10 + i, "a") for i in range(6)]
+              + [("k1", 25, None)])
+        b2 = ([(f"k{i}", 80 + i, "c") for i in range(6)]
+              + [("k1", 30, None), ("k0", 5, "z"), ("\x00flush", 600, "x")])
+        src = str(tmp_path / "src")
+        for rows in (b1, b2):
+            spark.createDataFrame(rows, _SRC).coalesce(1) \
+                .write.mode("append").parquet(src)
+            time.sleep(0.05)  # distinct mtimes -> deterministic order
+        return src
+
+    @staticmethod
+    def _run(spark, src, tmp_path, case, buckets):
+        prep, step, state_schema, out_schema, timeout = case
+        stream = (spark.readStream.schema(_SRC)
+                  .option("maxFilesPerTrigger", "1").parquet(src))
+        out = keyed_fold(prep(stream), step, state_schema, out_schema,
+                         timeout=timeout, buckets=buckets)
+        tag = f"b{buckets}"
+        sink = str(tmp_path / f"sink_{tag}")
+        q = (out.writeStream.format("parquet").option("path", sink)
+             .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
+             .trigger(availableNow=True).start())
+        assert q.awaitTermination(120)
+        return sorted((tuple(tuple(v) if isinstance(v, list) else v
+                             for v in r)
+                       for r in spark.read.parquet(sink).collect()),
+                      key=repr)
+
+    @pytest.mark.parametrize("name", [
+        "markov", "retention", "twap", "entropy", "interval", "scd2",
+        "scd2_event_time"])
+    def test_buckets_match_per_key(self, spark, tmp_path, name):
+        case = _cases()[name]
+        src = self._source(spark, tmp_path)
+        per_key = self._run(spark, src, tmp_path, case, None)
+        assert per_key  # non-trivial fixture
+        fields = case[3].fieldNames()
+        # k0's late row is counted by the step; in the event-time form
+        # Spark's watermark filter drops it before the fold instead
+        if "n_dropped_late" in fields and name != "scd2_event_time":
+            late = fields.index("n_dropped_late")
+            assert any(r[late] for r in per_key)
+        for b in (1, 2):
+            assert self._run(spark, src, tmp_path, case, b) == per_key, b
+
+
+def test_stream_gate_raises_on_drain_timeout(spark, tmp_path, monkeypatch):
+    """A gate drain that outlives the timeout must stop its query and
+    raise, never hand back a partial sink to read."""
+    from incubator_pulsar_spark.plans import queries
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame([("k", 1, "a")], _SRC).write.parquet(src)
+    out = behavior.markov_stream(
+        spark.readStream.schema(_SRC).parquet(src), key_col="key",
+        order_col="order", state_col="value")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(queries, "STREAM_GATE_TIMEOUT_S", 0.001)
+    with pytest.raises(RuntimeError, match="did not drain"):
+        queries._run_stream_gate(spark, out, str(tmp_path / "sink"),
+                                 str(tmp_path / "ck"), 2)
+    assert not spark.streams.active
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev

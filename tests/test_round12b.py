@@ -95,7 +95,7 @@ class TestStreamingScd2:
              .outputMode("append")
              .option("checkpointLocation", str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         got = sorted(map(tuple, spark.sql(
             "select key, value, valid_from, valid_to, version "
             "from scd2_par").collect()))
@@ -124,7 +124,7 @@ class TestStreamingScd2:
             q = (out.writeStream.format("parquet").option("path", rel)
                  .option("checkpointLocation", ck)
                  .trigger(availableNow=True).start())
-            q.awaitTermination(120)
+            assert q.awaitTermination(120)
             rows = spark.read.parquet(rel).collect()
             best = {}
             for r in rows:

@@ -182,7 +182,7 @@ class TestTickerTypeSniff:
         q = (out.writeStream.format("parquet").option("path", path)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         assert q.exception() is None
 
     def _seed(self, spark, tmp_path, name, **kw):
@@ -281,7 +281,7 @@ class TestEventTimeScd2:
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         got = sorted(
             (r.key, r.value, r.valid_from, r.valid_to, r.version,
              r.n_dropped_late)
@@ -323,7 +323,7 @@ class TestEventTimeScd2:
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = [r for r in spark.read.parquet(sink).collect()
                 if r.key != "\x00flush"]
         keys = [(r.key, r.version) for r in rows]
@@ -356,7 +356,7 @@ class TestEventTimeScd2:
              .outputMode("append")
              .option("checkpointLocation", str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = spark.sql("select * from scd2_late13").collect()
         # the late 'zzz' row was dropped (no zzz run) and counted
         assert not any(r.value == "zzz" for r in rows)
@@ -709,7 +709,7 @@ class TestMarkovStream:
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         from pyspark.sql import functions as SF
 
         got = {(r.state, r.next_state): r.n for r in
@@ -754,7 +754,7 @@ class TestMarkovStream:
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = spark.read.parquet(sink).collect()
         assert not any(r.state == "zzz" or r.next_state == "zzz"
                        for r in rows)
@@ -833,7 +833,7 @@ class TestRetentionStream:
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         from pyspark.sql import functions as SF
 
         got = {(r.cohort, r.week_offset): r.n for r in
@@ -876,7 +876,7 @@ class TestRetentionStream:
         q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         rows = spark.read.parquet(sink).collect()
         assert sorted((r.cohort, r.week_offset) for r in rows) == \
             [(2, 0), (2, 1)]

@@ -16,7 +16,7 @@ def _run_available_now(out, tmp_path, tag):
     q = (out.writeStream.format("parquet").option("path", sink)
          .option("checkpointLocation", ck)
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     return sink
 
 

@@ -121,82 +121,6 @@ def test_ln_snap_is_boundary_safe_for_small_degrees():
     assert worst > 1e-4
 
 
-class TestScd2BucketedState:
-    """state_buckets packs keys into composite state rows; the output
-    must be row-identical to the per-key form on the same replay."""
-
-    def _write_batch(self, spark, src, rows):
-        import time
-
-        df = spark.createDataFrame(
-            rows, "key string, value string, ts timestamp")
-        df.coalesce(1).write.mode("append").parquet(src)
-        time.sleep(0.05)  # distinct mtimes -> deterministic batch order
-
-    def _run(self, spark, src, tmp_path, tag, **kw):
-        from incubator_pulsar_spark.streaming.scd2 import (
-            scd2_stream_event_time,
-        )
-
-        stream = (spark.readStream
-                  .schema("key string, value string, ts timestamp")
-                  .option("maxFilesPerTrigger", "1").parquet(src))
-        out = scd2_stream_event_time(stream, delay="10 seconds", **kw)
-        sink, ck = str(tmp_path / f"sink_{tag}"), str(tmp_path / f"ck_{tag}")
-        q = (out.writeStream.format("parquet").option("path", sink)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return sorted(
-            (r.key, r.value, r.valid_from, r.valid_to, r.version,
-             r.n_dropped_late)
-            for r in spark.read.parquet(sink).collect()
-            if r.key != "\x00flush")
-
-    def test_bucketed_matches_per_key(self, spark, tmp_path):
-        import datetime as dt
-
-        t0 = dt.datetime(2024, 1, 1)
-
-        def ts(s):
-            return t0 + dt.timedelta(seconds=s)
-
-        src = str(tmp_path / "src")
-        # 6 keys over 2 disordered batches; runs straddle the boundary;
-        # k0 gets a late row below its finalized frontier (drop path)
-        b1 = [(f"k{i}", "a", ts(10 + i)) for i in range(6)] + \
-             [(f"k{i}", "b", ts(40 + i)) for i in range(6)] + \
-             [("k1", "a", ts(25))]
-        b2 = [(f"k{i}", "c", ts(80 + i)) for i in range(6)] + \
-             [("k0", "z", ts(11))]  # below k0's frontier after batch 1
-        self._write_batch(spark, src, b1)
-        self._write_batch(spark, src, b2)
-        self._write_batch(spark, src, [("\x00flush", "x", ts(600))])
-
-        per_key = self._run(spark, src, tmp_path, "pk")
-        bucketed = self._run(spark, src, tmp_path, "bk", state_buckets=2)
-        assert per_key == bucketed
-        assert per_key  # non-trivial fixture
-
-    def test_single_bucket_matches_per_key(self, spark, tmp_path):
-        import datetime as dt
-
-        t0 = dt.datetime(2024, 1, 1)
-
-        def ts(s):
-            return t0 + dt.timedelta(seconds=s)
-
-        src = str(tmp_path / "src")
-        self._write_batch(spark, src, [("a", "x", ts(0)),
-                                       ("b", "x", ts(1))])
-        self._write_batch(spark, src, [("a", "y", ts(30)),
-                                       ("b", "y", ts(31))])
-        self._write_batch(spark, src, [("\x00flush", "s", ts(600))])
-        assert (self._run(spark, src, tmp_path, "pk1")
-                == self._run(spark, src, tmp_path, "bk1",
-                             state_buckets=1))
-
-
 def test_knn_graph_exact_kernel_matches_fold(spark):
     """kernel='exact' (gemm cogroup shape + fold summation tree +
     round_spark) must reproduce the fold form bit-for-bit — the gate
