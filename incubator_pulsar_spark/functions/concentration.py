@@ -29,7 +29,9 @@ def gini(df: DataFrame, group_cols: list[str],
 
         G = (2·Σ i·x₍ᵢ₎ − (n+1)·Σx) / (n·Σx)
 
-    Values must be non-negative (the Lorenz-curve domain); NULLs drop.
+    The Lorenz-curve domain is non-negative values; negative values
+    still get the identity's value, rounded half away from zero. NULLs
+    drop.
     Equal values make Σ i·x₍ᵢ₎ order-invariant (positions i and j swap
     between equal x's without moving the sum), so the sort needs no
     tiebreak and the result is deterministic on any engine.
@@ -37,8 +39,10 @@ def gini(df: DataFrame, group_cols: list[str],
     Exactness: x → integer 1e-4 units; the rank product casts
     DECIMAL(19,0)×DECIMAL(18,0) (≤ 38 — cap-proof), sums fold at
     scale 0, and the round-6 happens in EXACT integer arithmetic —
-    g6 = (2·num·10⁶ + den) div (2·den), a half-up rounding no engine
-    can evaluate differently (the operands exceed 2⁵³, so a
+    g6 = (2·num·10⁶ + sign(num·den)·den) div (2·den), a half-up
+    rounding no engine can evaluate differently (``div`` truncates
+    toward zero on both engines, so the sign term makes the half step
+    point away from zero for either sign; the operands exceed 2⁵³, so a
     cast-to-double path would depend on the engine's big-int→double
     rounding; the r13 driver-hash lesson). The final /10⁶ is one
     IEEE-exact small-integer division. Overflow budget: Σ i·x₄·10⁶
@@ -64,7 +68,8 @@ def gini(df: DataFrame, group_cols: list[str],
     num = (F.lit(2).cast("decimal(2,0)") * F.col("_w")
            - (F.col("n") + 1).cast("decimal(12,0)") * F.col("_s4"))
     den = F.col("n").cast("decimal(12,0)") * F.col("_s4")
-    g6 = F.expr("(CAST(2 AS DECIMAL(2,0)) * _num6 + _den) div "
+    g6 = F.expr("(CAST(2 AS DECIMAL(2,0)) * _num6 + CASE WHEN "
+                "(_num6 < 0) = (_den < 0) THEN _den ELSE -_den END) div "
                 "(CAST(2 AS DECIMAL(2,0)) * _den)")
     return (agg
             .withColumn("_num6", num * F.lit(1000000).cast("decimal(7,0)"))

@@ -17,6 +17,7 @@ explodes to probes).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import ensure_parallelism
+from . import pq_arrow
 
 
 def as_double_array(v: Column) -> Column:
@@ -183,8 +185,6 @@ def _seed_centroids_with_pool(embeddings: DataFrame, *, n_cells: int,
     from — callers that need driver-side geometry estimates (e.g.
     ``knn_graph``'s prune='auto' decision) get them for free instead
     of a second corpus pass."""
-    import numpy as np
-
     sample = (
         embeddings.select(F.col(id_col).alias("i"),
                           as_double_array(F.col(vec_col)).alias("v"))
@@ -454,11 +454,20 @@ def _pair_dot_udf():
 
     @F.pandas_udf("double")
     def pd_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        import numpy as np
-
         return pd.Series((np.stack(va.to_numpy()) * np.stack(vb.to_numpy())).sum(axis=1))
 
     return pd_dot.asNondeterministic()
+
+
+def _pair_cosine(va: str, na: str, vb: str, nb: str) -> Column:
+    """Round-6 cosine of the fold form: the Arrow pair dot of vector
+    columns ``va``/``vb`` over their precomputed norms ``na``/``nb``,
+    0.0 when either norm is zero — the arithmetic the DuckDB oracle
+    replays."""
+    sim = F.when((F.col(na) > 0) & (F.col(nb) > 0),
+                 _pair_dot_udf()(F.col(va), F.col(vb))
+                 / (F.col(na) * F.col(nb))).otherwise(F.lit(0.0))
+    return F.round(sim, 6)
 
 
 def cosine_neardup_pairs(
@@ -540,7 +549,6 @@ def cosine_neardup_pairs(
     if strategy != "gram":
         raise ValueError(f"unknown strategy: {strategy!r}")
 
-    import numpy as np
     import pandas as pd_mod
 
     rows = e.collect()
@@ -590,81 +598,108 @@ def cosine_neardup_pairs(
 
 
 def _neardup_from_pairs(joined: DataFrame, threshold: float) -> DataFrame:
-    pd_dot = _pair_dot_udf()
-    sim = F.when((F.col("_na") > 0) & (F.col("_nb") > 0),
-                 pd_dot(F.col("_va"), F.col("_vb"))
-                 / (F.col("_na") * F.col("_nb"))).otherwise(F.lit(0.0))
     return (
-        joined.select("id_a", "id_b", F.round(sim, 6).alias("cosine_sim"))
+        joined.select("id_a", "id_b", _pair_cosine(
+            "_va", "_na", "_vb", "_nb").alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= F.lit(threshold))
         .orderBy("id_a", "id_b")
     )
 
 
-def _zeroed_cosine_matrix(X, nx, Y, ny):
-    """round-6 cosine matrix with the FOLD path's exact zero-norm rule
-    (either norm ≤ 0 ⇒ sim 0.0). Norms come in from the JVM ``l2_norm``
-    column so the denominator is bit-identical to the fold form; only
-    the dot's summation order differs (BLAS vs numpy pairwise), which
-    round-6 absorbs — the ``cosine_topk_gemm`` precedent."""
-    import numpy as np
-
-    den = np.outer(np.where(nx > 0, nx, 1.0), np.where(ny > 0, ny, 1.0))
-    S = np.round((X @ Y.T) / den, 6)
-    S[nx <= 0, :] = 0.0
-    S[:, ny <= 0] = 0.0
-    return S
+_KNN_MARGIN = 1e-5
 
 
-def _exact_cosine_matrix(X, nx, Y, ny):
-    """BIT-EXACT twin of the fold path's pair cosine (optimization
-    r14, the pq_arrow discipline): the fold scores each pair as
-    ``np.sum(va*vb, axis=1)`` inside the Arrow pair-dot UDF, divides
-    by the JVM ``_ns*_nd`` product, and rounds with Spark's
-    BigDecimal-HALF_UP ``F.round(·, 6)``. This matrix form replays
-    all three exactly — per Y-row, ``(X * Y[j]).sum(axis=1)`` is the
-    same contiguous (n, d) float64 row-reduction numpy runs in the
-    UDF (identical pairwise-summation tree per row), the denominator
-    is the same elementwise product-then-divide, and ``round_spark``
-    replays the JVM rounding — so the gate's DuckDB oracle sees the
-    fold's values to the last bit, with vectors shipped once per
-    probe instead of once per candidate pair."""
-    import numpy as np
+def _knn_score(side: DataFrame, members: DataFrame, k: int) -> DataFrame:
+    """Per-(src, cell) top-k of ``knn_graph``, scored in two stages
+    inside one probers×members cogroup per cell (filter and refine).
 
-    from .pq_arrow import round_spark
+    Stage one: a BLAS matmul gives every prober's approximate cosine
+    to every member of the cell. Stage two: only the members within
+    ``_KNN_MARGIN`` of the prober's k-th approximate cosine are
+    rescored with the fold's own arithmetic (``_knn_score_fold``): the
+    per-row numpy pair-dot tree, the product-then-divide denominator,
+    the zero-norm rule and Spark's HALF_UP round-6 (``round_spark``).
+    BLAS and pairwise sums differ by ~1e-14, far below the margin, so
+    any member outside it is beaten by k members by at least one
+    round-6 step: the rows are the fold's to the last bit.
 
-    S = np.empty((len(X), len(Y)), dtype=np.float64)
-    for j in range(len(Y)):
-        S[:, j] = (X * Y[j]).sum(axis=1)
-    den = np.outer(np.where(nx > 0, nx, 1.0), np.where(ny > 0, ny, 1.0))
-    S = round_spark(S / den, 6)
-    S[nx <= 0, :] = 0.0
-    S[:, ny <= 0] = 0.0
-    return S
+    Vectors ship into the shuffle once per probe instead of once per
+    candidate pair, and only k rows per (src, cell) come out. Cutting
+    at k per cell is safe because the global window in ``knn_graph``
+    ranks by the same (sim DESC, dst_id) key."""
+    idt = members.schema["dst_id"].dataType
+    out_schema = T.StructType([
+        T.StructField("src_id", idt), T.StructField("dst_id", idt),
+        T.StructField("cosine_sim", T.DoubleType())])
+
+    def fn(left, right):
+        if not len(left) or not len(right):
+            return pd.DataFrame({"src_id": [], "dst_id": [],
+                                 "cosine_sim": []})
+        P = np.array(left["_vs"].to_list(), dtype="float64")
+        M = np.array(right["_vd"].to_list(), dtype="float64")
+        ns = left["_ns"].to_numpy(dtype="float64")
+        nd = right["_nd"].to_numpy(dtype="float64")
+        src, dst = left["src_id"].to_numpy(), right["dst_id"].to_numpy()
+        # one integer code per id: the self-pair test and the dst_id
+        # tiebreak run on ints whatever the id type
+        code = np.unique(np.concatenate([src, dst]),
+                         return_inverse=True)[1].reshape(-1)
+        src_c, dst_c = code[:len(src)], code[len(src):]
+        n_m = len(dst)
+        kk = min(k, n_m)
+        step = max(1, (1 << 22) // n_m)  # bounds the matrix per block
+        ii_all, jj_all, sim_all = [], [], []
+        for lo in range(0, len(src), step):
+            hi = min(lo + step, len(src))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                A = (P[lo:hi] @ M.T) / np.outer(ns[lo:hi], nd)
+            A[(ns[lo:hi] <= 0)[:, None] | (nd <= 0)[None, :]] = 0.0
+            self_ = src_c[lo:hi, None] == dst_c[None, :]
+            A[self_] = -np.inf
+            kth = np.partition(A, n_m - kk, axis=1)[:, n_m - kk]
+            ii, jj = np.nonzero((A >= (kth - _KNN_MARGIN)[:, None])
+                                & ~self_)
+            ii += lo
+            ok = (ns[ii] > 0) & (nd[jj] > 0)
+            dots = (M[jj] * P[ii]).sum(axis=1)
+            sims = np.where(ok, pq_arrow.round_spark(
+                dots / np.where(ok, ns[ii] * nd[jj], 1.0), 6), 0.0)
+            # per-prober (sim DESC, dst_id ASC) order, cut at k
+            order = np.lexsort((dst_c[jj], -sims, ii))
+            g = ii[order]  # sorted, so searchsorted finds group starts
+            pick = order[np.arange(len(g)) - np.searchsorted(g, g) < k]
+            ii_all.append(ii[pick])
+            jj_all.append(jj[pick])
+            sim_all.append(sims[pick])
+        # ONE frame per cogroup (the GEMM-twin emit-batching lesson)
+        return pd.DataFrame({"src_id": src[np.concatenate(ii_all)],
+                             "dst_id": dst[np.concatenate(jj_all)],
+                             "cosine_sim": np.concatenate(sim_all)})
+
+    return (side.select("cell", "src_id", "_vs", "_ns")
+            .groupBy("cell")
+            .cogroup(members.groupBy("cell"))
+            .applyInPandas(fn, out_schema))
 
 
-def _topk_rows(col, dst_ids, valid, k):
-    """Indices (into ``valid``'s positions) of the top-k of ``col``
-    restricted to ``valid``, ordered (sim DESC, dst_id ASC) — the
-    module-wide tiebreak, cut deterministically at k (safe to truncate
-    per-partition because the global window sorts by the SAME key)."""
-    import numpy as np
-
-    sub = col[valid]
-    kk = min(k, valid.size)
-    if kk < valid.size:
-        cand = np.argpartition(-sub, kk - 1)[:kk]
-        cand = np.where(sub >= sub[cand].min())[0]
-    else:
-        cand = np.arange(valid.size)
-    order = cand[np.lexsort((dst_ids[valid][cand], -sub[cand]))][:kk]
-    return valid[order]
+def _knn_score_fold(side: DataFrame, members: DataFrame,
+                    k: int) -> DataFrame:
+    """Reference form of ``_knn_score``: the cell equi-join scores
+    every (prober, member) pair with the Arrow pair-dot UDF, the
+    arithmetic the DuckDB oracle replays. It emits every candidate
+    pair (``k`` is unused; the window in ``knn_graph`` cuts). Parity
+    tests swap it in for ``_knn_score``."""
+    return (side.join(members, "cell")
+            .filter(F.col("src_id") != F.col("dst_id"))
+            .select("src_id", "dst_id", _pair_cosine(
+                "_vs", "_ns", "_vd", "_nd").alias("cosine_sim")))
 
 
 def knn_graph(
     embeddings: DataFrame, k: int = 5, *, n_cells: int | None = None,
     nprobe: int = 2, id_col: str = "vec_id", vec_col: str = "embedding",
-    prune: bool | str = "auto", kernel: str = "gemm",
+    prune: bool | str = "auto",
 ) -> DataFrame:
     """Approximate k-NN GRAPH over the whole corpus — every vector's
     top-k neighbors (the build step of SemDeDup-style clustering,
@@ -709,44 +744,19 @@ def knn_graph(
     ``n_cells`` defaults to ``auto_n_cells`` so that contract holds
     without the caller remembering it.
 
-    ``kernel`` picks the pair-scoring physical form, same output
-    either way (pytest-parity-locked):
-
-    - ``"gemm"`` (default): cogroup probers×members per cell and run
-      ONE BLAS matmul per cell, emitting only each prober's per-cell
-      top-k — vectors ship into the shuffle ONCE per probe instead of
-      once per candidate PAIR, candidate volume drops from |cell| to k
-      rows per probe, and the pair work runs at matmul throughput (the
-      ``cosine_topk_gemm`` adoption, VERDICT r11 #3; measured ×4.1 on
-      the sf0.1 corpus: 5.28 s → 1.28 s). Round-6 absorbs the BLAS
-      summation-order delta from the fold — same values in practice,
-      not provably bit-exact.
-    - ``"exact"``: the gemm cogroup SHAPE with the fold's bit-exact
-      scoring (``_exact_cosine_matrix``: per-row numpy reductions in
-      the fold's own summation tree + ``round_spark`` — the pq_arrow
-      exact-twin discipline, optimization r14). The DuckDB-oracle
-      gate runs this form: fold values to the last bit at gemm-like
-      cost (the per-pair Arrow UDF shipped both vectors once per
-      candidate PAIR — the measured 2.9 s of the 2000-vector gate was
-      almost entirely that transport).
-    - ``"fold"``: the original equi-join + Arrow pair-dot — the
-      parity REFERENCE surface (its BLAS-free summation order is what
-      the SQL replays; ``kernel="exact"`` reproduces it bit-for-bit,
-      locked by tests/test_round14_opt.py).
+    Scoring is ``_knn_score``: vectors ship into the shuffle once per
+    probe (one probers×members cogroup per cell), a BLAS matmul picks
+    each prober's candidates, and only those are rescored with the
+    fold's bit-exact arithmetic — the rows the DuckDB oracle replays.
 
     Output: (src_id, dst_id, cosine_sim, rank), k rows per src.
     """
     if prune not in (True, False, "auto"):
         raise ValueError(f"prune must be True, False or 'auto': {prune!r}")
-    if kernel not in ("gemm", "fold", "exact"):
-        raise ValueError(
-            f"kernel must be 'gemm', 'fold' or 'exact': {kernel!r}")
     n_cells = _resolve_n_cells(embeddings, n_cells)
     cents, pool_unit = _seed_centroids_with_pool(
         embeddings, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
     if prune == "auto":
-        import numpy as np
-
         cmat = np.array(cents)
         cnorm = np.linalg.norm(cmat, axis=1)
         cnorm[cnorm == 0] = 1.0
@@ -764,9 +774,7 @@ def knn_graph(
          .withColumn("_scores", _cell_scores(F.col("vec"))).drop("_cents"))
 
     # norms precomputed ONCE per vector (the fold-cosine would redo
-    # both norms per candidate pair — measured 2× on the sf0.1 table),
-    # pair dots through the Arrow kernel (same round-6 values as the
-    # oracle's list_dot_product — the embedding_neardup precedent)
+    # both norms per candidate pair — measured 2× on the sf0.1 table)
     e = e.withColumn("_norm", l2_norm(F.col("vec")))
     members = e.select(F.col("vec_id").alias("dst_id"),
                        F.col("vec").alias("_vd"),
@@ -784,72 +792,8 @@ def knn_graph(
                        F.col("_pr.i").cast("int").alias("cell"),
                        F.col("_pr.s").alias("_ps")))
 
-    pd_dot = _pair_dot_udf()
-    sim = F.when((F.col("_ns") > 0) & (F.col("_nd") > 0),
-                 pd_dot(F.col("_vs"), F.col("_vd"))
-                 / (F.col("_ns") * F.col("_nd"))).otherwise(F.lit(0.0))
-
-    def _score_fold(side: DataFrame) -> DataFrame:
-        return (side.join(members, "cell")
-                .filter(F.col("src_id") != F.col("dst_id"))
-                .select("src_id", "dst_id",
-                        F.round(sim, 6).alias("cosine_sim")))
-
-    def _score_gemm(side: DataFrame) -> DataFrame:
-        import numpy as np
-        import pandas as pd  # noqa: F811
-        from pyspark.sql import types as T
-
-        idt = embeddings.schema[id_col].dataType
-        out_schema = T.StructType([
-            T.StructField("src_id", idt), T.StructField("dst_id", idt),
-            T.StructField("cosine_sim", T.DoubleType())])
-
-        matfn = (_exact_cosine_matrix if kernel == "exact"
-                 else _zeroed_cosine_matrix)
-
-        def fn(left, right):
-            if not len(left) or not len(right):
-                return pd.DataFrame(
-                    {"src_id": [], "dst_id": [], "cosine_sim": []})
-            P = np.array(left["_vs"].to_list(), dtype="float64")
-            M = np.array(right["_vd"].to_list(), dtype="float64")
-            src_ids = left["src_id"].to_numpy()
-            dst_ids = right["dst_id"].to_numpy()
-            S = matfn(
-                P, left["_ns"].to_numpy(dtype="float64"),
-                M, right["_nd"].to_numpy(dtype="float64"))
-            s_out, d_out, c_out = [], [], []
-            all_idx = np.arange(len(dst_ids))
-            for i in range(len(src_ids)):
-                valid = all_idx[dst_ids != src_ids[i]]
-                if not valid.size:
-                    continue
-                pick = _topk_rows(S[i], dst_ids, valid, k)
-                s_out.append(np.full(len(pick), src_ids[i], dtype=object))
-                d_out.append(dst_ids[pick])
-                c_out.append(S[i][pick])
-            if not s_out:
-                return pd.DataFrame(
-                    {"src_id": [], "dst_id": [], "cosine_sim": []})
-            # ONE frame per cogroup (the GEMM-twin emit-batching lesson)
-            return pd.DataFrame({"src_id": np.concatenate(s_out),
-                                 "dst_id": np.concatenate(d_out),
-                                 "cosine_sim": np.concatenate(c_out)})
-
-        # per-(src, cell) top-k is sufficient: the global window ranks
-        # by the SAME (sim DESC, dst_id) key, so rows cut here can
-        # never enter the global top-k — candidate volume drops from
-        # |cell| to k rows per probe
-        return (side.select("cell", "src_id", "_vs", "_ns")
-                .groupBy("cell")
-                .cogroup(members.groupBy("cell"))
-                .applyInPandas(fn, out_schema))
-
-    _score = _score_fold if kernel == "fold" else _score_gemm
-
     if not prune:
-        scored = _score(probers.drop("_prank", "_ps"))
+        scored = _knn_score(probers.drop("_prank", "_ps"), members, k)
     else:
         # angular radius per cell: each member's score for its OWN cell
         # is its max score = element_at(_scores, cell+1); the min over
@@ -870,7 +814,7 @@ def knn_graph(
         # twice (measured 1.3× total). localCheckpoint materializes the
         # (id, id, double) candidate rows once — the fuzzy.py
         # connected-components precedent.
-        cand_a = _score(primary).localCheckpoint(eager=False)
+        cand_a = _knn_score(primary, members, k).localCheckpoint(eager=False)
         wk = Window.partitionBy("src_id").orderBy(
             F.col("cosine_sim").desc(), F.col("dst_id"))
         kth = (cand_a.withColumn("_rn", F.row_number().over(wk))
@@ -887,7 +831,7 @@ def knn_graph(
                      .filter(F.col("_kth").isNull() | F.col("_cosr").isNull()
                              | (bound + F.lit(1e-6) >= F.col("_kth")))
                      .drop("_prank", "_ps", "_cosr", "_kth"))
-        scored = cand_a.unionByName(_score(secondary))
+        scored = cand_a.unionByName(_knn_score(secondary, members, k))
 
     w = Window.partitionBy("src_id").orderBy(F.col("cosine_sim").desc(),
                                              F.col("dst_id"))
@@ -896,96 +840,6 @@ def knn_graph(
         .filter(F.col("rank") <= k)
         .select("src_id", "dst_id", "cosine_sim", "rank")
     )
-
-
-def _semdedup_dups_gemm(e: DataFrame, threshold: float, idt) -> DataFrame:
-    """(id_b, _dup_of) rows via one per-cell gram matrix: within a
-    cell, x is a dup of the SMALLEST same-cell id with round-6 cosine
-    ≥ threshold — computed over the id-sorted member block so the
-    argmax of the first hit IS the minimum id. Same values as the
-    fold pair join (``_zeroed_cosine_matrix`` reuses the JVM norms),
-    with vectors shuffled once per cell instead of once per pair."""
-    import numpy as np
-    import pandas as pd  # noqa: F811
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([T.StructField("id_b", idt),
-                               T.StructField("_dup_of", idt)])
-
-    def fn(pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_b": [], "_dup_of": []})
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        X = np.array(pdf["vec"].to_list(), dtype="float64")[order]
-        n = pdf["_norm"].to_numpy(dtype="float64")[order]
-        S = _zeroed_cosine_matrix(X, n, X, n)
-        hit = S >= threshold
-        id_b, dup_of = [], []
-        for j in range(1, len(ids)):
-            col = hit[:j, j]
-            if col.any():
-                id_b.append(ids[j])
-                dup_of.append(ids[int(np.argmax(col))])
-        return pd.DataFrame({"id_b": np.array(id_b, dtype=object),
-                             "_dup_of": np.array(dup_of, dtype=object)})
-
-    return e.select("cell", "vec_id", "vec", "_norm") \
-        .groupBy("cell").applyInPandas(fn, out_schema)
-
-
-def _semdedup_dups_gemm_sharded(e: DataFrame, threshold: float, idt,
-                                n_shards: int) -> DataFrame:
-    """(id_b, _dup_of) rows via row-SHARDED per-cell gram matrices
-    (VERDICT r12 #7 / ROADMAP candidate #4): the plain gemm kernel's
-    parallelism collapses to n_cells tasks because each cell is one
-    Arrow group. This variant explodes every member row to all
-    ``n_shards`` shard groups of its cell (vectors ship n_shards×) and
-    each (cell, shard) task grams the FULL member block against only
-    its shard's columns — total BLAS work unchanged (n × n/s per task
-    × s tasks), parallelism n_cells × n_shards, peak task memory cut
-    by s. Verdicts are identical to the whole-cell gram: a column's
-    dup test only reads rows ABOVE it in the id sort, all of which are
-    present in every shard group."""
-    import numpy as np
-    import pandas as pd  # noqa: F811
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([T.StructField("id_b", idt),
-                               T.StructField("_dup_of", idt)])
-
-    def fn(key, pdf):
-        shard = key[1]
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_b": [], "_dup_of": []})
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        own = pdf["_shard"].to_numpy()[order]
-        X = np.array(pdf["vec"].to_list(), dtype="float64")[order]
-        n = pdf["_norm"].to_numpy(dtype="float64")[order]
-        cols = np.nonzero(own == shard)[0]
-        cols = cols[cols > 0]  # global-min id is never a dup
-        if not len(cols):
-            return pd.DataFrame({"id_b": [], "_dup_of": []})
-        S = _zeroed_cosine_matrix(X, n, X[cols], n[cols])
-        hit = S >= threshold
-        id_b, dup_of = [], []
-        for c, g in enumerate(cols):
-            col = hit[:g, c]
-            if col.any():
-                id_b.append(ids[g])
-                dup_of.append(ids[int(np.argmax(col))])
-        return pd.DataFrame({"id_b": np.array(id_b, dtype=object),
-                             "_dup_of": np.array(dup_of, dtype=object)})
-
-    exploded = (e.select("cell", "vec_id", "vec", "_norm")
-                .withColumn("_shard",
-                            F.pmod(F.xxhash64(F.col("vec_id")),
-                                   F.lit(n_shards)).cast("int"))
-                .withColumn("_grp",
-                            F.explode(F.sequence(
-                                F.lit(0), F.lit(n_shards - 1)))))
-    return exploded.groupBy("cell", "_grp").applyInPandas(fn, out_schema)
 
 
 def _argmax_cell(scores: Column) -> Column:
@@ -998,7 +852,6 @@ def _argmax_cell(scores: Column) -> Column:
 def semantic_dedup(
     embeddings: DataFrame, threshold: float, *, n_cells: int | None = None,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    kernel: str = "fold", n_shards: int = 8,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
     cluster the corpus coarsely, then prune near-identical vectors
@@ -1025,29 +878,15 @@ def semantic_dedup(
     pair join is an equi-join on cell; vectors ship once into it; the
     verdict join back is keyed on id.
 
-    ``kernel``: ``"fold"`` (default) is the pair-join + Arrow pair-dot
-    — the DuckDB-oracle gate surface, and MEASURED FASTER at local
-    corpus sizes (20k rows: fold 1.4-4.8 s vs gemm 4.5-10.9 s across
-    cell sizes — the pair join broadcasts its small side and stays
-    JVM-parallel at 32 ways, while the gemm kernel's parallelism
-    collapses to n_cells tasks). ``"gemm"`` groups each cell ONCE and
-    runs a single BLAS gram matrix over its member block — vectors
-    ship into the shuffle once per CELL instead of once per PAIR, so
-    it is the shape for corpora where the pair join's vector
-    duplication (|cell| copies of every vector) dominates: cells of
-    thousands × a corpus too big to broadcast. ``"gemm_sharded"``
-    recovers the gemm kernel's lost parallelism by splitting each
-    cell's gram into ``n_shards`` column shards (n_cells × n_shards
-    tasks, vectors ship n_shards× — VERDICT r12 #7); measured numbers
-    for all three are in SCALING.md's decision table. Outputs are
-    identical (pytest parity lock across all kernels).
+    Pair dots run through the Arrow pair-dot UDF, the values the
+    DuckDB oracle replays. This pair join is the only kernel: it
+    broadcasts its small side and stays JVM-parallel, and per-cell
+    gram-matrix kernels measured slower at every local corpus size
+    (SCALING.md keeps their numbers).
 
     Output: (vec_id, cell, is_kept ∈ {0,1}, dup_of — smallest
     triggering id, −1 when kept).
     """
-    if kernel not in ("gemm", "fold", "gemm_sharded"):
-        raise ValueError(
-            f"kernel must be 'gemm', 'gemm_sharded' or 'fold': {kernel!r}")
     n_cells = _resolve_n_cells(embeddings, n_cells)
     cents = _seed_centroids(embeddings, n_cells=n_cells,
                             id_col=id_col, vec_col=vec_col)
@@ -1057,27 +896,17 @@ def semantic_dedup(
          .withColumn("cell", _nearest_cell(F.col("vec"))).drop("_cents"))
     e = e.withColumn("_norm", l2_norm(F.col("vec")))
 
-    if kernel == "gemm":
-        dups = _semdedup_dups_gemm(e, threshold,
-                                   embeddings.schema[id_col].dataType)
-    elif kernel == "gemm_sharded":
-        dups = _semdedup_dups_gemm_sharded(
-            e, threshold, embeddings.schema[id_col].dataType, n_shards)
-    else:
-        a = e.select(F.col("vec_id").alias("id_a"), F.col("cell"),
-                     F.col("vec").alias("_va"), F.col("_norm").alias("_na"))
-        b = e.select(F.col("vec_id").alias("id_b"), F.col("cell"),
-                     F.col("vec").alias("_vb"), F.col("_norm").alias("_nb"))
-        pairs = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
-        pd_dot = _pair_dot_udf()
-        sim = F.when((F.col("_na") > 0) & (F.col("_nb") > 0),
-                     pd_dot(F.col("_va"), F.col("_vb"))
-                     / (F.col("_na") * F.col("_nb"))).otherwise(F.lit(0.0))
-        dups = (
-            pairs.select("id_b", F.round(sim, 6).alias("_c"), "id_a")
-            .filter(F.col("_c") >= F.lit(threshold))
-            .groupBy("id_b").agg(F.min("id_a").alias("_dup_of"))
-        )
+    a = e.select(F.col("vec_id").alias("id_a"), F.col("cell"),
+                 F.col("vec").alias("_va"), F.col("_norm").alias("_na"))
+    b = e.select(F.col("vec_id").alias("id_b"), F.col("cell"),
+                 F.col("vec").alias("_vb"), F.col("_norm").alias("_nb"))
+    pairs = a.join(b, "cell").filter(F.col("id_a") < F.col("id_b"))
+    dups = (
+        pairs.select("id_b", _pair_cosine("_va", "_na", "_vb", "_nb")
+                     .alias("_c"), "id_a")
+        .filter(F.col("_c") >= F.lit(threshold))
+        .groupBy("id_b").agg(F.min("id_a").alias("_dup_of"))
+    )
     return (
         e.join(dups, e["vec_id"] == dups["id_b"], "left")
         .select("vec_id", "cell",
@@ -1146,7 +975,8 @@ def kmeans_embeddings(embeddings: DataFrame, k: int = 8, n_iter: int = 2, *,
       the same k-means++-analogue the IVF index uses, round-9 cosines,
       bounded 10k driver pool);
     - assign: argmax round-9 cosine to the current centroids, ties to
-      the LOWEST cluster id (``_nearest_cell``'s array_position);
+      the LOWEST cluster id (``pq_arrow.assign_clusters``, the exact
+      twin of ``_nearest_cell``'s array_position rule);
     - update: per-dimension mean through ``decimal(27,12)`` sums
       rounded to 6 decimals (the ``label_centroid_stats`` parity
       trick — BLAS-vs-sequential fold noise can't leak into the next
@@ -1167,17 +997,9 @@ def kmeans_embeddings(embeddings: DataFrame, k: int = 8, n_iter: int = 2, *,
     base = embeddings.select(F.col(id_col),
                              as_double_array(F.col(vec_col)).alias("__v"))
     dim = len(cents[0])
-    use_arrow = _pq_kernel() == "arrow"
-    if use_arrow:
-        from . import pq_arrow
     for _ in range(n_iter):
-        if use_arrow:
-            a = pq_arrow.assign_clusters(base, cents, id_col=id_col,
-                                         vec_col="__v")
-        else:
-            a = (_attach_centroids(base, cents)
-                 .withColumn("cluster", _nearest_cell(F.col("__v")))
-                 .drop("_cents"))
+        a = pq_arrow.assign_clusters(base, cents, id_col=id_col,
+                                     vec_col="__v")
         m = (a.select("cluster", F.posexplode("__v").alias("d", "x"))
              .groupBy("cluster", "d")
              .agg(F.round(
@@ -1191,15 +1013,24 @@ def kmeans_embeddings(embeddings: DataFrame, k: int = 8, n_iter: int = 2, *,
             [means[c][d] for d in range(dim)] if c in means else cents[c]
             for c in range(k)
         ]
-    if use_arrow:
-        return pq_arrow.assign_clusters(base, cents, id_col=id_col,
-                                        vec_col="__v", final_sim=True)
-    out = (_attach_centroids(base, cents)
-           .withColumn("cluster", _nearest_cell(F.col("__v"))))
+    return pq_arrow.assign_clusters(base, cents, id_col=id_col,
+                                    vec_col="__v", final_sim=True)
+
+
+def _assign_clusters_fold(df: DataFrame, cents: list[list[float]], *,
+                          id_col: str, vec_col: str,
+                          final_sim: bool = False) -> DataFrame:
+    """Reference form of ``pq_arrow.assign_clusters`` as column
+    expressions (broadcast centroid column + ``_nearest_cell``).
+    Parity tests swap it in."""
+    out = (_attach_centroids(df, cents)
+           .withColumn("cluster", _nearest_cell(F.col(vec_col))))
+    if not final_sim:
+        return out.drop("_cents")
     final_c = F.col("_cents")[F.col("cluster")]
     return out.select(
         F.col(id_col), F.col("cluster"),
-        F.round(cosine(F.col("__v"), final_c), 6).alias("cosine_sim"))
+        F.round(cosine(F.col(vec_col), final_c), 6).alias("cosine_sim"))
 
 
 def kcenter_coreset(embeddings: DataFrame, k: int = 8, *,
@@ -1333,8 +1164,6 @@ def pq_train_codebooks(embeddings: DataFrame, *, m: int = 4,
 
     Returns ``m × ksub × (dim/m)`` nested lists. Training is a
     driver-bounded metadata op regardless of corpus size."""
-    import numpy as np
-
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     dsub = dim // m
@@ -1547,8 +1376,6 @@ def opq_train_rotation(embeddings: DataFrame, *, dim: int, m: int = 4,
     DuckDB CTEs the way the signed permutation is (PARITY r11), but
     the composition ``rotate_embeddings → pq_* (books trained in
     rotated space) → raw-vector refine`` is fully supported."""
-    import numpy as np
-
     sample = (
         embeddings.select(F.col(id_col).alias("i"),
                           as_double_array(F.col(vec_col)).alias("v"))
@@ -1714,17 +1541,6 @@ def _pq_load_rotation(path: str):
     return _rotation_from_json(r)
 
 
-def _pq_kernel() -> str:
-    """Physical-form switch for the PQ encode/ADC-scan stages:
-    ``"arrow"`` (default — the measured r13 win) runs the numpy exact
-    twins in ``pq_arrow``; ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the
-    original column-expression forms (kept for parity locks and as
-    the SQL-shaped reference implementation)."""
-    import os as _os
-
-    return _os.environ.get("SPARK_GRAFT_PQ_KERNEL", "arrow")
-
-
 def _attach_pq(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """Codebooks as ONE broadcast data column (m × ksub × dsub doubles
     — the literal form would re-hit the measured codegen trap)."""
@@ -1757,16 +1573,19 @@ def pq_encode(embeddings: DataFrame, books: list[list[list[float]]], *,
     applies the ``pq_rotation`` signed permutation before the subspace
     split (the books must then have been trained in rotated space).
 
-    Physical form: the Arrow kernel (``pq_arrow.encode_pq`` — exact
-    twin of the fold expressions, optimization r13; the higher-order-
-    function column form evaluated INTERPRETED and dominated the
-    measured encode cost). ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the
-    expression path (the parity A/B lever)."""
-    if _pq_kernel() == "arrow":
-        from . import pq_arrow
+    Physical form: the Arrow kernel ``pq_arrow.encode_pq``, the exact
+    twin of ``_pq_encode_fold`` (the higher-order-function column form
+    evaluated INTERPRETED and dominated the measured encode cost)."""
+    return pq_arrow.encode_pq(embeddings, books, id_col=id_col,
+                              vec_col=vec_col, rotation=rotation)
 
-        return pq_arrow.encode_pq(embeddings, books, id_col=id_col,
-                                  vec_col=vec_col, rotation=rotation)
+
+def _pq_encode_fold(embeddings: DataFrame, books: list[list[list[float]]],
+                    *, id_col: str = "vec_id", vec_col: str = "embedding",
+                    rotation: tuple[list[int], list[int]] | None = None
+                    ) -> DataFrame:
+    """Reference form of ``pq_encode`` as column expressions — the
+    arithmetic the DuckDB oracle replays. Parity tests swap it in."""
     m = len(books)
     dsub = len(books[0][0])
     e = embeddings.select(F.col(id_col).alias("vec_id"),
@@ -1925,29 +1744,30 @@ def _pq_adc_rank(enc: DataFrame, q: DataFrame,
     refine stage stays in raw space (isometry — same exact
     distances, same raw-order arithmetic as the unrotated path).
 
-    Physical form: the Arrow ADC-scan kernel by default — the query
-    table is built driver-side from the collected query batch (the
-    same boundedness as the former ``F.broadcast(qt)``) and the scan
-    runs vectorized (``pq_arrow.adc_scan``, exact twin);
-    ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the expression form."""
-    if _pq_kernel() == "arrow":
-        import numpy as _np
+    Physical form: the Arrow ADC-scan kernel — the query table is
+    built driver-side from the collected query batch (the same
+    boundedness as a ``F.broadcast(qt)``) and the scan runs vectorized
+    (``pq_arrow.adc_scan``, exact twin of ``_pq_adc_rank_fold``)."""
+    rows = q.collect()
+    qids = [r["query_id"] for r in rows]
+    qv = np.array([[float(x) for x in r["qv"]] for r in rows],
+                  dtype=np.float64)
+    if len(rows):
+        qt = pq_arrow.query_table(pq_arrow.np_rotate(qv, rotation), books)
+    else:
+        qt = np.zeros((0, len(books), len(books[0])))
+    scored = pq_arrow.adc_scan(enc, qids, q.schema["query_id"].dataType,
+                               flat_qt=qt)
+    return _pq_rank_tail(scored, q, k, refine=refine, vecs=vecs)
 
-        from . import pq_arrow
 
-        rows = q.collect()
-        qids = [r["query_id"] for r in rows]
-        qv = _np.array([[float(x) for x in r["qv"]] for r in rows],
-                       dtype=_np.float64)
-        if len(rows):
-            qt = pq_arrow.query_table(pq_arrow.np_rotate(qv, rotation),
-                                      books)
-        else:
-            qt = _np.zeros((0, len(books), len(books[0])))
-        scored = pq_arrow.adc_scan(enc, qids,
-                                   q.schema["query_id"].dataType,
-                                   flat_qt=qt)
-        return _pq_rank_tail(scored, q, k, refine=refine, vecs=vecs)
+def _pq_adc_rank_fold(enc: DataFrame, q: DataFrame,
+                      books: list[list[list[float]]], k: int, *,
+                      refine: int | None, vecs: DataFrame | None,
+                      rotation: tuple[list[int], list[int]] | None = None
+                      ) -> DataFrame:
+    """Reference form of ``_pq_adc_rank``: broadcast query table and
+    a lookup-sum column expression. Parity tests swap it in."""
     qq = _apply_rotation(q, "qv", rotation)
     qt = _pq_query_table(qq, books)
     scored = (enc.crossJoin(F.broadcast(qt))
@@ -2065,14 +1885,19 @@ def _ivfpq_encode(df: DataFrame, cents, books, *, residual: bool,
     an isometry of its input anyway; keeping it raw keeps the
     directory layout identical with and without rotation).
 
-    Physical form: the Arrow kernel by default (see ``pq_encode``);
-    ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the expression path."""
-    if _pq_kernel() == "arrow":
-        from . import pq_arrow
+    Physical form: the Arrow kernel ``pq_arrow.encode_ivfpq``, the
+    exact twin of ``_ivfpq_encode_fold``."""
+    return pq_arrow.encode_ivfpq(df, cents, books, residual=residual,
+                                 rotation=rotation, id_col=id_col,
+                                 vec_col=vec_col)
 
-        return pq_arrow.encode_ivfpq(df, cents, books, residual=residual,
-                                     rotation=rotation, id_col=id_col,
-                                     vec_col=vec_col)
+
+def _ivfpq_encode_fold(df: DataFrame, cents, books, *, residual: bool,
+                       rotation: tuple[list[int], list[int]] | None = None,
+                       id_col: str = "vec_id",
+                       vec_col: str = "embedding") -> DataFrame:
+    """Reference form of ``_ivfpq_encode`` as column expressions.
+    Parity tests swap it in."""
     e = df.select(F.col(id_col).alias("vec_id"),
                   as_double_array(F.col(vec_col)).alias("vec"))
     e = (_attach_centroids(e, cents)
@@ -2225,8 +2050,6 @@ def _pool_quantization_error(embeddings: DataFrame,
     L2 to the nearest codeword — the objective ``residual="auto"``
     compares. Driver-bounded numpy over the same pool
     ``pq_train_codebooks`` trains on."""
-    import numpy as np
-
     m = len(books)
     dsub = len(books[0][0])
     sample = (
@@ -2355,43 +2178,46 @@ def _ivfpq_probe(enc: DataFrame, q: DataFrame, cents, books, k: int, *,
     (after the residual subtraction when both are set), mirroring
     ``_ivfpq_encode``; cell selection and refine stay raw.
 
-    Physical form: the Arrow ADC-scan kernel by default — probe cells
-    AND per-(query, cell) distance tables are computed driver-side
-    from the collected query batch (the same boundedness as the former
-    broadcast; the partition-pruning ``cell IN`` filter on ``enc`` is
-    unchanged), the scan runs vectorized (``pq_arrow.adc_scan``, exact
-    twin). ``SPARK_GRAFT_PQ_KERNEL=fold`` restores the expression
-    form."""
-    if _pq_kernel() == "arrow":
-        import numpy as _np
+    Physical form: the Arrow ADC-scan kernel — probe cells AND
+    per-(query, cell) distance tables are computed driver-side from
+    the collected query batch (the same boundedness as a broadcast;
+    the partition-pruning ``cell IN`` filter on ``enc`` is kept), and
+    the scan runs vectorized (``pq_arrow.adc_scan``, exact twin of
+    ``_ivfpq_probe_fold``)."""
+    rows = q.collect()
+    qids = [r["query_id"] for r in rows]
+    qv = np.array([[float(x) for x in r["qv"]] for r in rows],
+                  dtype=np.float64)
+    if not len(rows):
+        return _pq_rank_tail(
+            pq_arrow.adc_scan(enc, [], q.schema["query_id"].dataType,
+                              cell_tables={}),
+            q, k, refine=refine, vecs=vecs)
+    probes = pq_arrow.select_probe_cells(qv, cents, nprobe)
+    probe_cells = sorted({c for ps in probes for c in ps})
+    enc = enc.filter(F.col("cell").isin(probe_cells))
+    C = np.asarray(cents, dtype=np.float64)
+    cell_tables = {}
+    for c in probe_cells:
+        qpos = np.array([i for i, ps in enumerate(probes) if c in ps])
+        sub = qv[qpos]
+        if residual:
+            sub = sub - C[c]
+        sub = pq_arrow.np_rotate(sub, rotation)
+        cell_tables[c] = (qpos, pq_arrow.query_table(sub, books))
+    scored = pq_arrow.adc_scan(enc, qids, q.schema["query_id"].dataType,
+                               cell_tables=cell_tables)
+    return _pq_rank_tail(scored, q, k, refine=refine, vecs=vecs)
 
-        from . import pq_arrow
 
-        rows = q.collect()
-        qids = [r["query_id"] for r in rows]
-        qv = _np.array([[float(x) for x in r["qv"]] for r in rows],
-                       dtype=_np.float64)
-        if not len(rows):
-            return _pq_rank_tail(
-                pq_arrow.adc_scan(enc, [], q.schema["query_id"].dataType,
-                                  cell_tables={}),
-                q, k, refine=refine, vecs=vecs)
-        probes = pq_arrow.select_probe_cells(qv, cents, nprobe)
-        probe_cells = sorted({c for ps in probes for c in ps})
-        enc = enc.filter(F.col("cell").isin(probe_cells))
-        C = _np.asarray(cents, dtype=_np.float64)
-        cell_tables = {}
-        for c in probe_cells:
-            qpos = _np.array([i for i, ps in enumerate(probes) if c in ps])
-            sub = qv[qpos]
-            if residual:
-                sub = sub - C[c]
-            sub = pq_arrow.np_rotate(sub, rotation)
-            cell_tables[c] = (qpos, pq_arrow.query_table(sub, books))
-        scored = pq_arrow.adc_scan(enc, qids,
-                                   q.schema["query_id"].dataType,
-                                   cell_tables=cell_tables)
-        return _pq_rank_tail(scored, q, k, refine=refine, vecs=vecs)
+def _ivfpq_probe_fold(enc: DataFrame, q: DataFrame, cents, books, k: int,
+                      *, nprobe: int, refine: int | None,
+                      vecs: DataFrame | None, residual: bool = False,
+                      rotation: tuple[list[int], list[int]] | None = None
+                      ) -> DataFrame:
+    """Reference form of ``_ivfpq_probe``: probe selection, residual
+    and distance tables as column expressions, joined on cell. Parity
+    tests swap it in."""
     qc = (_attach_centroids(q, cents)
           .withColumn("_scores", _cell_scores(F.col("qv"))))
     idx = F.sequence(F.lit(0), F.lit(len(cents) - 1))
@@ -2731,14 +2557,16 @@ def sq8_encode_col(vec: Column, mins: Column, maxs: Column) -> Column:
 
 def _sq8_encode_df(df: DataFrame, mins, maxs, *, id_col: str,
                    vec_col: str) -> DataFrame:
-    """(vec_id, codes) under the frozen grid — Arrow kernel by default
-    (``pq_arrow.encode_sq8``, exact same IEEE ops), the broadcast-grid
-    fold expression under ``SPARK_GRAFT_PQ_KERNEL=fold``."""
-    if _pq_kernel() == "arrow":
-        from . import pq_arrow
+    """(vec_id, codes) under the frozen grid — the Arrow kernel
+    ``pq_arrow.encode_sq8``, the same IEEE ops as ``_sq8_encode_fold``."""
+    return pq_arrow.encode_sq8(df, mins, maxs, id_col=id_col,
+                               vec_col=vec_col)
 
-        return pq_arrow.encode_sq8(df, mins, maxs, id_col=id_col,
-                                   vec_col=vec_col)
+
+def _sq8_encode_fold(df: DataFrame, mins, maxs, *, id_col: str,
+                     vec_col: str) -> DataFrame:
+    """Reference form of ``_sq8_encode_df``: the broadcast-grid
+    ``sq8_encode_col`` expression. Parity tests swap it in."""
     return _sq8_attach_grid(
         df.select(F.col(id_col).alias("vec_id"),
                   as_double_array(F.col(vec_col)).alias("_v")),
@@ -2771,6 +2599,50 @@ def sq8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10, *,
                      query_vec_col=query_vec_col, queries_raw=queries)
 
 
+def _sq8_scores(codes_table: DataFrame, queries: DataFrame,
+                train: tuple[list[float], list[float]], *,
+                query_id_col: str, query_vec_col: str) -> DataFrame:
+    """(query_id, vec_id, sq8_dist) for every (query, code row): the
+    query codes are computed driver-side from the collected query
+    batch and the integer scan runs in the Arrow kernel
+    (``pq_arrow.int_scan``, exact twin of ``_sq8_scores_fold``)."""
+    mins, maxs = train
+    qrows = (queries.select(F.col(query_id_col).alias("query_id"),
+                            as_double_array(F.col(query_vec_col))
+                            .alias("_qv")).collect())
+    qv = np.array([[float(x) for x in r["_qv"]] for r in qrows],
+                  dtype=np.float64)
+    qcodes = (pq_arrow.sq8_codes_np(qv, mins, maxs) if len(qrows)
+              else np.zeros((0, len(mins)), dtype=np.int64))
+    return pq_arrow.int_scan(
+        codes_table, [r["query_id"] for r in qrows], qcodes,
+        queries.select(F.col(query_id_col).alias("q")).schema["q"]
+        .dataType, code_col="codes", out_col="sq8_dist", metric="sq8")
+
+
+def _sq8_scores_fold(codes_table: DataFrame, queries: DataFrame,
+                     train: tuple[list[float], list[float]], *,
+                     query_id_col: str, query_vec_col: str) -> DataFrame:
+    """Reference form of ``_sq8_scores``: broadcast query codes and an
+    integer fold expression. Parity tests swap it in."""
+    mins, maxs = train
+    q = _sq8_attach_grid(
+        queries.select(F.col(query_id_col).alias("query_id"),
+                       as_double_array(F.col(query_vec_col))
+                       .alias("_qv")),
+        mins, maxs
+    ).select("query_id",
+             sq8_encode_col(F.col("_qv"), F.col("_sq_mins"),
+                            F.col("_sq_maxs")).alias("qcodes"))
+    return codes_table.crossJoin(F.broadcast(q)).select(
+        "query_id", "vec_id",
+        F.aggregate(
+            F.zip_with(F.col("codes"), F.col("qcodes"),
+                       lambda a, b: ((a - b) * (a - b)).cast("long")),
+            F.lit(0).cast("long"), lambda acc, x: acc + x)
+        .alias("sq8_dist"))
+
+
 def _sq8_rank(codes_table: DataFrame, queries: DataFrame, k: int, *,
               train: tuple[list[float], list[float]],
               refine: int | None, vecs: DataFrame | None,
@@ -2780,41 +2652,11 @@ def _sq8_rank(codes_table: DataFrame, queries: DataFrame, k: int, *,
     """Shared rank body for the one-shot and persisted-index SQ8 forms:
     (codes_table: vec_id, codes) × broadcast query codes → integer
     distance window, optional exact-cosine refine."""
-    mins, maxs = train
     if queries_raw is None:
         queries_raw = queries
-    if _pq_kernel() == "arrow":
-        import numpy as _np
-
-        from . import pq_arrow
-
-        qrows = (queries.select(F.col(query_id_col).alias("query_id"),
-                                as_double_array(F.col(query_vec_col))
-                                .alias("_qv")).collect())
-        qv = _np.array([[float(x) for x in r["_qv"]] for r in qrows],
-                       dtype=_np.float64)
-        qcodes = (pq_arrow.sq8_codes_np(qv, mins, maxs) if len(qrows)
-                  else _np.zeros((0, len(mins)), dtype=_np.int64))
-        scored = pq_arrow.int_scan(
-            codes_table, [r["query_id"] for r in qrows], qcodes,
-            queries.select(F.col(query_id_col).alias("q")).schema["q"]
-            .dataType, code_col="codes", out_col="sq8_dist", metric="sq8")
-    else:
-        q = _sq8_attach_grid(
-            queries.select(F.col(query_id_col).alias("query_id"),
-                           as_double_array(F.col(query_vec_col))
-                           .alias("_qv")),
-            mins, maxs
-        ).select("query_id",
-                 sq8_encode_col(F.col("_qv"), F.col("_sq_mins"),
-                                F.col("_sq_maxs")).alias("qcodes"))
-        scored = codes_table.crossJoin(F.broadcast(q)).select(
-            "query_id", "vec_id",
-            F.aggregate(
-                F.zip_with(F.col("codes"), F.col("qcodes"),
-                           lambda a, b: ((a - b) * (a - b)).cast("long")),
-                F.lit(0).cast("long"), lambda acc, x: acc + x)
-            .alias("sq8_dist"))
+    scored = _sq8_scores(codes_table, queries, train,
+                         query_id_col=query_id_col,
+                         query_vec_col=query_vec_col)
     w = Window.partitionBy("query_id").orderBy("sq8_dist", "vec_id")
     if refine is None:
         return (scored.withColumn("rank", F.row_number().over(w))
@@ -2870,7 +2712,6 @@ def cosine_topk_gemm(embeddings: DataFrame, queries: DataFrame,
     are type-agnostic (long / string / UUID-as-string): the output
     schema derives from the input schemas and ids are never coerced.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 

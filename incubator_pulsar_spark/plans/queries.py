@@ -1511,11 +1511,9 @@ def semdedup_embeddings(spark, sf_dir):
     within-cell pair join in SQL — every verdict and every ``dup_of``
     id is exact-checked, not just the keep counts."""
     emb = _t(spark, sf_dir, "embeddings")
-    # kernel="fold" pins the oracle gate surface: the SQL replays the
-    # fold's BLAS-free pair dots; the gemm kernel is pytest-parity-
-    # locked against this form (VERDICT r11 #3)
-    return similarity.semantic_dedup(emb, threshold=0.3, n_cells=8,
-                                     kernel="fold")
+    # semantic_dedup's one kernel is the fold pair join, whose
+    # BLAS-free pair dots the SQL replays
+    return similarity.semantic_dedup(emb, threshold=0.3, n_cells=8)
 
 
 def _semdedup_sql(n_cells: int = 8, threshold: float = 0.3) -> str:
@@ -1645,13 +1643,10 @@ def knn_graph_embeddings(spark, sf_dir):
     measured quadratic (3.3 s -> 27.4 s on 4x vectors); 16 cells holds
     the per-cell load flat across the gate SFs."""
     emb = _t(spark, sf_dir, "embeddings")
-    # kernel="exact": the gemm cogroup shape scoring with the fold's
-    # bit-exact summation tree + round_spark (optimization r14 — the
-    # pq_arrow exact-twin discipline; exact==fold parity-locked in
-    # tests/test_round14_opt.py). The old fold form shipped both
-    # vectors through Arrow once per candidate PAIR.
-    return similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2,
-                                kernel="exact")
+    # knn_graph's two-stage scorer returns the fold pair join's rows
+    # bit for bit (scorer == fold reference locked at this config in
+    # tests/test_kernel_parity.py), so the SQL replays the fold
+    return similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2)
 
 
 def _knn_graph_sql(n_cells: int = 16, nprobe: int = 2, k: int = 5) -> str:
@@ -8360,8 +8355,10 @@ def gini_orders(spark, sf_dir):
 
 # exact HUGEINT half-up round-6 (num·10⁶ and den exceed 2⁵³, so a
 # cast-to-double path depends on the engine's hugeint→double
-# rounding — version-fragile); no DECIMAL output column (the r13
-# driver-hash lesson). The final /1e6 is IEEE-exact.
+# rounding — version-fragile); ``//`` truncates toward zero like
+# Spark's ``div``, so the ±d term is sign-aware (concentration.gini);
+# no DECIMAL output column (its value hash is engine-dependent). The
+# final /1e6 is IEEE-exact.
 GINI_SQL = """
 WITH s AS (
   SELECT c_mktsegment AS segment,
@@ -8377,12 +8374,13 @@ a AS (SELECT segment, COUNT(*) AS n,
              SUM(CAST(i AS HUGEINT) * x4) AS w
       FROM r GROUP BY segment)
 SELECT segment, CAST(n AS BIGINT) AS n, sum_value4,
-       CASE WHEN n * s4 <> 0 THEN
-         CAST((2 * (2 * w - (n + 1) * s4) * 1000000
-               + CAST(n AS HUGEINT) * s4)
-              // (2 * CAST(n AS HUGEINT) * s4) AS DOUBLE) / 1000000.0
+       CASE WHEN d <> 0 THEN
+         CAST((2 * num6 + CASE WHEN (num6 < 0) = (d < 0) THEN d ELSE -d END)
+              // (2 * d) AS DOUBLE) / 1000000.0
        END AS gini
-FROM a
+FROM (SELECT *, (2 * w - (n + 1) * s4) * 1000000 AS num6,
+             CAST(n AS HUGEINT) * s4 AS d
+      FROM a)
 """
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F  # noqa: F401  (parity with suite style)
@@ -51,9 +51,15 @@ def test_interval_coverage_matches_sweep_model(spark, iv):
         len(keep), sum(e - s for s, e in keep), covered, peak)
 
 
-@given(vals=st.lists(st.integers(0, 1000), min_size=1, max_size=25))
+@given(vals=st.lists(st.integers(-1000, 1000), min_size=1, max_size=25))
+# negative sums give a negative quotient, where a truncating div with
+# a fixed +den term rounds toward zero (exact -1.0 and -0.333333)
+@example(vals=[-3, 1])
+@example(vals=[-5, -2, -1])
 @SLOW
 def test_gini_matches_rank_identity_model(spark, vals):
+    from decimal import ROUND_HALF_UP, Decimal, localcontext
+
     from incubator_pulsar_spark.functions import concentration
 
     df = spark.createDataFrame([("g", float(v)) for v in vals],
@@ -66,11 +72,14 @@ def test_gini_matches_rank_identity_model(spark, vals):
     if s == 0:
         assert r.gini is None
     else:
-        # exact integer half-up round-6 (scale-invariant, so the
-        # model's unit values match the engine's 1e-4 units)
+        # exact decimal round-6, half away from zero (scale-invariant,
+        # so the model's unit values match the engine's 1e-4 units)
         num, den = 2 * w - (n + 1) * s, n * s
-        g6 = (2 * num * 10**6 + den) // (2 * den)
-        assert r.gini == g6 / 1e6
+        with localcontext() as ctx:
+            ctx.prec = 60
+            g6 = (Decimal(num * 10**6) / Decimal(den)).quantize(
+                Decimal(1), rounding=ROUND_HALF_UP)
+        assert r.gini == int(g6) / 1e6
 
 
 @given(rows=st.lists(st.tuples(st.sampled_from("abcd"),

@@ -419,72 +419,20 @@ class TestDelayedCheckpointMigration:
         assert rel == [1]  # seq 2 withheld
 
 
-class TestGemmKernelAdoption:
-    """VERDICT r11 #3: the corpus-x-corpus operators route their pair
-    dots through a per-cell BLAS kernel; the fold form stays the
-    oracle-gate surface. These locks assert bit-identical OUTPUT."""
+class TestSemdedupVerdicts:
+    """semantic_dedup's single kernel (the fold pair join) on a
+    hand-built cell: exact duplicates must point at the SMALLEST id."""
 
-    def test_knn_graph_gemm_matches_fold_sf0001(self, spark):
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        fold = similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2,
-                                    kernel="fold")
-        gemm = similarity.knn_graph(emb, k=5, n_cells=16, nprobe=2,
-                                    kernel="gemm")
-        f = sorted(map(tuple, fold.collect()))
-        g = sorted(map(tuple, gemm.collect()))
-        assert f == g
-
-    def test_knn_graph_gemm_matches_fold_pruned(self, spark):
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        fold = similarity.knn_graph(emb, k=3, n_cells=8, nprobe=3,
-                                    prune=True, kernel="fold")
-        gemm = similarity.knn_graph(emb, k=3, n_cells=8, nprobe=3,
-                                    prune=True, kernel="gemm")
-        assert sorted(map(tuple, fold.collect())) == \
-            sorted(map(tuple, gemm.collect()))
-
-    def test_semdedup_gemm_matches_fold(self, spark):
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        fold = similarity.semantic_dedup(emb, threshold=0.3, n_cells=8,
-                                         kernel="fold")
-        gemm = similarity.semantic_dedup(emb, threshold=0.3, n_cells=8,
-                                         kernel="gemm")
-        assert sorted(map(tuple, fold.collect())) == \
-            sorted(map(tuple, gemm.collect()))
-
-    def test_semdedup_gemm_boundary_ties(self, spark):
-        # hand-built cell with exact-duplicate vectors (cos 1.0) and an
-        # exactly-at-threshold pair: the dup must point at the SMALLEST
-        # id in both kernels
+    def test_exact_duplicates_point_at_smallest_id(self, spark):
         rows = [
             (1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0]),
             (4, [0.0, 1.0]),
         ]
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        for kern in ("fold", "gemm"):
-            out = {r.vec_id: (r.is_kept, r.dup_of)
-                   for r in similarity.semantic_dedup(
-                       emb, threshold=0.99, n_cells=2,
-                       kernel=kern).collect()}
-            assert out[1] == (1, -1)
-            assert out[2] == (0, 1)
-            assert out[3] == (0, 1)
-            assert out[4] == (1, -1)
-
-    def test_knn_graph_gemm_string_ids(self, spark):
-        import random
-
-        rng = random.Random(3)
-        emb = spark.createDataFrame(
-            [(f"v{i:02d}", [rng.uniform(-1, 1) for _ in range(8)])
-             for i in range(50)],
-            "vec_id string, embedding array<double>")
-        fold = similarity.knn_graph(emb, k=3, n_cells=4, nprobe=2,
-                                    kernel="fold")
-        gemm = similarity.knn_graph(emb, k=3, n_cells=4, nprobe=2,
-                                    kernel="gemm")
-        assert sorted(map(tuple, fold.collect())) == \
-            sorted(map(tuple, gemm.collect()))
+        out = {r.vec_id: (r.is_kept, r.dup_of)
+               for r in similarity.semantic_dedup(
+                   emb, threshold=0.99, n_cells=2).collect()}
+        assert out == {1: (1, -1), 2: (0, 1), 3: (0, 1), 4: (1, -1)}
 
 
 class TestScd2History:

@@ -488,54 +488,24 @@ class TestRankTieGuards:
             [(1, 2), (2, 2)]
 
 
-class TestSemdedupShardedKernel:
-    """VERDICT r12 #7 / ROADMAP #4: the cell-sharded gemm variant must
-    be verdict-identical to fold and plain gemm (measured numbers in
-    SCALING.md — NOT adopted as default: fold still wins at local
-    corpus sizes; sharding is the documented recovery for the plain
-    gemm kernel's n_cells-task parallelism collapse)."""
+class TestSemdedupVerdicts:
+    """semantic_dedup's single kernel at the threshold boundary."""
 
-    def test_sharded_matches_fold_and_gemm(self, spark):
-        from incubator_pulsar_spark.functions import similarity
-
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet")
-        f = sorted(map(tuple, similarity.semantic_dedup(
-            emb, threshold=0.3, n_cells=8, kernel="fold").collect()))
-        g = sorted(map(tuple, similarity.semantic_dedup(
-            emb, threshold=0.3, n_cells=8, kernel="gemm").collect()))
-        s = sorted(map(tuple, similarity.semantic_dedup(
-            emb, threshold=0.3, n_cells=8, kernel="gemm_sharded",
-            n_shards=4).collect()))
-        assert f == g == s
-
-    def test_sharded_boundary_ties(self, spark):
-        # the hand-built boundary-tie cell from the r12 gemm lock:
-        # exact duplicates + an exactly-at-threshold pair must resolve
-        # to the SAME smallest-id dup_of in the sharded kernel
+    def test_threshold_pair_points_at_smallest_id(self, spark):
+        # exact duplicates plus a pair whose cosine rounds to exactly
+        # the threshold (0.8): every dup points at the SMALLEST
+        # triggering id, and an at-threshold pair counts as a dup
         rows = [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0]),
                 (4, [0.6, 0.8]), (5, [0.0, 1.0])]
         from incubator_pulsar_spark.functions import similarity
 
         emb = spark.createDataFrame(
             rows, "vec_id long, embedding array<double>")
-        f = sorted(map(tuple, similarity.semantic_dedup(
-            emb, threshold=0.8, n_cells=1, kernel="fold").collect()))
-        s = sorted(map(tuple, similarity.semantic_dedup(
-            emb, threshold=0.8, n_cells=1, kernel="gemm_sharded",
-            n_shards=3).collect()))
-        assert f == s
-
-    def test_more_shards_than_rows(self, spark):
-        from incubator_pulsar_spark.functions import similarity
-
-        emb = spark.createDataFrame(
-            [(1, [1.0, 0.0]), (2, [1.0, 0.0])],
-            "vec_id long, embedding array<double>")
-        s = {r.vec_id: r.is_kept for r in similarity.semantic_dedup(
-            emb, threshold=0.9, n_cells=1, kernel="gemm_sharded",
-            n_shards=16).collect()}
-        assert s == {1: 1, 2: 0}
+        out = {r.vec_id: (r.is_kept, r.dup_of)
+               for r in similarity.semantic_dedup(
+                   emb, threshold=0.8, n_cells=1).collect()}
+        assert out == {1: (1, -1), 2: (0, 1), 3: (0, 1), 4: (1, -1),
+                       5: (0, 4)}
 
 
 class TestBehaviorOperators:

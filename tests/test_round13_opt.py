@@ -1,12 +1,13 @@
 """Round-13 optimization locks: the Arrow PQ kernels are EXACT twins
-of the fold-expression forms they replaced (pq_arrow vs the
-SPARK_GRAFT_PQ_KERNEL=fold reference path)."""
+of the fold-expression forms they replaced (pq_arrow vs the private
+``*_fold`` reference functions, swapped in with ``monkeypatch``)."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from incubator_pulsar_spark.functions import pq_arrow
 from incubator_pulsar_spark.functions import similarity as S
 from incubator_pulsar_spark.session import get_spark
 
@@ -38,15 +39,28 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _both(fn):
-    os.environ["SPARK_GRAFT_PQ_KERNEL"] = "arrow"
-    try:
+# production kernel -> its reference form; _both swaps in all of them
+_REFERENCE = [
+    (S, "pq_encode", S._pq_encode_fold),
+    (S, "_ivfpq_encode", S._ivfpq_encode_fold),
+    (S, "_pq_adc_rank", S._pq_adc_rank_fold),
+    (S, "_ivfpq_probe", S._ivfpq_probe_fold),
+    (S, "_sq8_encode_df", S._sq8_encode_fold),
+    (S, "_sq8_scores", S._sq8_scores_fold),
+    (pq_arrow, "assign_clusters", S._assign_clusters_fold),
+]
+
+
+@pytest.fixture
+def _both(monkeypatch):
+    def run(fn):
         a = _rows(fn())
-        os.environ["SPARK_GRAFT_PQ_KERNEL"] = "fold"
-        b = _rows(fn())
-    finally:
-        os.environ.pop("SPARK_GRAFT_PQ_KERNEL", None)
-    return a, b
+        with monkeypatch.context() as m:
+            for mod, name, ref in _REFERENCE:
+                m.setattr(mod, name, ref)
+            b = _rows(fn())
+        return a, b
+    return run
 
 
 def _q(emb):
@@ -55,7 +69,7 @@ def _q(emb):
                     S.as_double_array(F.col("embedding")).alias("qv")))
 
 
-def test_encode_parity(emb, trained):
+def test_encode_parity(emb, trained, _both):
     cents, books = trained
     rot = S.pq_rotation(64)
     for kw in ({}, {"rotation": rot}):
@@ -64,7 +78,7 @@ def test_encode_parity(emb, trained):
         assert a == b and len(a) > 0
 
 
-def test_ivfpq_encode_parity(emb, trained):
+def test_ivfpq_encode_parity(emb, trained, _both):
     cents, books = trained
     rot = S.pq_rotation(64)
     for kw in ({"residual": False}, {"residual": True, "rotation": rot}):
@@ -74,7 +88,7 @@ def test_ivfpq_encode_parity(emb, trained):
         assert a == b and len(a) > 0
 
 
-def test_adc_rank_parity(emb, trained):
+def test_adc_rank_parity(emb, trained, _both):
     _, books = trained
     q = _q(emb)
     enc = S.pq_encode(emb, books)
@@ -88,7 +102,7 @@ def test_adc_rank_parity(emb, trained):
     assert a == b and len(a) > 0
 
 
-def test_ivfpq_probe_parity(emb, trained):
+def test_ivfpq_probe_parity(emb, trained, _both):
     cents, books = trained
     rot = S.pq_rotation(64)
     q = _q(emb)
@@ -134,7 +148,7 @@ def test_round_spark_twin():
     assert got9 == want9
 
 
-def test_sq8_parity(emb):
+def test_sq8_parity(emb, _both):
     """SQ8 arrow scan + encode == the fold expression forms."""
     a, b = _both(lambda: S.sq8_topk(
         emb, emb.filter(F.col("vec_id") < 5)
@@ -144,7 +158,7 @@ def test_sq8_parity(emb):
     assert a == b and len(a) > 0
 
 
-def test_kmeans_parity(emb):
+def test_kmeans_parity(emb, _both):
     """kmeans arrow assignment == the fold expression assignment."""
     a, b = _both(lambda: S.kmeans_embeddings(emb, k=4, n_iter=2))
     assert a == b and len(a) > 0

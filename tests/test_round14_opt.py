@@ -121,22 +121,6 @@ def test_ln_snap_is_boundary_safe_for_small_degrees():
     assert worst > 1e-4
 
 
-def test_knn_graph_exact_kernel_matches_fold(spark):
-    """kernel='exact' (gemm cogroup shape + fold summation tree +
-    round_spark) must reproduce the fold form bit-for-bit — the gate
-    pins 'exact', the oracle replays 'fold'."""
-    from incubator_pulsar_spark.functions import similarity
-    from incubator_pulsar_spark.session import read_table
-
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    fold = sorted(map(tuple, similarity.knn_graph(
-        emb, k=5, n_cells=8, nprobe=2, kernel="fold").collect()))
-    exact = sorted(map(tuple, similarity.knn_graph(
-        emb, k=5, n_cells=8, nprobe=2, kernel="exact").collect()))
-    assert fold == exact
-    assert len(fold) > 0
-
-
 def test_cusum_integer_units_match_decimal_form(spark):
     """The 1e-4-unit integer CUSUM equals the old decimal statistic
     times 1e4 on values with <= 4 decimals."""
