@@ -247,12 +247,12 @@ def rfm_segments(df: DataFrame, *, entity_col: str, ts_col: str = "ts",
     flip downstream if a "5 is best" convention is wanted.
 
     Epoch extraction is SESSION-TIMEZONE-PROOF: the NTZ timestamp is
-    decomposed into date-diff days + hour/minute/second parts
-    (second granularity — sub-second activity logs should pre-floor),
-    never CAST to TIMESTAMP, so a non-UTC driver session cannot shift
-    recency (an NTZ→TIMESTAMP cast reinterprets in the session zone,
-    and DST makes the shift date-dependent — it does NOT cancel in
-    anchor−last). Monetary is integer 1e-4 units (BIGINT — the
+    decomposed into date-diff days + hour/minute parts + the seconds
+    field with its fraction (``date_part('SECOND')``, truncated to
+    whole milliseconds), never CAST to TIMESTAMP, so a non-UTC Spark
+    session cannot shift recency (an NTZ→TIMESTAMP cast reinterprets
+    in the session zone, and DST makes the shift date-dependent — it
+    does NOT cancel in anchor−last). Monetary is integer 1e-4 units (BIGINT — the
     twap/acf ingest rule; driver-green outputs are int/double only,
     never DECIMAL).
 
@@ -269,7 +269,7 @@ def rfm_segments(df: DataFrame, *, entity_col: str, ts_col: str = "ts",
           * 86_400_000
           + F.hour(c).cast("long") * 3_600_000
           + F.minute(c).cast("long") * 60_000
-          + F.second(c).cast("long") * 1_000)
+          + (F.date_part(F.lit("SECOND"), c) * 1_000).cast("long"))
     x4 = (F.col(value_col).cast("decimal(18,4)") * 10000).cast("long")
     per = (df.select(F.col(entity_col).alias("entity"), ms.alias("_ms"),
                      x4.alias("_v4"))
@@ -298,6 +298,11 @@ def rfm_segments(df: DataFrame, *, entity_col: str, ts_col: str = "ts",
                     .cast("int").alias("rfm_code")))
 
 
+# the most rows a cusum_max group may hold: _n and _k enter the exact
+# cross products as decimal(7,0)
+CUSUM_MAX_ROWS = 9_999_999
+
+
 def cusum_max(df: DataFrame, group_cols: list[str], *,
               order_col: str = "ts", value_col: str = "value",
               tiebreak_col: str | None = None) -> DataFrame:
@@ -322,9 +327,11 @@ def cusum_max(df: DataFrame, group_cols: list[str], *,
     window; every later window reuses the same partitioning).
 
     Overflow budget: N·S_k < 10³⁷ holds to ~10⁷ rows × 10⁵-scale
-    values per group; the BIGINT output caps at ~9·10¹⁸ (≈10⁵ rows ×
-    10⁹ quarter-unit group sums — raise to a micro→milli unit ingest
-    before hitting it).
+    values per group; a group past ``CUSUM_MAX_ROWS`` (the
+    decimal(7,0) envelope of N and k) raises instead of going NULL;
+    the BIGINT output caps at ~9·10¹⁸ (≈10⁵ rows × 10⁹ quarter-unit
+    group sums — raise to a micro→milli unit ingest before hitting
+    it).
 
     Output: group_cols + (n BIGINT, max_stat4 BIGINT — the statistic
     in 1e-4 units, argmax_k BIGINT 1-based).
@@ -343,8 +350,11 @@ def cusum_max(df: DataFrame, group_cols: list[str], *,
             .withColumn("_n", F.count(F.lit(1)).over(wg))
             .withColumn("_sn", F.sum("_v4").over(wg)
                         .cast("decimal(30,0)")))
+    n = F.when(F.col("_n") > CUSUM_MAX_ROWS, F.raise_error(F.lit(
+        f"cusum_max: a group holds more than {CUSUM_MAX_ROWS} rows, past"
+        " the exact decimal(7,0) envelope"))).otherwise(F.col("_n"))
     stat = F.abs(
-        F.col("_n").cast("decimal(7,0)") * F.col("_sk")
+        n.cast("decimal(7,0)") * F.col("_sk")
         - F.col("_k").cast("decimal(7,0)") * F.col("_sn"))
     scored = (rows.withColumn("_stat", stat)
               .withColumn("_mx", F.max("_stat").over(wg)))

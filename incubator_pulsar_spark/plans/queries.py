@@ -177,18 +177,21 @@ def _stream_shuffle_partitions(spark, n_keys: int) -> int:
 STREAM_GATE_TIMEOUT_S = 600
 
 
-def _run_stream_gate(spark, out, sink: str, ck: str, parts: int) -> None:
-    """Start + drain an availableNow gate stream with the stateful
-    shuffle width pinned to ``parts`` (the state-store partition count
-    is fixed by the conf at first batch and checkpointed; gates build
-    fresh checkpoints every run, so the narrow width is safe). The
-    session conf is restored after the drain. A drain that outlives
-    ``STREAM_GATE_TIMEOUT_S`` stops the query and raises: its sink is
-    partial, and a gate must never read it back as a result."""
+def _run_stream_gate(spark, build: Callable[[], DataFrame], sink: str,
+                     ck: str, parts: int) -> None:
+    """Build (``build()``), start and drain an availableNow gate stream
+    with the stateful shuffle width pinned to ``parts`` (the
+    state-store partition count is fixed by the conf at first batch
+    and checkpointed; gates build fresh checkpoints every run, so the
+    narrow width is safe). The pin covers the build too, because
+    ``keyed_fold`` sizes its key buckets from the width it sees then.
+    The session conf is restored after the drain. A drain that
+    outlives ``STREAM_GATE_TIMEOUT_S`` stops the query and raises: its
+    sink is partial, and a gate must never read it back as a result."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
-        q = (out.writeStream.format("parquet").option("path", sink)
+        q = (build().writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
         if not q.awaitTermination(STREAM_GATE_TIMEOUT_S):
@@ -231,7 +234,7 @@ def _replay_gate(spark, sf_dir, tag: str, rows: DataFrame, *, key: str,
     _write_band_files(banded, src, 2, F.md5(F.concat_ws("|", *shuffle)))
     stream = (spark.readStream.schema(rows.schema)
               .option("maxFilesPerTrigger", "1").parquet(src))
-    _run_stream_gate(spark, build(stream, lo, nk), sink, ck,
+    _run_stream_gate(spark, lambda: build(stream, lo, nk), sink, ck,
                      _stream_shuffle_partitions(spark, nk))
     return spark.read.parquet(sink)
 
@@ -7246,8 +7249,8 @@ def scd2_stream_events(spark, sf_dir):
     band's real rows are still buffered when it lands; the trailing
     no-data batch then fires the event-time timers and flushes every
     closed run — one fewer micro-batch than a separate sentinel
-    file). Keys pack into ~32-key composite state buckets
-    (state_buckets — the per-group Arrow machinery was ~0.9 s of
+    file). Keys pack into keyed_fold's state buckets, 8 per stateful
+    shuffle partition (the per-group Arrow machinery was ~0.9 s of
     every ~1.8 s batch at 1,500 per-key groups; a trivial-fn floor
     probe matched the full operator's wall time). The oracle is the
     batch SCD2 derivation restricted to CLOSED runs (valid_to NOT
@@ -7263,7 +7266,7 @@ def scd2_stream_events(spark, sf_dir):
         spark, sf_dir, "scd2stream", ev, key="key", order=F.unix_micros("ts"),
         shuffle=["key", F.col("ts").cast("string")],
         build=lambda s, lo, nk: scd2_stream_event_time(
-            s, delay="10 seconds", state_buckets=max(8, -(-int(nk) // 32))),
+            s, delay="10 seconds"),
         sentinel=lambda hi: spark.range(1).select(
             F.lit("\x00flush").alias("key"), F.lit("x").alias("value"),
             F.timestamp_micros(F.lit(hi + 3_600_000_000)).alias("ts")))

@@ -7,5 +7,10 @@ state. Everything here uses public Structured Streaming APIs only:
 file-source streams, watermarks, ``applyInPandasWithState``,
 ``foreachBatch``. The keyed-state operators of ``behavior``,
 ``interval`` and ``scd2`` are pure per-key steps; ``keyed.keyed_fold``
-owns their ``applyInPandasWithState`` plumbing once.
+owns their ``applyInPandasWithState`` plumbing once, with one grouping
+rule: keys pack into B = 8 × ``spark.sql.shuffle.partitions`` state
+buckets (taken from the session when the operator is built), so state
+rows and Arrow groups per micro-batch count buckets, not keys. A
+restart at a different shuffle width raises instead of re-bucketing
+the checkpoint's state.
 """

@@ -3,9 +3,9 @@
 
 Each of those operators is a pure per-key ``step`` plus its per-key
 state schema; ``keyed_fold`` owns the ``applyInPandasWithState``
-plumbing once: grouping (by key, or by key bucket), decoding and
-encoding state, splitting a group's rows by key, writing state only
-on a reported change, re-arming the event-time timer and building the
+plumbing once: grouping keys into buckets, decoding and encoding
+state, splitting a bucket's rows by key, writing state only on a
+reported change, re-arming the event-time timer and building the
 output frame.
 
 The step contract::
@@ -34,16 +34,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# buckets per stateful shuffle partition: enough that Murmur3's
+# bucket -> partition placement spreads the buckets evenly
+BUCKETS_PER_PARTITION = 8
+
 
 class FoldContext(NamedTuple):
     watermark_ms: int | None  # None unless the fold is event-time
 
 
 def _bucket_state_schema(state_schema: T.StructType) -> T.StructType:
-    """The bucketed state row: the bucket's keys (``ks``) plus, per
-    per-key field, one array co-indexed with ``ks``."""
+    """The bucket state row: the bucket count it was written under
+    (``n_buckets``), the bucket's keys (``ks``) plus, per per-key
+    field, one array co-indexed with ``ks``."""
     return T.StructType(
-        [T.StructField("ks", T.ArrayType(T.StringType()))]
+        [T.StructField("n_buckets", T.IntegerType()),
+         T.StructField("ks", T.ArrayType(T.StringType()))]
         + [T.StructField(f.name, T.ArrayType(f.dataType))
            for f in state_schema.fields])
 
@@ -55,27 +61,33 @@ def keyed_fold(
     out_schema: T.StructType,
     *,
     timeout: str = "NoTimeout",
-    buckets: int | None = None,
 ) -> DataFrame:
     """Fold ``step`` over ``keyed`` (a stream with a string ``key``
     column) in append mode.
 
-    ``buckets=None`` groups by key: one Arrow group and one state row
-    per key. ``buckets=B`` groups by ``pmod(xxhash64(key), B)``: one
-    state row per bucket holds every key of it as co-indexed arrays
-    (``_bucket_state_schema``), and each key still folds through the
-    same ``step`` — the output rows are identical, but a micro-batch
-    makes B Arrow invocations instead of one per key. In an event-time
-    fold a bucket invocation steps every held key too (its timer may
-    be due); a key whose watermark moved nothing reports no change.
+    Keys group by ``pmod(xxhash64(key), B)`` with B =
+    ``BUCKETS_PER_PARTITION`` × the session's
+    ``spark.sql.shuffle.partitions`` when the fold is built, so B
+    grows with the stateful width. One state row per bucket holds
+    every key of it as co-indexed arrays (``_bucket_state_schema``)
+    and each key folds through ``step`` on its own rows: a
+    micro-batch makes at most B Arrow invocations, not one per key,
+    and the progress's ``numRowsTotal``/``numRowsUpdated`` count
+    buckets. In an event-time fold a bucket invocation steps every
+    held key too (its timer may be due); a key whose watermark moved
+    nothing reports no change.
+
+    The state row stores B. A restart whose B differs from the
+    checkpoint's (the shuffle width changed) raises, naming both
+    counts, instead of splitting keys' state across buckets. The check
+    runs when a bucket holding state is invoked, so it cannot see a
+    batch whose keys all land in buckets the old B never had.
     """
     event_time = timeout == "EventTimeTimeout"
+    buckets = BUCKETS_PER_PARTITION * int(
+        keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     out_cols = out_schema.fieldNames()
     empty = pd.DataFrame(columns=keyed.columns)
-
-    def context(state) -> FoldContext:
-        return FoldContext(
-            state.getCurrentWatermarkMs() if event_time else None)
 
     def rows_of(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
         frames = list(pdfs)
@@ -83,46 +95,33 @@ def keyed_fold(
             return frames[0]
         return pd.concat(frames, ignore_index=True) if frames else empty
 
-    def finish(state, out: list, rearm: bool) -> Iterator[pd.DataFrame]:
-        if rearm:
-            # Spark demands timeout > watermark; a fired timer is
-            # consumed, so every invocation that still waits re-arms
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1000)
-        return iter([pd.DataFrame(out, columns=out_cols)] if out else [])
-
-    def per_key(key: Any, pdfs: Iterator[pd.DataFrame],
-                state) -> Iterator[pd.DataFrame]:
-        key_state, out, changed, rearm = step(
-            key[0], state.get if state.exists else None, rows_of(pdfs),
-            context(state))
-        if changed and key_state is not None:
-            state.update(key_state)
-        return finish(state, out, rearm)
-
-    if buckets is None:
-        return keyed.groupBy("key").applyInPandasWithState(
-            per_key, out_schema, state_schema, "append", timeout)
-
     def per_bucket(bucket: Any, pdfs: Iterator[pd.DataFrame],
                    state) -> Iterator[pd.DataFrame]:
         held: dict = {}
         if state.exists:
-            ks, *fields = state.get
+            n_buckets, ks, *fields = state.get
+            if n_buckets != buckets:
+                raise RuntimeError(
+                    f"keyed state was checkpointed in {n_buckets} buckets"
+                    f" but this query folds into {buckets} "
+                    f"({BUCKETS_PER_PARTITION} x "
+                    "spark.sql.shuffle.partitions); restart with the "
+                    "checkpoint's shuffle partitions or a new checkpoint")
             held = dict(zip(ks, zip(*fields)))
-        rows = rows_of(pdfs)
-        at: dict = {}
-        for i, k in enumerate(rows["key"]):
-            at.setdefault(k, []).append(i)
+        # one pass: a frame per key, NULL key included, in order of
+        # first appearance
+        at = {None if pd.isna(k) else k: g for k, g in rows_of(pdfs)
+              .groupby("key", sort=False, dropna=False)}
         todo = list(at)
         if event_time:
             todo += [k for k in held if k not in at]
-        ctx = context(state)
+        ctx = FoldContext(
+            state.getCurrentWatermarkMs() if event_time else None)
         out: list = []
         any_changed = any_rearm = False
         for k in todo:
             key_state, k_out, changed, rearm = step(
-                k, held.get(k), rows.take(at[k]) if k in at else empty,
-                ctx)
+                k, held.get(k), at.get(k, empty), ctx)
             out += k_out
             any_rearm |= rearm
             if changed:
@@ -131,12 +130,16 @@ def keyed_fold(
                     held[k] = key_state
         if any_changed and held:
             ks = list(held)
-            state.update((ks, *(list(f) for f in
-                                zip(*(held[k] for k in ks)))))
-        return finish(state, out, any_rearm)
+            state.update((buckets, ks, *(list(f) for f in
+                                         zip(*(held[k] for k in ks)))))
+        if any_rearm:
+            # Spark demands timeout > watermark; a fired timer is
+            # consumed, so every invocation that still waits re-arms
+            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1000)
+        return iter([pd.DataFrame(out, columns=out_cols)] if out else [])
 
     bucketed = keyed.withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(int(buckets))).cast("int"))
+        "_bkt", F.pmod(F.xxhash64("key"), F.lit(buckets)).cast("int"))
     return bucketed.groupBy("_bkt").applyInPandasWithState(
         per_bucket, out_schema, _bucket_state_schema(state_schema),
         "append", timeout)

@@ -109,7 +109,6 @@ def scd2_stream_event_time(
     value_col: str = "value",
     ts_col: str = "ts",
     delay: str = "10 seconds",
-    state_buckets: int | None = None,
 ) -> DataFrame:
     """Event-time streaming SCD2: watermark-closed change history that
     tolerates CROSS-BATCH disorder — the streaming twin of
@@ -140,10 +139,10 @@ def scd2_stream_event_time(
     tail is the compacted ``latest value`` view, available from the
     publish-order form or a batch ``scd2_history`` over the same log.
 
-    Rows older than the frontier that still reach the function (Spark
-    already drops rows below the watermark before the operator) are
-    dropped and counted in ``n_dropped_late``, carried on every
-    emitted row (cumulative per key).
+    Rows older than the frontier (rows below the watermark still
+    reach the operator) are dropped and counted in
+    ``n_dropped_late``, carried on every emitted row (cumulative per
+    key).
 
     Output: (key, value, valid_from, valid_to, version,
     n_dropped_late); valid_from/valid_to are unix MICROsecond longs
@@ -152,19 +151,15 @@ def scd2_stream_event_time(
     at the stream's current tail are impossible (runs close in
     order), so downstream can assert contiguity.
 
-    ``state_buckets=B`` is ``keyed_fold``'s bucketed grouping: keys
-    pack into B composite state rows (group key =
-    ``pmod(xxhash64(key), B)``) and the output rows are identical to
-    the per-key form (pytest-parity-locked), but a micro-batch touches
-    B state rows and makes B per-group Arrow invocations instead of
-    |keys| (measured r14: the per-group machinery was ~0.9 s of every
-    ~1.8 s micro-batch at 1,500 keys while the Python fold itself was
-    negligible — a trivial-fn floor probe ran at the full operator's
-    wall time). Size B so buckets hold tens of keys (keys/32 is the
-    gate's choice); at cluster scale keep B ≥ the stateful shuffle
-    width so every state partition stays busy. Late-row accounting is
-    per KEY either way (``n_dropped_late`` follows the key, not the
-    bucket).
+    State lives in ``keyed_fold``'s key buckets (B = 8 × the
+    session's ``spark.sql.shuffle.partitions`` when the operator is
+    built): a micro-batch touches at most B state rows and makes at
+    most B Arrow invocations instead of one per key (measured r14: the
+    per-group machinery was ~0.9 s of every ~1.8 s micro-batch at
+    1,500 keys while the Python fold itself was negligible). A restart
+    at a different shuffle width raises instead of re-bucketing.
+    Late-row accounting is per KEY (``n_dropped_late`` follows the
+    key, not the bucket).
     """
     keyed = (stream
              .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -174,8 +169,7 @@ def scd2_stream_event_time(
                      F.col(ts_col),
                      F.unix_micros(F.col(ts_col)).alias("order")))
     return keyed_fold(keyed, scd2_event_time_step, SCD2_ET_STATE_SCHEMA,
-                      SCD2_OUT_SCHEMA, timeout="EventTimeTimeout",
-                      buckets=state_buckets)
+                      SCD2_OUT_SCHEMA, timeout="EventTimeTimeout")
 
 
 def scd2_event_time_step(key, st, rows, ctx):

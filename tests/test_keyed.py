@@ -3,7 +3,8 @@
 The step tests are Spark-free: each step is a pure per-key function,
 so carries, late-row accounting and NULL runs are checked by calling
 it batch by batch with the state it returned. The parity test runs
-every step through ``keyed_fold`` per key and in 1 and 2 buckets.
+every step through ``keyed_fold`` at three bucket counts against a
+pure-Python per-key fold of the same batches.
 """
 
 from __future__ import annotations
@@ -242,62 +243,160 @@ def _cases():
     }
 
 
+_DELAY_MS = 10_000  # the event-time case's watermark delay
+
+
+def _fixture():
+    """Two disordered batches over six keys and a NULL key: a NULL
+    value run straddling the boundary, a late row for k0 in batch 2,
+    a NULL key held only by batch 1 (its event-time timer fires in
+    batch 2) and an in-band sentinel that lets the event-time form
+    flush."""
+    b1 = ([(f"k{i}", 40 + i, "b") for i in range(6)]
+          + [(f"k{i}", 10 + i, "a") for i in range(6)]
+          + [("k1", 25, None), (None, 12, "a"), (None, 50, "b")])
+    b2 = ([(f"k{i}", 80 + i, "c") for i in range(6)]
+          + [("k1", 30, None), ("k0", 5, "z"), ("\x00flush", 600, "x")])
+    return b1, b2
+
+
+def _norm(row):
+    def norm(v):
+        if isinstance(v, list | tuple):
+            return tuple(norm(x) for x in v)
+        return v.normalize() if isinstance(v, Decimal) else v
+    return tuple(norm(v) for v in row)
+
+
+def _sorted(rows):
+    return sorted((_norm(r) for r in rows), key=repr)
+
+
+def _step_reference(step, batches, event_time):
+    """Spark's per-key fold of ``batches`` (pandas frames of the keyed
+    columns), written out in pure Python: each batch steps every key
+    with rows, then (event-time) every key whose timer is due; state
+    is written only on a reported change. Event time: a batch sees
+    the watermark of the batches before it (max ``order`` - delay;
+    rows below it still reach the step), and a trailing no-data batch
+    fires the timers the last watermark move made due."""
+    held, due_at, out = {}, {}, []
+    empty = batches[0].iloc[:0]
+    wm_ms = 0
+    for rows in batches + ([empty] if event_time else []):
+        todo = {None if pd.isna(k) else k: g for k, g in
+                rows.groupby("key", sort=False, dropna=False)}
+        if event_time:
+            todo.update({k: empty for k, t in due_at.items()
+                         if t < wm_ms and k not in todo})
+        ctx = FoldContext(wm_ms if event_time else None)
+        for k, key_rows in todo.items():
+            due_at.pop(k, None)
+            new, k_out, changed, rearm = step(k, held.get(k), key_rows,
+                                              ctx)
+            out += k_out
+            if changed and new is not None:
+                held[k] = new
+            if rearm:
+                due_at[k] = wm_ms + 1000
+        if event_time and len(rows):
+            wm_ms = max(wm_ms, rows["order"].max() // 1000 - _DELAY_MS)
+    return out
+
+
 class TestBucketParity:
-    """``buckets=None``, ``1`` and ``2`` give identical output rows for
-    every step: two disordered batches over six keys, a NULL value run
-    straddling the boundary, a late row for k0 in batch 2 and an
-    in-band sentinel that lets the event-time form flush."""
+    """``keyed_fold`` at B = 1, 2 and the derived default (8 × the
+    session's shuffle partitions) gives the rows of each step's
+    per-key fold in pure Python (``_step_reference``) on the same
+    two-batch fixture."""
 
     @staticmethod
     def _source(spark, tmp_path):
         import time
 
-        b1 = ([(f"k{i}", 40 + i, "b") for i in range(6)]
-              + [(f"k{i}", 10 + i, "a") for i in range(6)]
-              + [("k1", 25, None)])
-        b2 = ([(f"k{i}", 80 + i, "c") for i in range(6)]
-              + [("k1", 30, None), ("k0", 5, "z"), ("\x00flush", 600, "x")])
         src = str(tmp_path / "src")
-        for rows in (b1, b2):
+        for rows in _fixture():
             spark.createDataFrame(rows, _SRC).coalesce(1) \
                 .write.mode("append").parquet(src)
             time.sleep(0.05)  # distinct mtimes -> deterministic order
         return src
 
     @staticmethod
-    def _run(spark, src, tmp_path, case, buckets):
+    def _run(spark, src, tmp_path, case, tag, parts):
+        from incubator_pulsar_spark.plans import queries
+
         prep, step, state_schema, out_schema, timeout = case
         stream = (spark.readStream.schema(_SRC)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        out = keyed_fold(prep(stream), step, state_schema, out_schema,
-                         timeout=timeout, buckets=buckets)
-        tag = f"b{buckets}"
         sink = str(tmp_path / f"sink_{tag}")
-        q = (out.writeStream.format("parquet").option("path", sink)
-             .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-        return sorted((tuple(tuple(v) if isinstance(v, list) else v
-                             for v in r)
-                       for r in spark.read.parquet(sink).collect()),
-                      key=repr)
+        queries._run_stream_gate(
+            spark, lambda: keyed_fold(prep(stream), step, state_schema,
+                                      out_schema, timeout=timeout),
+            sink, str(tmp_path / f"ck_{tag}"), parts)
+        return _sorted(spark.read.parquet(sink).collect())
 
     @pytest.mark.parametrize("name", [
         "markov", "retention", "twap", "entropy", "interval", "scd2",
         "scd2_event_time"])
-    def test_buckets_match_per_key(self, spark, tmp_path, name):
+    def test_buckets_match_per_key(self, spark, tmp_path, monkeypatch,
+                                   name):
+        from incubator_pulsar_spark.streaming import keyed
+
         case = _cases()[name]
-        src = self._source(spark, tmp_path)
-        per_key = self._run(spark, src, tmp_path, case, None)
-        assert per_key  # non-trivial fixture
-        fields = case[3].fieldNames()
+        prep, step, _, out_schema, timeout = case
+        batches = [prep(spark.createDataFrame(b, _SRC)).toPandas()
+                   for b in _fixture()]
+        want = _sorted(_step_reference(step, batches,
+                                       timeout == "EventTimeTimeout"))
+        assert want  # non-trivial fixture
+        fields = out_schema.fieldNames()
         # k0's late row is counted by the step; in the event-time form
-        # Spark's watermark filter drops it before the fold instead
+        # it lands before k0 finalized anything and opens its history
         if "n_dropped_late" in fields and name != "scd2_event_time":
             late = fields.index("n_dropped_late")
-            assert any(r[late] for r in per_key)
+            assert any(r[late] for r in want)
+        src = self._source(spark, tmp_path)
+        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert self._run(spark, src, tmp_path, case, "default",
+                         default) == want
+        monkeypatch.setattr(keyed, "BUCKETS_PER_PARTITION", 1)
         for b in (1, 2):
-            assert self._run(spark, src, tmp_path, case, b) == per_key, b
+            assert self._run(spark, src, tmp_path, case, f"b{b}",
+                             b) == want, b
+
+
+def test_bucket_count_change_on_restart_raises(spark, tmp_path):
+    """The bucket state row stores B: restarting a checkpoint at
+    another shuffle width (so another B) must raise, naming both
+    counts, and leave no query running."""
+    from pyspark.errors import StreamingQueryException
+
+    src = tmp_path / "src"
+    keys = [(f"k{i}", n, "ab"[n % 2]) for i in range(40) for n in (1, 2)]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(batch, parts):
+        spark.createDataFrame(batch, _SRC).coalesce(1) \
+            .write.mode("append").parquet(str(src / str(parts)))
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        out = behavior.markov_stream(
+            spark.readStream.schema(_SRC).parquet(str(src / "*")),
+            key_col="key", order_col="order", state_col="value")
+        q = (out.writeStream.format("parquet")
+             .option("path", str(tmp_path / "sink"))
+             .option("checkpointLocation", str(tmp_path / "ck"))
+             .trigger(availableNow=True).start())
+        return q.awaitTermination(120)
+
+    try:
+        assert run(keys, 2)
+        later = [(k, n + 2, v) for k, n, v in keys]
+        with pytest.raises(StreamingQueryException,
+                           match=r"(?s)in 16 buckets.*into 24"):
+            run(later, 3)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert not spark.streams.active
 
 
 def test_stream_gate_raises_on_drain_timeout(spark, tmp_path, monkeypatch):
@@ -307,13 +406,13 @@ def test_stream_gate_raises_on_drain_timeout(spark, tmp_path, monkeypatch):
 
     src = str(tmp_path / "src")
     spark.createDataFrame([("k", 1, "a")], _SRC).write.parquet(src)
-    out = behavior.markov_stream(
-        spark.readStream.schema(_SRC).parquet(src), key_col="key",
-        order_col="order", state_col="value")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     monkeypatch.setattr(queries, "STREAM_GATE_TIMEOUT_S", 0.001)
     with pytest.raises(RuntimeError, match="did not drain"):
-        queries._run_stream_gate(spark, out, str(tmp_path / "sink"),
-                                 str(tmp_path / "ck"), 2)
+        queries._run_stream_gate(
+            spark, lambda: behavior.markov_stream(
+                spark.readStream.schema(_SRC).parquet(src),
+                key_col="key", order_col="order", state_col="value"),
+            str(tmp_path / "sink"), str(tmp_path / "ck"), 2)
     assert not spark.streams.active
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev

@@ -608,6 +608,22 @@ class TestBehaviorOperators:
                                tiebreak_col="event_id").collect()[0]
         assert r.max_stat4 == 0  # constant series: no shift
 
+    def test_cusum_group_past_row_envelope_raises(self, spark,
+                                                  monkeypatch):
+        import datetime as dt
+
+        from incubator_pulsar_spark.functions import behavior
+
+        monkeypatch.setattr(behavior, "CUSUM_MAX_ROWS", 4)
+        t0 = dt.datetime(2024, 1, 1)
+        rows = [("g", t0 + dt.timedelta(seconds=i), i, float(i))
+                for i in range(5)]
+        df = spark.createDataFrame(
+            rows, "grp string, ts timestamp, event_id long, value double")
+        with pytest.raises(Exception, match="more than 4 rows"):
+            behavior.cusum_max(df, ["grp"],
+                               tiebreak_col="event_id").collect()
+
 
 class TestBfsHops:
     def test_path_distances_and_unreached(self, spark):

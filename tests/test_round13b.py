@@ -753,3 +753,17 @@ class TestRfmSegments:
             df, entity_col="e", ts_col="ts", value_col="v",
             anchor_ms=anchor).collect()[0]
         assert r.recency_ms == 5000
+
+    def test_recency_keeps_milliseconds(self, spark):
+        import datetime as dt
+
+        from incubator_pulsar_spark.functions import behavior
+
+        t0 = dt.datetime(2024, 1, 1, 0, 0, 7)
+        df = spark.createDataFrame(
+            [("A", t0.replace(microsecond=123_456), 1.0),
+             ("B", t0 + dt.timedelta(seconds=1), 1.0)],
+            "e string, ts timestamp_ntz, v double")
+        got = {r.entity: r.recency_ms for r in behavior.rfm_segments(
+            df, entity_col="e", ts_col="ts", value_col="v").collect()}
+        assert got == {"A": 877, "B": 0}  # .123456 s truncates to 123 ms
