@@ -177,21 +177,18 @@ def _stream_shuffle_partitions(spark, n_keys: int) -> int:
 STREAM_GATE_TIMEOUT_S = 600
 
 
-def _run_stream_gate(spark, build: Callable[[], DataFrame], sink: str,
-                     ck: str, parts: int) -> None:
-    """Build (``build()``), start and drain an availableNow gate stream
-    with the stateful shuffle width pinned to ``parts`` (the
-    state-store partition count is fixed by the conf at first batch
-    and checkpointed; gates build fresh checkpoints every run, so the
-    narrow width is safe). The pin covers the build too, because
-    ``keyed_fold`` sizes its key buckets from the width it sees then.
-    The session conf is restored after the drain. A drain that
-    outlives ``STREAM_GATE_TIMEOUT_S`` stops the query and raises: its
-    sink is partial, and a gate must never read it back as a result."""
+def _run_stream_gate(spark, out, sink: str, ck: str, parts: int) -> None:
+    """Start + drain an availableNow gate stream with the stateful
+    shuffle width pinned to ``parts`` (the state-store partition count
+    is fixed by the conf at first batch and checkpointed; gates build
+    fresh checkpoints every run, so the narrow width is safe). The
+    session conf is restored after the drain. A drain that outlives
+    ``STREAM_GATE_TIMEOUT_S`` stops the query and raises: its sink is
+    partial, and a gate must never read it back as a result."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     try:
-        q = (build().writeStream.format("parquet").option("path", sink)
+        q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ck)
              .trigger(availableNow=True).start())
         if not q.awaitTermination(STREAM_GATE_TIMEOUT_S):
@@ -234,7 +231,7 @@ def _replay_gate(spark, sf_dir, tag: str, rows: DataFrame, *, key: str,
     _write_band_files(banded, src, 2, F.md5(F.concat_ws("|", *shuffle)))
     stream = (spark.readStream.schema(rows.schema)
               .option("maxFilesPerTrigger", "1").parquet(src))
-    _run_stream_gate(spark, lambda: build(stream, lo, nk), sink, ck,
+    _run_stream_gate(spark, build(stream, lo, nk), sink, ck,
                      _stream_shuffle_partitions(spark, nk))
     return spark.read.parquet(sink)
 
@@ -7249,8 +7246,8 @@ def scd2_stream_events(spark, sf_dir):
     band's real rows are still buffered when it lands; the trailing
     no-data batch then fires the event-time timers and flushes every
     closed run — one fewer micro-batch than a separate sentinel
-    file). Keys pack into keyed_fold's state buckets, 8 per stateful
-    shuffle partition (the per-group Arrow machinery was ~0.9 s of
+    file). Keys pack into keyed_fold's STATE_BUCKETS composite state
+    rows (the per-group Arrow machinery was ~0.9 s of
     every ~1.8 s batch at 1,500 per-key groups; a trivial-fn floor
     probe matched the full operator's wall time). The oracle is the
     batch SCD2 derivation restricted to CLOSED runs (valid_to NOT

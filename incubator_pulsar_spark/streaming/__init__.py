@@ -8,9 +8,11 @@ file-source streams, watermarks, ``applyInPandasWithState``,
 ``foreachBatch``. The keyed-state operators of ``behavior``,
 ``interval`` and ``scd2`` are pure per-key steps; ``keyed.keyed_fold``
 owns their ``applyInPandasWithState`` plumbing once, with one grouping
-rule: keys pack into B = 8 × ``spark.sql.shuffle.partitions`` state
-buckets (taken from the session when the operator is built), so state
-rows and Arrow groups per micro-batch count buckets, not keys. A
-restart at a different shuffle width raises instead of re-bucketing
-the checkpoint's state.
+rule: keys pack into ``keyed.STATE_BUCKETS`` state buckets (a constant,
+so a checkpoint restarts at any shuffle width), and state rows and
+Arrow groups per micro-batch count buckets, not keys. Checkpoints of
+these operators written before they all bucketed (markov, retention,
+twap, entropy, interval and publish-order scd2 kept one state row per
+key; event-time scd2 took its bucket count as an argument) do not
+restart: start those queries from a new checkpoint.
 """

@@ -34,9 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# buckets per stateful shuffle partition: enough that Murmur3's
-# bucket -> partition placement spreads the buckets evenly
-BUCKETS_PER_PARTITION = 8
+# The fixed key -> bucket map of every keyed fold. A constant (no
+# session setting) so a restart at any spark.sql.shuffle.partitions
+# finds each key's state where it left it; changing it re-buckets
+# every key, so a query must then start from a new checkpoint.
+STATE_BUCKETS = 64
 
 
 class FoldContext(NamedTuple):
@@ -44,12 +46,10 @@ class FoldContext(NamedTuple):
 
 
 def _bucket_state_schema(state_schema: T.StructType) -> T.StructType:
-    """The bucket state row: the bucket count it was written under
-    (``n_buckets``), the bucket's keys (``ks``) plus, per per-key
-    field, one array co-indexed with ``ks``."""
+    """The bucket state row: the bucket's keys (``ks``) plus, per
+    per-key field, one array co-indexed with ``ks``."""
     return T.StructType(
-        [T.StructField("n_buckets", T.IntegerType()),
-         T.StructField("ks", T.ArrayType(T.StringType()))]
+        [T.StructField("ks", T.ArrayType(T.StringType()))]
         + [T.StructField(f.name, T.ArrayType(f.dataType))
            for f in state_schema.fields])
 
@@ -65,27 +65,32 @@ def keyed_fold(
     """Fold ``step`` over ``keyed`` (a stream with a string ``key``
     column) in append mode.
 
-    Keys group by ``pmod(xxhash64(key), B)`` with B =
-    ``BUCKETS_PER_PARTITION`` × the session's
-    ``spark.sql.shuffle.partitions`` when the fold is built, so B
-    grows with the stateful width. One state row per bucket holds
-    every key of it as co-indexed arrays (``_bucket_state_schema``)
-    and each key folds through ``step`` on its own rows: a
-    micro-batch makes at most B Arrow invocations, not one per key,
-    and the progress's ``numRowsTotal``/``numRowsUpdated`` count
-    buckets. In an event-time fold a bucket invocation steps every
-    held key too (its timer may be due); a key whose watermark moved
-    nothing reports no change.
+    Keys group by ``pmod(xxhash64(key), STATE_BUCKETS)``. One state
+    row per bucket holds every key of it as co-indexed arrays
+    (``_bucket_state_schema``) and each key folds through ``step`` on
+    its own rows: a micro-batch makes at most ``STATE_BUCKETS`` Arrow
+    invocations, not one per key, and the progress's
+    ``numRowsTotal``/``numRowsUpdated`` count buckets. The bucket of a
+    key does not depend on the shuffle width, so a checkpoint restarts
+    at any ``spark.sql.shuffle.partitions`` (Spark keeps the
+    checkpoint's stateful width); the width above ``STATE_BUCKETS``
+    leaves state partitions idle.
 
-    The state row stores B. A restart whose B differs from the
-    checkpoint's (the shuffle width changed) raises, naming both
-    counts, instead of splitting keys' state across buckets. The check
-    runs when a bucket holding state is invoked, so it cannot see a
-    batch whose keys all land in buckets the old B never had.
+    The price is per bucket, not per key: a key that changes rewrites
+    its bucket's whole state row, and in an event-time fold a bucket
+    invocation steps every held key (its timer may be due; a key whose
+    watermark moved nothing reports no change). That pays off while a
+    batch touches many keys of each bucket it touches. A stream that
+    holds many keys but touches few per batch decodes and rewrites
+    about keys held / ``STATE_BUCKETS`` state entries per touched key
+    (and, event-time, steps as many keys), so it runs slower than a
+    per-key fold would (SCALING.md, "Bucketed keyed state").
+
+    Checkpoints written under another grouping (one state row per key,
+    as the operators kept before they all bucketed, or another bucket
+    count) do not restart; start such a query from a new checkpoint.
     """
     event_time = timeout == "EventTimeTimeout"
-    buckets = BUCKETS_PER_PARTITION * int(
-        keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     out_cols = out_schema.fieldNames()
     empty = pd.DataFrame(columns=keyed.columns)
 
@@ -99,14 +104,7 @@ def keyed_fold(
                    state) -> Iterator[pd.DataFrame]:
         held: dict = {}
         if state.exists:
-            n_buckets, ks, *fields = state.get
-            if n_buckets != buckets:
-                raise RuntimeError(
-                    f"keyed state was checkpointed in {n_buckets} buckets"
-                    f" but this query folds into {buckets} "
-                    f"({BUCKETS_PER_PARTITION} x "
-                    "spark.sql.shuffle.partitions); restart with the "
-                    "checkpoint's shuffle partitions or a new checkpoint")
+            ks, *fields = state.get
             held = dict(zip(ks, zip(*fields)))
         # one pass: a frame per key, NULL key included, in order of
         # first appearance
@@ -130,8 +128,8 @@ def keyed_fold(
                     held[k] = key_state
         if any_changed and held:
             ks = list(held)
-            state.update((buckets, ks, *(list(f) for f in
-                                         zip(*(held[k] for k in ks)))))
+            state.update((ks, *(list(f) for f in
+                                zip(*(held[k] for k in ks)))))
         if any_rearm:
             # Spark demands timeout > watermark; a fired timer is
             # consumed, so every invocation that still waits re-arms
@@ -139,7 +137,7 @@ def keyed_fold(
         return iter([pd.DataFrame(out, columns=out_cols)] if out else [])
 
     bucketed = keyed.withColumn(
-        "_bkt", F.pmod(F.xxhash64("key"), F.lit(buckets)).cast("int"))
+        "_bkt", F.pmod(F.xxhash64("key"), F.lit(STATE_BUCKETS)).cast("int"))
     return bucketed.groupBy("_bkt").applyInPandasWithState(
         per_bucket, out_schema, _bucket_state_schema(state_schema),
         "append", timeout)

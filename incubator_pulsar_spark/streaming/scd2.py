@@ -151,15 +151,14 @@ def scd2_stream_event_time(
     at the stream's current tail are impossible (runs close in
     order), so downstream can assert contiguity.
 
-    State lives in ``keyed_fold``'s key buckets (B = 8 × the
-    session's ``spark.sql.shuffle.partitions`` when the operator is
-    built): a micro-batch touches at most B state rows and makes at
-    most B Arrow invocations instead of one per key (measured r14: the
-    per-group machinery was ~0.9 s of every ~1.8 s micro-batch at
-    1,500 keys while the Python fold itself was negligible). A restart
-    at a different shuffle width raises instead of re-bucketing.
-    Late-row accounting is per KEY (``n_dropped_late`` follows the
-    key, not the bucket).
+    State lives in ``keyed_fold``'s ``STATE_BUCKETS`` key buckets: a
+    micro-batch touches at most that many state rows and makes at most
+    that many Arrow invocations instead of one per key (measured r14:
+    the per-group machinery was ~0.9 s of every ~1.8 s micro-batch at
+    1,500 keys while the Python fold itself was negligible). Each
+    bucket invocation steps every key its bucket holds, because any
+    of their timers may be due. Late-row accounting is per KEY
+    (``n_dropped_late`` follows the key, not the bucket).
     """
     keyed = (stream
              .withColumn(ts_col, F.col(ts_col).cast("timestamp"))

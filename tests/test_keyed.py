@@ -305,10 +305,9 @@ def _step_reference(step, batches, event_time):
 
 
 class TestBucketParity:
-    """``keyed_fold`` at B = 1, 2 and the derived default (8 × the
-    session's shuffle partitions) gives the rows of each step's
-    per-key fold in pure Python (``_step_reference``) on the same
-    two-batch fixture."""
+    """``keyed_fold`` at B = 1, 2 and ``STATE_BUCKETS`` gives the rows
+    of each step's per-key fold in pure Python (``_step_reference``)
+    on the same two-batch fixture."""
 
     @staticmethod
     def _source(spark, tmp_path):
@@ -322,7 +321,7 @@ class TestBucketParity:
         return src
 
     @staticmethod
-    def _run(spark, src, tmp_path, case, tag, parts):
+    def _run(spark, src, tmp_path, case, tag):
         from incubator_pulsar_spark.plans import queries
 
         prep, step, state_schema, out_schema, timeout = case
@@ -330,9 +329,10 @@ class TestBucketParity:
                   .option("maxFilesPerTrigger", "1").parquet(src))
         sink = str(tmp_path / f"sink_{tag}")
         queries._run_stream_gate(
-            spark, lambda: keyed_fold(prep(stream), step, state_schema,
-                                      out_schema, timeout=timeout),
-            sink, str(tmp_path / f"ck_{tag}"), parts)
+            spark, keyed_fold(prep(stream), step, state_schema, out_schema,
+                              timeout=timeout),
+            sink, str(tmp_path / f"ck_{tag}"),
+            int(spark.conf.get("spark.sql.shuffle.partitions")))
         return _sorted(spark.read.parquet(sink).collect())
 
     @pytest.mark.parametrize("name", [
@@ -356,23 +356,17 @@ class TestBucketParity:
             late = fields.index("n_dropped_late")
             assert any(r[late] for r in want)
         src = self._source(spark, tmp_path)
-        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        assert self._run(spark, src, tmp_path, case, "default",
-                         default) == want
-        monkeypatch.setattr(keyed, "BUCKETS_PER_PARTITION", 1)
-        for b in (1, 2):
-            assert self._run(spark, src, tmp_path, case, f"b{b}",
-                             b) == want, b
+        for b in (keyed.STATE_BUCKETS, 1, 2):
+            monkeypatch.setattr(keyed, "STATE_BUCKETS", b)
+            assert self._run(spark, src, tmp_path, case, f"b{b}") == want, b
 
 
-def test_bucket_count_change_on_restart_raises(spark, tmp_path):
-    """The bucket state row stores B: restarting a checkpoint at
-    another shuffle width (so another B) must raise, naming both
-    counts, and leave no query running."""
-    from pyspark.errors import StreamingQueryException
-
+def test_restart_at_another_shuffle_width_keeps_state(spark, tmp_path):
+    """A key's bucket does not follow the shuffle width: a one-key
+    ``markov_stream`` checkpointed at 2 shuffle partitions and
+    restarted at 3 carries its last state into the new batch."""
     src = tmp_path / "src"
-    keys = [(f"k{i}", n, "ab"[n % 2]) for i in range(40) for n in (1, 2)]
+    sink = str(tmp_path / "sink")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
 
     def run(batch, parts):
@@ -382,21 +376,18 @@ def test_bucket_count_change_on_restart_raises(spark, tmp_path):
         out = behavior.markov_stream(
             spark.readStream.schema(_SRC).parquet(str(src / "*")),
             key_col="key", order_col="order", state_col="value")
-        q = (out.writeStream.format("parquet")
-             .option("path", str(tmp_path / "sink"))
+        q = (out.writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
-        return q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     try:
-        assert run(keys, 2)
-        later = [(k, n + 2, v) for k, n, v in keys]
-        with pytest.raises(StreamingQueryException,
-                           match=r"(?s)in 16 buckets.*into 24"):
-            run(later, 3)
+        run([("k", 1, "a"), ("k", 2, "b")], 2)
+        run([("k", 3, "c")], 3)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert not spark.streams.active
+    got = sorted(tuple(r) for r in spark.read.parquet(sink).collect())
+    assert got == [("a", "b", 1, 0), ("b", "c", 1, 0)]
 
 
 def test_stream_gate_raises_on_drain_timeout(spark, tmp_path, monkeypatch):
@@ -406,13 +397,13 @@ def test_stream_gate_raises_on_drain_timeout(spark, tmp_path, monkeypatch):
 
     src = str(tmp_path / "src")
     spark.createDataFrame([("k", 1, "a")], _SRC).write.parquet(src)
+    out = behavior.markov_stream(
+        spark.readStream.schema(_SRC).parquet(src), key_col="key",
+        order_col="order", state_col="value")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     monkeypatch.setattr(queries, "STREAM_GATE_TIMEOUT_S", 0.001)
     with pytest.raises(RuntimeError, match="did not drain"):
-        queries._run_stream_gate(
-            spark, lambda: behavior.markov_stream(
-                spark.readStream.schema(_SRC).parquet(src),
-                key_col="key", order_col="order", state_col="value"),
-            str(tmp_path / "sink"), str(tmp_path / "ck"), 2)
+        queries._run_stream_gate(spark, out, str(tmp_path / "sink"),
+                                 str(tmp_path / "ck"), 2)
     assert not spark.streams.active
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
