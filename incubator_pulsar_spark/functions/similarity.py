@@ -13,9 +13,24 @@ Q small (broadcast queries, map-side only, no shuffle). LSH/IVF cut the
 scanned fraction ~bucket-count-fold for large Q; both keep the big side
 shuffle-free (bucket id is a map-side column; only the tiny query side
 explodes to probes).
+
+Persisted indexes (the end of this module): five codecs — ivf, pq,
+ivfpq, bq and sq8 — share one lifecycle. ``<family>_write_index``
+trains the codec's state and ends in one shared write: the code table
+under ``{path}/base`` (partitioned by cell for ivf and ivfpq) and one
+``{path}/_index.json`` sidecar that names the codec and holds its
+state. ``append_index`` and ``search_index`` read the codec from the
+sidecar. Indexes written before this layout (``_centroids.json``,
+``_codebooks.json`` + ``_rotation.json``, ``_ivfpq.json``,
+``_bq_meta.json``, ``_sq8_meta.json`` sidecars; ivf codes at the index
+root) do not open: rebuild them from their corpus.
 """
 
 from __future__ import annotations
+
+import json
+import os
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -271,141 +286,51 @@ def ivf_topk(
     comes from). The inverted-file assignment is a map-side argmin over
     n_cells dots; only the query side explodes ×nprobe. At scale, cell
     id becomes a partition column so probes prune files — that layout is
-    ``ivf_write_index``/``ivf_search_index`` below.
+    ``ivf_write_index``/``search_index`` below.
 
     ``n_cells`` defaults to ``auto_n_cells`` (cells ∝ corpus size).
     """
     n_cells = _resolve_n_cells(embeddings, n_cells)
     cents = _seed_centroids(embeddings, n_cells=n_cells,
                             id_col=id_col, vec_col=vec_col)
-    e = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("vec_id"), as_double_array(F.col(vec_col)).alias("vec"))
+    e = _ivf_encode(ensure_parallelism(embeddings), {"centroids": cents},
+                    id_col, vec_col)
     q = queries.select(F.col(query_id_col).alias("query_id"),
-                       as_double_array(F.col(query_vec_col)).alias("qvec"))
+                       as_double_array(F.col(query_vec_col)).alias("qv"))
+    return _ivf_scan(e, _ivf_probe_cells(q, cents, nprobe), k)
 
-    e = (_attach_centroids(e, cents)
-         .withColumn("cell", _nearest_cell(F.col("vec"))).drop("_cents"))
 
+def _ivf_encode(df: DataFrame, side: dict, id_col: str,
+                vec_col: str) -> DataFrame:
+    """(vec_id, vec, cell): each vector in its round-9 nearest cell."""
+    e = df.select(F.col(id_col).alias("vec_id"),
+                  as_double_array(F.col(vec_col)).alias("vec"))
+    return (_attach_centroids(e, side["centroids"])
+            .withColumn("cell", _nearest_cell(F.col("vec"))).drop("_cents"))
+
+
+def _ivf_probe_cells(q: DataFrame, cents: list[list[float]],
+                     nprobe: int) -> DataFrame:
+    """Explode each (query_id, qv) row to its ``nprobe`` nearest cells:
+    sort (score, idx) pairs descending, so equal scores pick the higher
+    cell index."""
     q = (_attach_centroids(q, cents)
-         .withColumn("_scores", _cell_scores(F.col("qvec"))).drop("_cents"))
-    # top-nprobe cells per query: sort (score, idx) pairs desc
-    idx = F.sequence(F.lit(0), F.lit(n_cells - 1))
-    pairs = F.zip_with(q["_scores"], idx, lambda s, i: F.struct(s.alias("s"), i.alias("i")))
-    probes = F.slice(F.reverse(F.array_sort(pairs)), 1, nprobe)
-    q = q.withColumn("cell", F.explode(F.transform(probes, lambda p: p["i"]))).drop("_scores")
-    q = q.withColumn("cell", F.col("cell").cast("int"))
-
-    scored = e.join(F.broadcast(q), on="cell").select(
-        "query_id", "vec_id",
-        F.round(cosine(F.col("vec"), F.col("qvec")), 6).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine_sim", "rank")
-    )
-
-
-def ivf_write_index(
-    embeddings: DataFrame, path: str, *, n_cells: int | None = None,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Persist an IVF index: vectors parquet-partitioned BY CELL, with
-    the centroids in a JSON sidecar.
-
-    This is the 100 TB form of the inverted file: ``cell`` is a
-    partition directory, so a probe reads only nprobe/n_cells of the
-    corpus — partition pruning IS the index lookup
-    (``ivf_search_index`` asserts PartitionFilters in its plan test).
-    Build cost: one pass to assign cells (map-side argmin over n_cells
-    dots) + one shuffle-free partitioned write. ``n_cells`` defaults to
-    ``auto_n_cells`` (cells ∝ corpus size).
-    """
-    import json as _json
-    import os as _os
-
-    n_cells = _resolve_n_cells(embeddings, n_cells)
-    cents = _seed_centroids(embeddings, n_cells=n_cells,
-                            id_col=id_col, vec_col=vec_col)
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        as_double_array(F.col(vec_col)).alias("vec"),
-    )
-    e = (_attach_centroids(e, cents)
-         .withColumn("cell", _nearest_cell(F.col("vec"))).drop("_cents"))
-    e.write.mode("overwrite").partitionBy("cell").parquet(path)
-    with open(_os.path.join(path, "_centroids.json"), "w") as f:
-        _json.dump(cents, f)
-    return cents
-
-
-def ivf_append_index(
-    embeddings: DataFrame, path: str, *,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> int:
-    """Append a NEW batch of vectors to a persisted IVF index without
-    touching the existing data — the index-maintenance half of
-    ``ivf_write_index`` (the ``append_minhash_index`` analogue for the
-    embedding side): cell assignment reuses the sidecar centroids, the
-    write appends only the new rows into their cell partitions, and
-    every prior file stays byte-identical. Cost is O(batch), never
-    O(corpus).
-
-    Centroids are NOT re-seeded — the index keeps one consistent cell
-    geometry so existing partitions stay valid (the standard IVF
-    contract; re-cluster by rebuilding when drift warrants it). Returns
-    the number of vectors appended.
-    """
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_centroids.json")) as f:
-        cents = _json.load(f)
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        as_double_array(F.col(vec_col)).alias("vec"),
-    )
-    e = (_attach_centroids(e, cents)
-         .withColumn("cell", _nearest_cell(F.col("vec"))).drop("_cents"))
-    n = e.count()
-    e.write.mode("append").partitionBy("cell").parquet(path)
-    return n
-
-
-def ivf_search_index(
-    spark, path: str, queries: DataFrame, k: int = 10, *, nprobe: int = 4,
-    query_id_col: str = "query_id", query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Probe a persisted IVF index: pick each query's nprobe nearest
-    cells driver-side (n_cells tiny), then scan ONLY those cell
-    partitions (`cell IN (...)` prunes directories before read) and
-    rank exact cosine within.
-    """
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_centroids.json")) as f:
-        cents = _json.load(f)
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       as_double_array(F.col(query_vec_col)).alias("qvec"))
-    q = (_attach_centroids(q, cents)
-         .withColumn("_scores", _cell_scores(F.col("qvec"))).drop("_cents"))
+         .withColumn("_scores", _cell_scores(F.col("qv"))).drop("_cents"))
     idx = F.sequence(F.lit(0), F.lit(len(cents) - 1))
     pairs = F.zip_with(q["_scores"], idx,
                        lambda s, i: F.struct(s.alias("s"), i.alias("i")))
     probes = F.slice(F.reverse(F.array_sort(pairs)), 1, nprobe)
-    q = (q.withColumn("cell", F.explode(F.transform(probes, lambda p: p["i"])))
-         .withColumn("cell", F.col("cell").cast("int")).drop("_scores"))
+    return (q.withColumn("cell",
+                         F.explode(F.transform(probes, lambda p: p["i"])))
+            .withColumn("cell", F.col("cell").cast("int")).drop("_scores"))
 
-    # driver-side union of probed cells → literal IN filter on the
-    # partition column = directory pruning (queries are small by contract)
-    probe_cells = sorted({r["cell"] for r in q.select("cell").distinct().collect()})
-    e = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
 
+def _ivf_scan(e: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of the probed cells: (vec_id, vec, cell) joined
+    to the broadcast (query_id, qv, cell) probes, ties to the lowest id."""
     scored = e.join(F.broadcast(q), on="cell").select(
         "query_id", "vec_id",
-        F.round(cosine(F.col("vec"), F.col("qvec")), 6).alias("cosine_sim"),
+        F.round(cosine(F.col("vec"), F.col("qv")), 6).alias("cosine_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(),
                                                F.col("vec_id"))
@@ -414,6 +339,45 @@ def ivf_search_index(
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cosine_sim", "rank")
     )
+
+
+def _ivf_rank(enc: DataFrame, q: DataFrame, side: dict, k: int, *,
+              nprobe: int, refine: int | None,
+              vecs: DataFrame | None) -> DataFrame:
+    """Search half of the ivf codec: pick each query's nprobe cells,
+    read ONLY those cell partitions (a literal ``cell IN (...)`` on the
+    partition column prunes directories before the scan; queries are
+    small by contract) and rank exact cosine within them."""
+    q = _ivf_probe_cells(q, side["centroids"], nprobe)
+    probe_cells = sorted({r["cell"] for r in
+                          q.select("cell").distinct().collect()})
+    return _ivf_scan(enc.filter(F.col("cell").isin(probe_cells)), q, k)
+
+
+def ivf_write_index(
+    embeddings: DataFrame, path: str, *, n_cells: int | None = None,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+) -> dict:
+    """Persist an IVF index: vectors partitioned BY CELL under
+    ``{path}/base``, the centroids in the sidecar.
+
+    This is the 100 TB form of the inverted file: ``cell`` is a
+    partition directory, so a probe reads only nprobe/n_cells of the
+    corpus — partition pruning IS the index lookup (``search_index``
+    asserts PartitionFilters in its plan test). Build cost: one pass to
+    assign cells (map-side argmin over n_cells dots) + one
+    shuffle-free partitioned write. ``n_cells`` defaults to
+    ``auto_n_cells`` (cells ∝ corpus size). Centroids are never
+    re-seeded by ``append_index`` — the index keeps one consistent cell
+    geometry so existing partitions stay valid (rebuild to
+    re-cluster).
+    """
+    n_cells = _resolve_n_cells(embeddings, n_cells)
+    cents = _seed_centroids(embeddings, n_cells=n_cells,
+                            id_col=id_col, vec_col=vec_col)
+    return _write_index(embeddings, path, {"codec": "ivf",
+                                           "centroids": cents},
+                        id_col=id_col, vec_col=vec_col)
 
 
 def auto_n_cells(n_rows: int, *, target_cell: int = 4096,
@@ -1525,22 +1489,6 @@ def _side_rotation(side: dict):
     return _rotation_from_json(r) if r else None
 
 
-def _pq_load_rotation(path: str):
-    """The optional ``_rotation.json`` sidecar of a rotated PQ index
-    (absent on unrotated indexes — the pre-r10 layout reads
-    unchanged). Returns the (perm, signs) tuple or a dense OPQ
-    matrix."""
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(path, "_rotation.json")
-    if not _os.path.exists(p):
-        return None
-    with open(p) as f:
-        r = _json.load(f)
-    return _rotation_from_json(r)
-
-
 def _attach_pq(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """Codebooks as ONE broadcast data column (m × ksub × dsub doubles
     — the literal form would re-hit the measured codegen trap)."""
@@ -1699,9 +1647,6 @@ def _pq_rank_tail(scored: DataFrame, q: DataFrame, k: int, *,
                 .select("query_id", "vec_id", "adc_d2", "rank"))
     if refine < k:
         raise ValueError(f"refine={refine} must be >= k={k}")
-    if vecs is None:
-        raise ValueError("refine mode needs the true-vector source "
-                         "(vecs=(vec_id, _cv))")
     shortlist = (scored.withColumn("_ar", F.row_number().over(w))
                  .filter(F.col("_ar") <= refine)
                  .drop("_ar"))
@@ -1738,8 +1683,9 @@ def _pq_adc_rank(enc: DataFrame, q: DataFrame,
     """The query-time half of ``pq_adc_topk`` — ADC lookup-sum scan
     over an ALREADY-ENCODED corpus (``enc``: (vec_id, codes)), plus
     the optional exact refine against ``vecs`` (vec_id, _cv). Shared
-    verbatim by the one-shot form and ``pq_search_index`` so the
-    persisted-index probe can never drift from the gated semantics.
+    verbatim by the one-shot form and the pq codec's ``search_index``,
+    so the persisted-index probe can never drift from the gated
+    semantics.
     ``rotation`` rotates the QUERY TABLE into the codes' space; the
     refine stage stays in raw space (isometry — same exact
     distances, same raw-order arithmetic as the unrotated path).
@@ -1780,10 +1726,10 @@ def pq_write_index(embeddings: DataFrame, path: str, *, dim: int,
                    m: int = 4, ksub: int = 16, lloyd_iters: int = 0,
                    rotate: bool | str | tuple | list = False,
                    id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> list[list[list[float]]]:
+                   vec_col: str = "embedding") -> dict:
     """Persist a PQ index: the corpus's code table (vec_id, codes —
-    m small ints per vector, the m·log2(ksub)-bit compressed form) as
-    parquet, with the trained codebooks in a JSON sidecar.
+    m small ints per vector, the m·log2(ksub)-bit compressed form) flat
+    under ``{path}/base``, the trained codebooks in the sidecar.
 
     This is the piece that makes ``pq_adc_topk`` a 100 TB operator
     instead of a per-query pipeline: training and encoding run ONCE
@@ -1791,22 +1737,15 @@ def pq_write_index(embeddings: DataFrame, path: str, *, dim: int,
     probe reads only the code table — dim·8 bytes/vector never move
     again. True vectors stay in the corpus table; the refine stage
     fetches the R·Q it needs by id equi-join at search time
-    (``pq_search_index(vectors=...)``), so the index itself stays
+    (``search_index(vectors=...)``), so the index itself stays
     codes-only and memory-resident at any corpus size.
 
-    Layout: batch-maintained codes live flat under ``{path}/base``
-    (append-only, ``pq_append_index``); the continuous-ingest stream
-    owns ``{path}/stream/_batch_id=N`` directories (replay-idempotent
-    overwrites — ``streaming.ann``); codebooks in a JSON sidecar at
-    the root, plus ``_rotation.json`` when ``rotate`` is set — ``True``
-    pins the ``pq_rotation`` signed permutation (oracle-replayable),
-    ``"opq"`` trains and pins the full OPQ dense matrix
-    (``opq_train_rotation`` — pytest-gated quality lever), and an
-    explicit tuple/matrix pins a rotation trained elsewhere; appends,
-    ingest batches and probes all encode/query in the pinned space."""
-    import json as _json
-    import os as _os
-
+    ``rotate`` pins a pre-rotation in the sidecar — ``True`` the
+    ``pq_rotation`` signed permutation (oracle-replayable), ``"opq"``
+    the trained full OPQ dense matrix (``opq_train_rotation`` —
+    pytest-gated quality lever), an explicit tuple/matrix a rotation
+    trained elsewhere; appends, ingest batches and probes all
+    encode/query in the pinned space."""
     rotation = _resolve_rotate(rotate, embeddings, dim=dim, m=m,
                                ksub=ksub, id_col=id_col, vec_col=vec_col)
     train_src = embeddings
@@ -1819,48 +1758,11 @@ def pq_write_index(embeddings: DataFrame, path: str, *, dim: int,
     books = pq_train_codebooks(train_src, m=m, ksub=ksub, dim=dim,
                                lloyd_iters=lloyd_iters,
                                id_col=id_col, vec_col=vec_col)
-    enc = pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col,
-                    rotation=rotation)
-    enc.write.mode("overwrite").parquet(_os.path.join(path, "base"))
-    with open(_os.path.join(path, "_codebooks.json"), "w") as f:
-        _json.dump(books, f)
+    side = {"codec": "pq", "books": books}
     if rotation is not None:
-        with open(_os.path.join(path, "_rotation.json"), "w") as f:
-            _json.dump(_rotation_to_json(rotation), f)
-    return books
-
-
-def pq_append_index(embeddings: DataFrame, path: str, *,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> int:
-    """Append a NEW batch of vectors to a persisted PQ index without
-    re-encoding the corpus — the ``ivf_append_index`` analogue for the
-    compressed-code side: encoding reuses the sidecar codebooks
-    (map-only over the batch), the write appends only the new code
-    rows, and every prior file stays byte-identical. Cost is
-    O(batch), never O(corpus).
-
-    Codebooks are NOT retrained — the index keeps one consistent
-    quantizer so existing codes stay valid (the standard PQ contract;
-    re-train by rebuilding when drift warrants it). Returns the
-    number of vectors appended."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_codebooks.json")) as f:
-        books = _json.load(f)
-    enc = pq_encode(embeddings, books, id_col=id_col, vec_col=vec_col,
-                    rotation=_pq_load_rotation(path))
-    # persist so the batch is encoded ONCE: count materializes the
-    # cache, the write reads it back — without this the write action
-    # re-ran the whole map-side encode (O(2·batch) per append)
-    enc.persist()
-    try:
-        n = enc.count()
-        enc.write.mode("append").parquet(_os.path.join(path, "base"))
-    finally:
-        enc.unpersist()
-    return n
+        side["rotation"] = _rotation_to_json(rotation)
+    return _write_index(embeddings, path, side,
+                        id_col=id_col, vec_col=vec_col)
 
 
 def _residual(vec: Column) -> Column:
@@ -1918,11 +1820,11 @@ def ivfpq_write_index(
     residual: bool | str = False, lloyd_iters: int = 0,
     rotate: bool | str | tuple | list = False,
     id_col: str = "vec_id", vec_col: str = "embedding",
-) -> tuple[list[list[float]], list[list[list[float]]]]:
+) -> dict:
     """IVFADC (Jégou et al. 2011 §IV — the non-exhaustive form the
     paper actually ships): coarse-quantize every vector to an IVF cell
-    AND PQ-encode it, persisting the codes parquet PARTITIONED BY
-    CELL, with the centroids + codebooks in one JSON sidecar.
+    AND PQ-encode it, persisting the codes under ``{path}/base``
+    PARTITIONED BY CELL, with the centroids + codebooks in the sidecar.
 
     This composes the two index families' scale properties: a probe
     prunes to nprobe/n_cells of the corpus via directory-level
@@ -1932,8 +1834,7 @@ def ivfpq_write_index(
     nor even full-width vectors of the probed cells are ever read.
     Build cost: two driver-bounded trainings (centroid seeding +
     codebooks over the same 10k pool) and ONE map-side pass assigning
-    cell + codes, then a partitioned write. Returns (centroids,
-    codebooks).
+    cell + codes, then a partitioned write.
 
     ``residual=True`` is the paper's §IV-A form: codebooks train on
     and codes encode v − centroid[cell] instead of v. Residuals have
@@ -1968,9 +1869,6 @@ def ivfpq_write_index(
     the rotation pins in the sidecar so appends, ingest batches and
     probes all encode/query in the same space; the exact-refine stage
     is untouched (isometry)."""
-    import json as _json
-    import os as _os
-
     n_cells = _resolve_n_cells(embeddings, n_cells)
     cents = _seed_centroids(embeddings, n_cells=n_cells,
                             id_col=id_col, vec_col=vec_col)
@@ -2027,18 +1925,14 @@ def ivfpq_write_index(
         books = pq_train_codebooks(raw, m=m, ksub=ksub, dim=dim,
                                    lloyd_iters=lloyd_iters,
                                    id_col="vec_id", vec_col="pqv")
-    enc = _ivfpq_encode(embeddings, cents, books, residual=residual,
-                        rotation=rotation, id_col=id_col, vec_col=vec_col)
-    enc.write.mode("overwrite").partitionBy("cell").parquet(
-        _os.path.join(path, "base"))
-    side = {"centroids": cents, "books": books, "residual": residual}
+    side = {"codec": "ivfpq", "centroids": cents, "books": books,
+            "residual": residual}
     if rotation is not None:
         side["rotation"] = _rotation_to_json(rotation)
     if auto_info is not None:
         side["residual_auto"] = auto_info
-    with open(_os.path.join(path, "_ivfpq.json"), "w") as f:
-        _json.dump(side, f)
-    return cents, books
+    return _write_index(embeddings, path, side,
+                        id_col=id_col, vec_col=vec_col)
 
 
 def _pool_quantization_error(embeddings: DataFrame,
@@ -2071,112 +1965,25 @@ def _pool_quantization_error(embeddings: DataFrame,
     return total
 
 
-def ivfpq_append_index(embeddings: DataFrame, path: str, *,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> int:
-    """Batch maintenance for the IVFADC index — the ``ivf_append_index``
-    / ``pq_append_index`` analogue: encode the new batch with the
-    sidecar's FROZEN centroids + codebooks (honoring its residual
-    flag) and append the codes into their cell partitions. Prior files
-    stay byte-identical; cost is O(batch), never O(corpus). Returns
-    the number of vectors appended."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_ivfpq.json")) as f:
-        side = _json.load(f)
-    enc = _ivfpq_encode(embeddings, side["centroids"], side["books"],
-                        residual=side.get("residual", False),
-                        rotation=_side_rotation(side),
-                        id_col=id_col, vec_col=vec_col)
-    # persist: count materializes the cache, the write reads it — the
-    # batch is encoded once, not twice (see pq_append_index)
-    enc.persist()
-    try:
-        n = enc.count()
-        enc.write.mode("append").partitionBy("cell").parquet(
-            _os.path.join(path, "base"))
-    finally:
-        enc.unpersist()
-    return n
-
-
-def ivfpq_search_index(
-    spark, path: str, queries: DataFrame, k: int = 10, *,
-    nprobe: int = 4, refine: int | None = None,
-    vectors: DataFrame | None = None,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    query_id_col: str = "query_id", query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Probe an IVFADC index: pick each query's nprobe nearest cells
-    driver-side (n_cells tiny — same probe rule and tiebreak as
-    ``ivf_search_index``), read ONLY those cell partitions
-    (`cell IN (...)` prunes directories before the scan), ADC-rank the
-    codes within them (cell equi-join against the broadcast query
-    tables, never a full cross join), and optionally exact-refine the
-    per-query top-R against ``vectors``. Recall < 1 exactly when a
-    true neighbor's cell goes unprobed or the ADC top-R misses it —
-    the standard IVFADC trade, tunable by (nprobe, refine)."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_ivfpq.json")) as f:
-        side = _json.load(f)
-    cents, books = side["centroids"], side["books"]
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       as_double_array(F.col(query_vec_col)).alias("qv"))
-    enc = _ivfpq_read_codes(spark, path)
-    vecs = None
-    if refine is not None:
-        if vectors is None:
-            raise ValueError("refine mode needs vectors= (the corpus "
-                             "table with the true vectors)")
-        vecs = vectors.select(
-            F.col(id_col).alias("vec_id"),
-            as_double_array(F.col(vec_col)).alias("_cv"))
-    return _ivfpq_probe(enc, q, cents, books, k, nprobe=nprobe,
-                        refine=refine, vecs=vecs,
-                        residual=side.get("residual", False),
-                        rotation=_side_rotation(side))
-
-
-def _ivfpq_read_codes(spark, path: str, *,
-                      max_stream_batch: int | None = None) -> DataFrame:
-    """Full (vec_id, codes, cell) table of a persisted IVFADC index:
-    the cell-partitioned ``base`` plus, when the continuous-ingest
-    stream has appended any, ``stream/_batch_id=N/cell=C`` directories
-    (``max_stream_batch`` exclusive = the replay-stability filter)."""
-    import os as _os
-
-    enc = spark.read.parquet(_os.path.join(path, "base")) \
-        .select("vec_id", "codes", "cell")
-    stream_root = _os.path.join(path, "stream")
-    if _os.path.isdir(stream_root):
-        s = spark.read.parquet(stream_root)
-        if max_stream_batch is not None:
-            s = s.filter(F.col("_batch_id") < max_stream_batch)
-        enc = enc.unionByName(s.select("vec_id", "codes", "cell"))
-    return enc
-
-
 def _ivfpq_probe(enc: DataFrame, q: DataFrame, cents, books, k: int, *,
                  nprobe: int, refine: int | None,
                  vecs: DataFrame | None,
                  residual: bool = False,
                  rotation: tuple[list[int], list[int]] | None = None
                  ) -> DataFrame:
-    """The probe half of ``ivfpq_search_index`` over an already-loaded
-    (vec_id, codes, cell) table — shared with the continuous-ingest
-    stream. Selects nprobe cells per query driver-side, restricts
-    ``enc`` to the probed-cell union (a partition-column IN filter when
-    ``enc`` comes straight off the index — directory pruning), then
-    ADC-ranks via the cell equi-join. With ``residual`` the per-(query,
-    cell) distance table is built from q − centroid[cell] — one table
-    per probed cell, the §IV-A query-time cost — while the exact refine
-    stage still compares RAW vectors (quantization never touches it).
-    ``rotation`` rotates the query-table input into the codes' space
-    (after the residual subtraction when both are set), mirroring
-    ``_ivfpq_encode``; cell selection and refine stay raw.
+    """The probe half of the ivfpq codec's ``search_index`` over an
+    already-loaded (vec_id, codes, cell) table — shared with the
+    continuous-ingest stream. Selects nprobe cells per query
+    driver-side, restricts ``enc`` to the probed-cell union (a
+    partition-column IN filter when ``enc`` comes straight off the index
+    — directory pruning), then ADC-ranks via the cell equi-join. With
+    ``residual`` the per-(query, cell) distance table is built from q −
+    centroid[cell] — one table per probed cell, the §IV-A query-time
+    cost — while the exact refine stage still compares RAW vectors
+    (quantization never touches it). ``rotation`` rotates the
+    query-table input into the codes' space (after the residual
+    subtraction when both are set), mirroring ``_ivfpq_encode``; cell
+    selection and refine stay raw.
 
     Physical form: the Arrow ADC-scan kernel — probe cells AND
     per-(query, cell) distance tables are computed driver-side from
@@ -2241,59 +2048,6 @@ def _ivfpq_probe_fold(enc: DataFrame, q: DataFrame, cents, books, k: int,
               .select("query_id", "vec_id",
                       F.round(_pq_adc_expr(), 6).alias("adc_d2")))
     return _pq_rank_tail(scored, q, k, refine=refine, vecs=vecs)
-
-
-def _pq_read_codes(spark, path: str, *,
-                   max_stream_batch: int | None = None) -> DataFrame:
-    """The full code table of a persisted PQ index: the flat
-    batch-maintained ``base`` plus, when the continuous-ingest stream
-    has appended any, the ``stream/_batch_id=N`` directories.
-    ``max_stream_batch`` (exclusive) restricts to stream batches
-    STRICTLY EARLIER — the replay-stability filter of
-    ``streaming.ann.pq_ingest_batch``."""
-    import os as _os
-
-    enc = spark.read.parquet(_os.path.join(path, "base"))
-    stream_root = _os.path.join(path, "stream")
-    if _os.path.isdir(stream_root):
-        s = spark.read.parquet(stream_root)
-        if max_stream_batch is not None:
-            s = s.filter(F.col("_batch_id") < max_stream_batch)
-        enc = enc.unionByName(s.select("vec_id", "codes"))
-    return enc
-
-
-def pq_search_index(spark, path: str, queries: DataFrame, k: int = 10, *,
-                    refine: int | None = None,
-                    vectors: DataFrame | None = None,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    query_id_col: str = "query_id",
-                    query_vec_col: str = "query_vec") -> DataFrame:
-    """Probe a persisted PQ index: read the code table, run the same
-    broadcast ADC lookup-sum scan as ``pq_adc_topk`` (shared
-    ``_pq_adc_rank`` body), optionally exact-refine against
-    ``vectors`` — the corpus table holding the TRUE vectors, touched
-    only for the R·Q shortlist ids. Same deterministic output
-    contract as the one-shot form (round-6 distances, ties to the
-    lowest id), so the two are interchangeable row for row."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_codebooks.json")) as f:
-        books = _json.load(f)
-    enc = _pq_read_codes(spark, path)
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       as_double_array(F.col(query_vec_col)).alias("qv"))
-    vecs = None
-    if refine is not None:
-        if vectors is None:
-            raise ValueError("refine mode needs vectors= (the corpus "
-                             "table with the true vectors)")
-        vecs = vectors.select(
-            F.col(id_col).alias("vec_id"),
-            as_double_array(F.col(vec_col)).alias("_cv"))
-    return _pq_adc_rank(enc, q, books, k, refine=refine, vecs=vecs,
-                        rotation=_pq_load_rotation(path))
 
 
 # --------------------------------------------------------------------------
@@ -2395,9 +2149,6 @@ def _hamming_rank(sig_table: DataFrame, queries: DataFrame, k: int, *,
         return (scored.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k)
                 .select("query_id", "vec_id", "hamming_dist", "rank"))
-    if vecs is None:
-        raise ValueError("refine mode needs vectors= (the corpus table "
-                         "with the true vectors)")
     short = (scored.withColumn("_hr", F.row_number().over(w))
              .filter(F.col("_hr") <= refine)
              .drop("_hr"))
@@ -2417,82 +2168,17 @@ def _hamming_rank(sig_table: DataFrame, queries: DataFrame, k: int, *,
 
 def bq_write_index(embeddings: DataFrame, path: str, *, dim: int,
                    threshold: float = 0.0, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> int:
+                   vec_col: str = "embedding") -> dict:
     """Persist a binary-quantization index: the packed sign-bit
     signature table (vec_id, sig: d/64 longs — 256× smaller than
-    float32×4) under ``{path}/base`` with a ``_bq_meta.json`` sidecar
-    (dim, threshold). Unlike PQ there is NO training state — the
-    signature of a vector is a pure function of (vector, threshold) —
-    so appends need no frozen-codebook discipline and the index can
-    never drift from its quantizer. Returns the row count written."""
-    import json as _json
-    import os as _os
-
-    enc = binarize_embeddings(ensure_parallelism(embeddings),
-                              id_col=id_col, vec_col=vec_col, dim=dim,
-                              threshold=threshold)
-    enc.persist()
-    try:
-        n = enc.count()
-        enc.write.mode("overwrite").parquet(_os.path.join(path, "base"))
-    finally:
-        enc.unpersist()
-    _os.makedirs(path, exist_ok=True)
-    with open(_os.path.join(path, "_bq_meta.json"), "w") as f:
-        _json.dump({"dim": dim, "threshold": threshold}, f)
-    return n
-
-
-def bq_append_index(embeddings: DataFrame, path: str, *,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> int:
-    """Append new vectors' signatures — O(batch) map-only encode under
-    the sidecar's pinned (dim, threshold); prior files byte-untouched
-    (the ``pq_append_index`` contract)."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_bq_meta.json")) as f:
-        meta = _json.load(f)
-    enc = binarize_embeddings(embeddings, id_col=id_col, vec_col=vec_col,
-                              dim=meta["dim"], threshold=meta["threshold"])
-    enc.persist()
-    try:
-        n = enc.count()
-        enc.write.mode("append").parquet(_os.path.join(path, "base"))
-    finally:
-        enc.unpersist()
-    return n
-
-
-def bq_search_index(spark, path: str, queries: DataFrame, k: int = 10, *,
-                    refine: int | None = None,
-                    vectors: DataFrame | None = None,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    query_id_col: str = "query_id",
-                    query_vec_col: str = "query_vec") -> DataFrame:
-    """Probe a persisted BQ index: the Hamming scan reads ONLY the
-    packed signature column (the float vectors never move);
-    ``refine=R`` joins back just the R·Q shortlisted true vectors from
-    ``vectors``. Same deterministic output contract as
-    ``hamming_topk`` — the two are interchangeable row for row."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_bq_meta.json")) as f:
-        meta = _json.load(f)
-    sigs = spark.read.parquet(_os.path.join(path, "base"))
-    vecs = None
-    if refine is not None:
-        if vectors is None:
-            raise ValueError("refine mode needs vectors= (the corpus "
-                             "table with the true vectors)")
-        vecs = vectors.select(F.col(id_col).alias("vec_id"),
-                              as_double_array(F.col(vec_col)).alias("_cv"))
-    return _hamming_rank(sigs, queries, k, dim=meta["dim"],
-                         threshold=meta["threshold"], refine=refine,
-                         vecs=vecs, query_id_col=query_id_col,
-                         query_vec_col=query_vec_col)
+    float32×4) under ``{path}/base``, (dim, threshold) in the sidecar.
+    Unlike PQ there is NO training state — the signature of a vector
+    is a pure function of (vector, threshold) — so appends need no
+    frozen-codebook discipline and the index can never drift from its
+    quantizer."""
+    return _write_index(ensure_parallelism(embeddings), path,
+                        {"codec": "bq", "dim": dim, "threshold": threshold},
+                        id_col=id_col, vec_col=vec_col)
 
 
 # --------------------------------------------------------------------------
@@ -2596,7 +2282,7 @@ def sq8_topk(embeddings: DataFrame, queries: DataFrame, k: int = 10, *,
                                  as_double_array(F.col(vec_col)).alias("_cv"))
     return _sq8_rank(e, queries, k, train=train, refine=refine, vecs=vecs,
                      query_id_col=query_id_col,
-                     query_vec_col=query_vec_col, queries_raw=queries)
+                     query_vec_col=query_vec_col)
 
 
 def _sq8_scores(codes_table: DataFrame, queries: DataFrame,
@@ -2647,13 +2333,10 @@ def _sq8_rank(codes_table: DataFrame, queries: DataFrame, k: int, *,
               train: tuple[list[float], list[float]],
               refine: int | None, vecs: DataFrame | None,
               query_id_col: str = "query_id",
-              query_vec_col: str = "query_vec",
-              queries_raw: DataFrame | None = None) -> DataFrame:
+              query_vec_col: str = "query_vec") -> DataFrame:
     """Shared rank body for the one-shot and persisted-index SQ8 forms:
     (codes_table: vec_id, codes) × broadcast query codes → integer
     distance window, optional exact-cosine refine."""
-    if queries_raw is None:
-        queries_raw = queries
     scored = _sq8_scores(codes_table, queries, train,
                          query_id_col=query_id_col,
                          query_vec_col=query_vec_col)
@@ -2664,12 +2347,8 @@ def _sq8_rank(codes_table: DataFrame, queries: DataFrame, k: int, *,
                 .select("query_id", "vec_id", "sq8_dist", "rank"))
     short = (scored.withColumn("_sr", F.row_number().over(w))
              .filter(F.col("_sr") <= refine).drop("_sr"))
-    if vecs is None:
-        raise ValueError("refine mode needs vectors= (the corpus table "
-                         "with the true vectors)")
-    qv = queries_raw.select(F.col(query_id_col).alias("query_id"),
-                            as_double_array(F.col(query_vec_col))
-                            .alias("_qv"))
+    qv = queries.select(F.col(query_id_col).alias("query_id"),
+                        as_double_array(F.col(query_vec_col)).alias("_qv"))
     ref = (short.join(vecs, on="vec_id").join(F.broadcast(qv), on="query_id")
            .select("query_id", "vec_id", "sq8_dist",
                    F.round(cosine(F.col("_cv"), F.col("_qv")), 6)
@@ -2790,74 +2469,225 @@ def cosine_topk_gemm(embeddings: DataFrame, queries: DataFrame,
 
 def sq8_write_index(embeddings: DataFrame, path: str, *, dim: int,
                     id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> tuple[list[float],
-                                                         list[float]]:
-    """Persist an SQ8 index: uint8 code table under ``{path}/base``
-    with the trained per-dim (min, max) grid in a ``_sq8_meta.json``
-    sidecar — the 4×-compression rung of the persisted ladder (float
-    IVF / PQ / BQ / SQ8 all share the build→append→probe contract).
-    The grid trains on THIS corpus (exact min/max aggregates) and is
-    frozen: appends encode under it so existing codes stay valid
-    (out-of-range values clamp to the edge cells — the standard SQ
-    drift behavior; rebuild when drift warrants)."""
-    import json as _json
-    import os as _os
-
+                    vec_col: str = "embedding") -> dict:
+    """Persist an SQ8 index: uint8 code table under ``{path}/base``,
+    the trained per-dim (min, max) grid in the sidecar — the
+    4×-compression rung of the persisted ladder. The grid trains on
+    THIS corpus (exact min/max aggregates) and is frozen: appends
+    encode under it so existing codes stay valid (out-of-range values
+    clamp to the edge cells — the standard SQ drift behavior; rebuild
+    when drift warrants)."""
     mins, maxs = sq8_train(embeddings, dim=dim, vec_col=vec_col)
-    enc = _sq8_encode_df(ensure_parallelism(embeddings), mins, maxs,
+    return _write_index(ensure_parallelism(embeddings), path,
+                        {"codec": "sq8", "dim": dim, "mins": mins,
+                         "maxs": maxs},
+                        id_col=id_col, vec_col=vec_col)
+
+
+# --------------------------------------------------------------------------
+# Persisted vector indexes: one lifecycle, five codecs
+#
+# A codec is what really differs between the index families: how the
+# trained state in its sidecar encodes a frame to (vec_id, codes…[,
+# cell]), and how it ranks those codes against queries. The rest is
+# written once below: ``{path}/_index.json`` (the sidecar, naming its
+# codec), the code table under ``{path}/base`` (partitioned by cell
+# when the codec has cells, so a probe's ``cell IN (...)`` prunes
+# directories), the single-encode append, and the code-table read that
+# ``streaming.ann``'s ingest stream extends with
+# ``{path}/stream/_batch_id=N``.
+
+_SIDECAR = "_index.json"
+
+
+class _Codec(NamedTuple):
+    encode: Callable   # (df, side, id_col, vec_col) -> code frame
+    rank: Callable     # (enc, q, side, k, *, nprobe, refine, vecs) -> top-k
+    codes: tuple       # code-table columns between vec_id and cell
+    cells: bool        # base/ is partitioned by cell; search takes nprobe=
+    refines: bool      # search takes refine= (re-rank against vectors=)
+
+
+def _pq_encode_side(df, side, id_col, vec_col):
+    return pq_encode(df, side["books"], id_col=id_col, vec_col=vec_col,
+                     rotation=_side_rotation(side))
+
+
+def _pq_rank_side(enc, q, side, k, *, nprobe, refine, vecs):
+    return _pq_adc_rank(enc, q, side["books"], k, refine=refine, vecs=vecs,
+                        rotation=_side_rotation(side))
+
+
+def _ivfpq_encode_side(df, side, id_col, vec_col):
+    return _ivfpq_encode(df, side["centroids"], side["books"],
+                         residual=side["residual"],
+                         rotation=_side_rotation(side),
                          id_col=id_col, vec_col=vec_col)
-    enc.write.mode("overwrite").parquet(_os.path.join(path, "base"))
-    with open(_os.path.join(path, "_sq8_meta.json"), "w") as f:
-        _json.dump({"dim": dim, "mins": mins, "maxs": maxs}, f)
-    return mins, maxs
 
 
-def sq8_append_index(embeddings: DataFrame, path: str, *,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> int:
-    """Append new vectors under the FROZEN sidecar grid — O(batch)
-    map-only encode, prior files byte-untouched (the
-    ``pq_append_index`` contract)."""
-    import json as _json
-    import os as _os
+def _ivfpq_rank_side(enc, q, side, k, *, nprobe, refine, vecs):
+    return _ivfpq_probe(enc, q, side["centroids"], side["books"], k,
+                        nprobe=nprobe, refine=refine, vecs=vecs,
+                        residual=side["residual"],
+                        rotation=_side_rotation(side))
 
-    with open(_os.path.join(path, "_sq8_meta.json")) as f:
-        meta = _json.load(f)
-    enc = _sq8_encode_df(embeddings, meta["mins"], meta["maxs"],
-                         id_col=id_col, vec_col=vec_col)
+
+def _bq_encode_side(df, side, id_col, vec_col):
+    return binarize_embeddings(df, id_col=id_col, vec_col=vec_col,
+                               dim=side["dim"], threshold=side["threshold"])
+
+
+def _bq_rank_side(enc, q, side, k, *, nprobe, refine, vecs):
+    return _hamming_rank(enc, q, k, dim=side["dim"],
+                         threshold=side["threshold"], refine=refine,
+                         vecs=vecs, query_vec_col="qv")
+
+
+def _sq8_encode_side(df, side, id_col, vec_col):
+    return _sq8_encode_df(df, side["mins"], side["maxs"], id_col=id_col,
+                          vec_col=vec_col)
+
+
+def _sq8_rank_side(enc, q, side, k, *, nprobe, refine, vecs):
+    return _sq8_rank(enc, q, k, train=(side["mins"], side["maxs"]),
+                     refine=refine, vecs=vecs, query_vec_col="qv")
+
+
+_CODECS = {
+    "ivf": _Codec(_ivf_encode, _ivf_rank, ("vec",), True, False),
+    "pq": _Codec(_pq_encode_side, _pq_rank_side, ("codes",), False, True),
+    "ivfpq": _Codec(_ivfpq_encode_side, _ivfpq_rank_side, ("codes",),
+                    True, True),
+    "bq": _Codec(_bq_encode_side, _bq_rank_side, ("sig",), False, True),
+    "sq8": _Codec(_sq8_encode_side, _sq8_rank_side, ("codes",), False, True),
+}
+
+
+def _read_sidecar(path: str) -> dict:
+    with open(os.path.join(path, _SIDECAR)) as f:
+        return json.load(f)
+
+
+def _write_codes(enc: DataFrame, dest: str, side: dict, mode: str) -> None:
+    w = enc.write.mode(mode)
+    if _CODECS[side["codec"]].cells:
+        w = w.partitionBy("cell")
+    w.parquet(dest)
+
+
+def _write_index(embeddings: DataFrame, path: str, side: dict, *,
+                 id_col: str, vec_col: str) -> dict:
+    """The one write every ``<family>_write_index`` ends in: encode the
+    corpus under the trained ``side``, overwrite ``{path}/base``, then
+    write the sidecar. Returns the sidecar."""
+    enc = _CODECS[side["codec"]].encode(embeddings, side, id_col, vec_col)
+    _write_codes(enc, os.path.join(path, "base"), side, "overwrite")
+    with open(os.path.join(path, _SIDECAR), "w") as f:
+        json.dump(side, f)
+    return side
+
+
+def append_index(embeddings: DataFrame, path: str, *,
+                 id_col: str = "vec_id", vec_col: str = "embedding") -> int:
+    """Append a NEW batch of vectors to a persisted index of any codec
+    without touching the existing data: the batch encodes under the
+    sidecar's FROZEN state (centroids, codebooks, rotation, grid,
+    threshold — never retrained, so existing codes stay valid; rebuild
+    when drift warrants) and the write appends only the new rows, into
+    their cell partitions when the codec has cells. Every prior file
+    stays byte-identical; cost is O(batch), never O(corpus).
+
+    The encoded batch is persisted so the row count and the write read
+    ONE encode. Returns the number of vectors appended."""
+    side = _read_sidecar(path)
+    enc = _CODECS[side["codec"]].encode(embeddings, side, id_col, vec_col)
     enc.persist()
     try:
         n = enc.count()
-        enc.write.mode("append").parquet(_os.path.join(path, "base"))
+        _write_codes(enc, os.path.join(path, "base"), side, "append")
     finally:
         enc.unpersist()
     return n
 
 
-def sq8_search_index(spark, path: str, queries: DataFrame, k: int = 10, *,
-                     refine: int | None = None,
-                     vectors: DataFrame | None = None,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     query_id_col: str = "query_id",
-                     query_vec_col: str = "query_vec") -> DataFrame:
-    """Probe a persisted SQ8 index: integer-distance scan over the
-    uint8 code table only (queries encode under the sidecar grid);
-    ``refine=R`` joins back the R·Q shortlisted true vectors. Output
-    contract identical to ``sq8_topk``."""
-    import json as _json
-    import os as _os
+def _read_codes(spark, path: str, side: dict, *,
+                max_stream_batch: int | None = None) -> DataFrame:
+    """The full code table of a persisted index: ``base`` plus, when
+    the continuous-ingest stream has appended any,
+    ``stream/_batch_id=N`` (``…/cell=C`` for cell codecs).
+    ``max_stream_batch`` (exclusive) keeps only STRICTLY EARLIER stream
+    batches — the replay-stability filter of
+    ``streaming.ann.ingest_batch``."""
+    codec = _CODECS[side["codec"]]
+    cols = ("vec_id", *codec.codes, *(("cell",) if codec.cells else ()))
+    enc = spark.read.parquet(os.path.join(path, "base")).select(*cols)
+    stream_root = os.path.join(path, "stream")
+    if os.path.isdir(stream_root):
+        s = spark.read.parquet(stream_root)
+        if max_stream_batch is not None:
+            s = s.filter(F.col("_batch_id") < max_stream_batch)
+        enc = enc.unionByName(s.select(*cols))
+    return enc
 
-    with open(_os.path.join(path, "_sq8_meta.json")) as f:
-        meta = _json.load(f)
-    codes = spark.read.parquet(_os.path.join(path, "base"))
+
+def _search_codes(enc: DataFrame, side: dict, queries: DataFrame, k: int,
+                  *, nprobe: int | None, refine: int | None,
+                  vectors: DataFrame | None, id_col: str, vec_col: str,
+                  query_id_col: str, query_vec_col: str) -> DataFrame:
+    """Rank a loaded code table against ``queries`` with the sidecar's
+    codec; rejects the arguments that codec cannot use."""
+    name = side["codec"]
+    codec = _CODECS[name]
+    if nprobe is not None and not codec.cells:
+        raise ValueError(f"nprobe={nprobe}: the {name} codec has no "
+                         f"cells, its scan reads every code")
+    if refine is not None and not codec.refines:
+        raise ValueError(f"refine={refine}: the {name} codec already "
+                         f"ranks by exact cosine")
+    if refine is not None and vectors is None:
+        raise ValueError("refine mode needs vectors= (the corpus table "
+                         "with the true vectors)")
+    q = queries.select(F.col(query_id_col).alias("query_id"),
+                       as_double_array(F.col(query_vec_col)).alias("qv"))
     vecs = None
     if refine is not None:
-        if vectors is None:
-            raise ValueError("refine mode needs vectors= (the corpus "
-                             "table with the true vectors)")
         vecs = vectors.select(F.col(id_col).alias("vec_id"),
                               as_double_array(F.col(vec_col)).alias("_cv"))
-    return _sq8_rank(codes, queries, k,
-                     train=(meta["mins"], meta["maxs"]), refine=refine,
-                     vecs=vecs, query_id_col=query_id_col,
-                     query_vec_col=query_vec_col)
+    return codec.rank(enc, q, side, k,
+                      nprobe=4 if nprobe is None else nprobe,
+                      refine=refine, vecs=vecs)
+
+
+def search_index(spark, path: str, queries: DataFrame, k: int = 10, *,
+                 nprobe: int | None = None, refine: int | None = None,
+                 vectors: DataFrame | None = None,
+                 id_col: str = "vec_id", vec_col: str = "embedding",
+                 query_id_col: str = "query_id",
+                 query_vec_col: str = "query_vec") -> DataFrame:
+    """Probe a persisted index with the codec its sidecar names.
+
+    - ``ivf``: exact cosine within each query's ``nprobe`` nearest
+      cells → (query_id, vec_id, cosine_sim, rank).
+    - ``pq``: ADC lookup-sum over every code → (…, adc_d2, rank).
+    - ``ivfpq``: ADC within the ``nprobe`` nearest cells (residual and
+      rotation as pinned) → (…, adc_d2, rank).
+    - ``bq``: Hamming over the packed signatures → (…, hamming_dist,
+      rank).
+    - ``sq8``: integer squared distance of the symmetric codes →
+      (…, sq8_dist, rank).
+
+    Cell codecs read only the probed ``cell=C`` directories; ``nprobe``
+    defaults to 4 there and is a ``ValueError`` elsewhere. ``refine=R``
+    (every codec but ivf, whose scan is already exact) re-ranks each
+    query's R-deep shortlist against ``vectors`` — the corpus table of
+    TRUE vectors, touched only for the R·Q shortlisted ids: pq/ivfpq
+    add ``exact_d2`` (squared L2), bq/sq8 add ``cosine_sim``. Output
+    rows equal the one-shot operators' (``ivf_topk``,
+    ``pq_adc_topk``, ``hamming_topk``, ``sq8_topk``) for the same
+    trained state; ties break to the lowest id."""
+    side = _read_sidecar(path)
+    return _search_codes(_read_codes(spark, path, side), side, queries, k,
+                         nprobe=nprobe, refine=refine, vectors=vectors,
+                         id_col=id_col, vec_col=vec_col,
+                         query_id_col=query_id_col,
+                         query_vec_col=query_vec_col)

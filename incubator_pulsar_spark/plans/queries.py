@@ -5580,9 +5580,9 @@ PQ_ADC_SQL = _pq_sql()
 
 
 def pq_index_topk_embeddings(spark, sf_dir):
-    """Persisted PQ index lifecycle under the exact oracle (similarity.
-    pq_write_index / pq_append_index / pq_search_index — the
-    ivf_append_index analogue for the compressed-code side): BUILD the
+    """Persisted PQ index lifecycle under the exact oracle
+    (similarity.pq_write_index / append_index / search_index, the pq
+    codec of the shared index lifecycle): BUILD the
     index from the even-id half of the corpus (codebooks train on that
     half's pool), APPEND the odd-id half encoded with the sidecar
     codebooks (prior files untouched, O(batch)), then PROBE the index
@@ -5603,14 +5603,14 @@ def _pqindex_build(spark, sf_dir):
     _sh.rmtree(d, ignore_errors=True)
     similarity.pq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                               dim=64, m=4, ksub=16)
-    similarity.pq_append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
+    similarity.append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
 
 
 def _pqindex_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.pq_search_index(spark, _scratch("pqindex", sf_dir),
-                                      _probe_queries(emb), k=10, refine=100,
-                                      vectors=emb)
+    return similarity.search_index(spark, _scratch("pqindex", sf_dir),
+                                   _probe_queries(emb), k=10, refine=100,
+                                   vectors=emb)
 
 
 PQ_INDEX_SQL = _pq_sql(train_where="vec_id % 2 = 0")
@@ -5640,7 +5640,7 @@ PQ_LLOYD_SQL = _pq_sql(lloyd_iters=2)
 
 def ivfpq_topk_embeddings(spark, sf_dir):
     """IVFADC under an exact oracle (similarity.ivfpq_write_index /
-    ivfpq_search_index — Jégou et al. 2011 §IV, the composed index the
+    search_index — Jégou et al. 2011 §IV, the composed index the
     paper actually ships): coarse-quantize to 8 IVF cells AND
     PQ-encode (m=4 × 16 codewords), persist codes PARTITIONED BY CELL,
     then probe with 5 queries at nprobe=3 — directory pruning cuts the
@@ -5665,9 +5665,9 @@ def _ivfpq_build(spark, sf_dir):
 
 def _ivfpq_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_search_index(spark, _scratch("ivfpq", sf_dir),
-                                         _probe_queries(emb), k=10, nprobe=3,
-                                         refine=100, vectors=emb)
+    return similarity.search_index(spark, _scratch("ivfpq", sf_dir),
+                                   _probe_queries(emb), k=10, nprobe=3,
+                                   refine=100, vectors=emb)
 
 
 def _ivfpq_sql(n_cells: int = 8, nprobe: int = 3, dim: int = 64,
@@ -5677,7 +5677,7 @@ def _ivfpq_sql(n_cells: int = 8, nprobe: int = 3, dim: int = 64,
                enc_where: str | None = None,
                query_where: str = "vec_id < 5",
                rotation: tuple[list[int], list[int]] | None = None) -> str:
-    """Replay ivfpq_write_index + ivfpq_search_index in pure SQL by
+    """Replay ivfpq_write_index + search_index in pure SQL by
     COMPOSING the two proven chains: _ivf_assign_parts contributes the
     coarse quantizer (cells, per-vector cell in ``assigned``),
     _pq_chain_parts the codebooks and encoded corpus (both train on
@@ -5840,17 +5840,17 @@ def _ivfpqr_build(spark, sf_dir):
 
 def _ivfpqr_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_search_index(spark, _scratch("ivfpqr", sf_dir),
-                                         _probe_queries(emb), k=10, nprobe=3,
-                                         refine=100, vectors=emb)
+    return similarity.search_index(spark, _scratch("ivfpqr", sf_dir),
+                                   _probe_queries(emb), k=10, nprobe=3,
+                                   refine=100, vectors=emb)
 
 
 IVFPQ_RESIDUAL_SQL = _ivfpq_sql(residual=True)
 
 
 def pq_fold_topk_embeddings(spark, sf_dir):
-    """PQ ingest-stream FOLD lifecycle (streaming.ann.pq_ingest_batch +
-    pq_fold_stream — VERDICT r8 #1, the last unbounded-growth surface
+    """PQ ingest-stream FOLD lifecycle (streaming.ann.ingest_batch +
+    fold_stream — VERDICT r8 #1, the last unbounded-growth surface
     in the 100 TB ANN story): BUILD the index from the even-id half
     (codebooks train there), INGEST the odd half as two stream batches
     (each probing strictly-earlier state, appending its codes under
@@ -5866,7 +5866,7 @@ def pq_fold_topk_embeddings(spark, sf_dir):
 def _pqfold_build(spark, sf_dir):
     import shutil as _sh
 
-    from ..streaming.ann import pq_fold_stream, pq_ingest_batch
+    from ..streaming.ann import fold_stream, ingest_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     d = _scratch("pqfold", sf_dir)
@@ -5874,18 +5874,18 @@ def _pqfold_build(spark, sf_dir):
     _sh.rmtree(d + "_out", ignore_errors=True)
     similarity.pq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                               dim=64, m=4, ksub=16)
-    pq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
-                    index_path=d, out_path=d + "_out", k=5)
-    pq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
-                    index_path=d, out_path=d + "_out", k=5)
-    pq_fold_stream(spark, d)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
+                 index_path=d, out_path=d + "_out", k=5)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
+                 index_path=d, out_path=d + "_out", k=5)
+    fold_stream(spark, d)
 
 
 def _pqfold_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.pq_search_index(spark, _scratch("pqfold", sf_dir),
-                                      _probe_queries(emb), k=10, refine=100,
-                                      vectors=emb)
+    return similarity.search_index(spark, _scratch("pqfold", sf_dir),
+                                   _probe_queries(emb), k=10, refine=100,
+                                   vectors=emb)
 
 
 PQ_FOLD_SQL = _pq_sql(train_where="vec_id % 2 = 0")
@@ -5898,7 +5898,7 @@ def ivfpq_fold_topk_embeddings(spark, sf_dir):
     quantizer — survives the fold (plan-locked in
     tests/test_round9.py). Build on the even half freezes centroids
     AND codebooks; two odd-half ingest batches land under
-    stream/_batch_id=N/cell=C; ivfpq_fold_stream consolidates; the
+    stream/_batch_id=N/cell=C; fold_stream consolidates; the
     probe prunes to 3 of 8 cells and exact-refines. Oracle: the proven
     composed IVF+PQ chain with the training POOL restricted to the
     build half."""
@@ -5909,7 +5909,7 @@ def ivfpq_fold_topk_embeddings(spark, sf_dir):
 def _ivffold_build(spark, sf_dir):
     import shutil as _sh
 
-    from ..streaming.ann import ivfpq_fold_stream, ivfpq_ingest_batch
+    from ..streaming.ann import fold_stream, ingest_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     d = _scratch("ivffold", sf_dir)
@@ -5917,18 +5917,18 @@ def _ivffold_build(spark, sf_dir):
     _sh.rmtree(d + "_out", ignore_errors=True)
     similarity.ivfpq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                                  dim=64, m=4, ksub=16, n_cells=8)
-    ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
-                       index_path=d, out_path=d + "_out", k=5, nprobe=3)
-    ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
-                       index_path=d, out_path=d + "_out", k=5, nprobe=3)
-    ivfpq_fold_stream(spark, d)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
+                 index_path=d, out_path=d + "_out", k=5, nprobe=3)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
+                 index_path=d, out_path=d + "_out", k=5, nprobe=3)
+    fold_stream(spark, d)
 
 
 def _ivffold_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_search_index(spark, _scratch("ivffold", sf_dir),
-                                         _probe_queries(emb), k=10, nprobe=3,
-                                         refine=100, vectors=emb)
+    return similarity.search_index(spark, _scratch("ivffold", sf_dir),
+                                   _probe_queries(emb), k=10, nprobe=3,
+                                   refine=100, vectors=emb)
 
 
 IVFPQ_FOLD_SQL = _ivfpq_sql(train_where="vec_id % 2 = 0")
@@ -5955,7 +5955,7 @@ def ann_rerank_report(spark, sf_dir):
 def _rerank_build(spark, sf_dir):
     import shutil as _sh
 
-    from ..streaming.ann import pq_ingest_batch
+    from ..streaming.ann import ingest_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     d = _scratch("rerank", sf_dir)
@@ -5963,8 +5963,8 @@ def _rerank_build(spark, sf_dir):
     _sh.rmtree(d + "_out", ignore_errors=True)
     similarity.pq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                               dim=64, m=4, ksub=16)
-    pq_ingest_batch(emb.filter(F.col("vec_id") % 2 == 1), 0,
-                    index_path=d, out_path=d + "_out", k=100)
+    ingest_batch(emb.filter(F.col("vec_id") % 2 == 1), 0,
+                 index_path=d, out_path=d + "_out", k=100)
 
 
 def _rerank_probe(spark, sf_dir):
@@ -6050,9 +6050,9 @@ def _ivfauto_build(spark, sf_dir):
 
 def _ivfauto_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_search_index(spark, _scratch("ivfauto", sf_dir),
-                                         _probe_queries(emb), k=10, nprobe=3,
-                                         refine=100, vectors=emb)
+    return similarity.search_index(spark, _scratch("ivfauto", sf_dir),
+                                   _probe_queries(emb), k=10, nprobe=3,
+                                   refine=100, vectors=emb)
 
 
 IVFPQ_AUTO_SQL = _ivfpq_sql()
@@ -6078,7 +6078,7 @@ def ann_rerank_bounded(spark, sf_dir):
 def _rerankb_build(spark, sf_dir):
     import shutil as _sh
 
-    from ..streaming.ann import pq_ingest_batch
+    from ..streaming.ann import ingest_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     d = _scratch("rerankb", sf_dir)
@@ -6087,10 +6087,10 @@ def _rerankb_build(spark, sf_dir):
     _sh.rmtree(d + "_rep", ignore_errors=True)
     similarity.pq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                               dim=64, m=4, ksub=16)
-    pq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
-                    index_path=d, out_path=d + "_out", k=100)
-    pq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
-                    index_path=d, out_path=d + "_out", k=100)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
+                 index_path=d, out_path=d + "_out", k=100)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
+                 index_path=d, out_path=d + "_out", k=100)
 
 
 def _rerankb_probe(spark, sf_dir):
@@ -6114,7 +6114,7 @@ RERANK_BOUNDED_SQL = _pq_sql(train_where="vec_id % 2 = 0",
 def ivfpq_rerank_bounded(spark, sf_dir):
     """Bounded rerank over the IVFADC ingest stream's candidate log
     (VERDICT r10 missing #5 — the composition the flat-PQ rerank gates
-    left unexercised: ivfpq_ingest_batch writes the same log schema,
+    left unexercised: an ivfpq ingest_batch writes the same log schema,
     but its shortlist is CELL-PRUNED, so a rerank bug that only bites
     the nprobe-restricted candidate set would pass the flat gates):
     build the cell-partitioned index on the even half (centroids AND
@@ -6134,7 +6134,7 @@ def ivfpq_rerank_bounded(spark, sf_dir):
 def _ivfrerankb_build(spark, sf_dir):
     import shutil as _sh
 
-    from ..streaming.ann import ivfpq_ingest_batch
+    from ..streaming.ann import ingest_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     d = _scratch("ivfrerankb", sf_dir)
@@ -6143,10 +6143,10 @@ def _ivfrerankb_build(spark, sf_dir):
     _sh.rmtree(d + "_rep", ignore_errors=True)
     similarity.ivfpq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                                  dim=64, m=4, ksub=16, n_cells=8)
-    ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
-                       index_path=d, out_path=d + "_out", k=100, nprobe=3)
-    ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
-                       index_path=d, out_path=d + "_out", k=100, nprobe=3)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
+                 index_path=d, out_path=d + "_out", k=100, nprobe=3)
+    ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
+                 index_path=d, out_path=d + "_out", k=100, nprobe=3)
 
 
 def _ivfrerankb_probe(spark, sf_dir):
@@ -6307,9 +6307,9 @@ def _ivfrot_build(spark, sf_dir):
 
 def _ivfrot_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_search_index(spark, _scratch("ivfrot", sf_dir),
-                                         _probe_queries(emb), k=10, nprobe=3,
-                                         refine=100, vectors=emb)
+    return similarity.search_index(spark, _scratch("ivfrot", sf_dir),
+                                   _probe_queries(emb), k=10, nprobe=3,
+                                   refine=100, vectors=emb)
 
 
 IVFPQ_ROTATED_SQL = _ivfpq_sql(residual=True,
@@ -6322,7 +6322,7 @@ def pq_rotated_topk_embeddings(spark, sf_dir):
     signed permutation so the isometry is EXACT on both engines): the
     full persisted-index lifecycle — build the index on the even half
     with rotate=True (codebooks train in rotated space, the rotation
-    pins in the _rotation.json sidecar), append the odd half (encoded
+    pins in the _index.json sidecar), append the odd half (encoded
     rotated via the sidecar), probe with 5 queries whose ADC tables
     are built in rotated space while the exact-refine stage compares
     RAW vectors in raw element order. The oracle replays the identical
@@ -6342,14 +6342,14 @@ def _pqrot_build(spark, sf_dir):
     _sh.rmtree(d, ignore_errors=True)
     similarity.pq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                               dim=64, m=4, ksub=16, rotate=True)
-    similarity.pq_append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
+    similarity.append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
 
 
 def _pqrot_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.pq_search_index(spark, _scratch("pqrot", sf_dir),
-                                      _probe_queries(emb), k=10, refine=100,
-                                      vectors=emb)
+    return similarity.search_index(spark, _scratch("pqrot", sf_dir),
+                                   _probe_queries(emb), k=10, refine=100,
+                                   vectors=emb)
 
 
 PQ_ROTATED_SQL = _pq_sql(train_where="vec_id % 2 = 0",
@@ -6632,7 +6632,7 @@ def bq_index_topk_embeddings(spark, sf_dir):
     PURE FUNCTION of (vector, threshold) — no training state — so the
     oracle is the one-shot BQ chain verbatim: lifecycle == one-shot is
     exactly the property the gate proves
-    (`similarity.bq_write_index/bq_append_index/bq_search_index`)."""
+    (`similarity.bq_write_index/append_index/search_index`)."""
     _bqidx_build(spark, sf_dir)
     return _bqidx_probe(spark, sf_dir)
 
@@ -6644,14 +6644,14 @@ def _bqidx_build(spark, sf_dir):
     d = _scratch("bqidx", sf_dir)
     _sh.rmtree(d, ignore_errors=True)
     similarity.bq_write_index(emb.filter(F.col("vec_id") % 2 == 0), d, dim=64)
-    similarity.bq_append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
+    similarity.append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
 
 
 def _bqidx_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.bq_search_index(spark, _scratch("bqidx", sf_dir),
-                                      _probe_queries(emb), k=10, refine=50,
-                                      vectors=emb)
+    return similarity.search_index(spark, _scratch("bqidx", sf_dir),
+                                   _probe_queries(emb), k=10, refine=50,
+                                   vectors=emb)
 
 
 BQ_INDEX_SQL = BQ_TOPK_SQL  # training-free: lifecycle == one-shot
@@ -6926,7 +6926,7 @@ def sq8_index_topk_embeddings(spark, sf_dir):
     """Persisted SQ8 index lifecycle: grid trains on the even half
     (frozen in the sidecar), codes for build + appended odd half,
     integer-distance probe with exact refine
-    (`similarity.sq8_write_index/sq8_append_index/sq8_search_index`).
+    (`similarity.sq8_write_index/append_index/search_index`).
     The oracle re-points ONLY the grid-training CTE at the build half —
     proving appends encode under the frozen grid, not a retrained
     one."""
@@ -6942,14 +6942,14 @@ def _sq8idx_build(spark, sf_dir):
     _sh.rmtree(d, ignore_errors=True)
     similarity.sq8_write_index(emb.filter(F.col("vec_id") % 2 == 0), d,
                                dim=64)
-    similarity.sq8_append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
+    similarity.append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
 
 
 def _sq8idx_probe(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.sq8_search_index(spark, _scratch("sq8idx", sf_dir),
-                                       _probe_queries(emb), k=10, refine=50,
-                                       vectors=emb)
+    return similarity.search_index(spark, _scratch("sq8idx", sf_dir),
+                                   _probe_queries(emb), k=10, refine=50,
+                                   vectors=emb)
 
 
 SQ8_INDEX_SQL = _sq8_sql(train_where="vec_id % 2 = 0")

@@ -1,14 +1,14 @@
 """Continuous-ingest similarity search: per-micro-batch ANN probe +
-index maintenance over a persisted PQ index.
+index maintenance over a persisted vector index.
 
-The batch PQ family (``functions.similarity.pq_write_index`` /
-``pq_append_index`` / ``pq_search_index``) covers build-time and
-periodic maintenance; this module covers the case where embeddings
-ARRIVE as a stream (fresh crawl vectors, embedding-service output) and
-each batch must (1) find its nearest neighbors among EVERYTHING
-ingested earlier and (2) join the index itself — the similarity-search
-twin of ``streaming.corpus.start_neardup_candidates_stream``, under
-the same replay discipline:
+The batch lifecycle (``functions.similarity``'s ``<family>_write_index``
+/ ``append_index`` / ``search_index``) covers build-time and periodic
+maintenance; this module covers the case where embeddings ARRIVE as a
+stream (fresh crawl vectors, embedding-service output) and each batch
+must (1) find its nearest neighbors among EVERYTHING ingested earlier
+and (2) join the index itself — the similarity-search twin of
+``streaming.corpus.start_neardup_candidates_stream``, under the same
+replay discipline:
 
 - probe strictly-earlier state only (``_batch_id < batch_id``): on a
   crash REPLAY this batch's own codes are already on disk, and
@@ -19,24 +19,24 @@ the same replay discipline:
   batch rewrites its own directories idempotently (the late.py
   pattern, shared with the quality monitor and neardup streams).
 
-The streaming probe is the raw ADC scan (codes only — dim·8
-bytes/vector never move). EXACT re-ranking of the accumulated
-candidate log is a periodic batch job (``rerank_candidate_log``) —
-the same continuous/periodic split the neardup stream makes between
-candidate generation and exact verification, and the reference makes
-between its data plane and compaction. A second periodic job,
-``pq_fold_stream`` / ``ivfpq_fold_stream``, compacts the accumulated
-``stream/_batch_id=N`` directories so probe-side file counts stay
-flat on a long-lived ingest (the ``compact_minhash_index``
-discipline).
+Any codec ingests; the index's sidecar picks the encoder and the
+probe, and cell codecs (ivf, ivfpq) append under
+``stream/_batch_id=N/cell=C`` so later probes keep directory-level
+pruning over streamed rows too. For the ADC codecs (pq, ivfpq) the
+streaming probe is the raw ADC scan (codes only — dim·8 bytes/vector
+never move), and EXACT re-ranking of the accumulated candidate log is
+a periodic batch job (``rerank_candidate_log``) — the same
+continuous/periodic split the neardup stream makes between candidate
+generation and exact verification, and the reference makes between
+its data plane and compaction. A second periodic job,
+``fold_stream``, compacts the accumulated ``stream/_batch_id=N``
+directories so probe-side file counts stay flat on a long-lived
+ingest (the ``compact_minhash_index`` discipline).
 
 Per-batch cost is O(batch · index-codes): the scan reads only the
-code table — stored as a parquet ARRAY<INT> of m small codeword
-indexes per vector, so the on-disk size is encoding-dependent while
-m·log2(ksub) bits is the information content it carries; either way
-it is a small constant independent of dim — the codebooks broadcast
-once, and the only shuffle is the per-query top-k window. The
-corpus's raw vectors are never rescanned.
+code table, the trained state broadcasts once, and the only shuffle
+is the per-query top-k window. The corpus's raw vectors are never
+rescanned.
 """
 
 from __future__ import annotations
@@ -47,58 +47,53 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.similarity import (_ivfpq_encode, _ivfpq_probe,
-                                    _ivfpq_read_codes, _maxsim_rank,
-                                    _maxsim_scores, _pq_adc_rank,
-                                    _pq_load_rotation, _pq_read_codes,
-                                    _side_rotation, as_double_array,
-                                    pq_encode)
+from ..functions.similarity import (_CODECS, _maxsim_rank, _maxsim_scores,
+                                    _read_codes, _read_sidecar,
+                                    _search_codes, _write_codes,
+                                    as_double_array)
 
 
-def pq_ingest_batch(batch_df: DataFrame, batch_id: int, *,
-                    index_path: str, out_path: str, k: int = 10,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> None:
+def ingest_batch(batch_df: DataFrame, batch_id: int, *, index_path: str,
+                 out_path: str, k: int = 10, nprobe: int | None = None,
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> None:
     """One micro-batch of the ingest stream, public so a crash REPLAY
     is directly testable: probe the index as it stood BEFORE this
-    batch (base + stream batches < batch_id), write this batch's ADC
-    top-k under ``out/_batch_id=N``, then append this batch's codes
-    under ``index/stream/_batch_id=N`` — both overwrites, so a re-run
-    of the same (rows, batch_id) rewrites itself byte-for-byte."""
+    batch (base + stream batches < batch_id; ``nprobe`` cells per query
+    for cell codecs, as in ``search_index``), write this batch's top-k
+    under ``out/_batch_id=N``, then append this batch's codes under
+    ``index/stream/_batch_id=N`` — both overwrites, so a re-run of the
+    same (rows, batch_id) rewrites itself byte-for-byte."""
     spark = batch_df.sparkSession
-    with open(os.path.join(index_path, "_codebooks.json")) as f:
-        books = json.load(f)
-    rotation = _pq_load_rotation(index_path)
-
-    enc_prior = _pq_read_codes(spark, index_path,
-                               max_stream_batch=batch_id)
-    q = batch_df.select(F.col(id_col).alias("query_id"),
-                        as_double_array(F.col(vec_col)).alias("qv"))
-    hits = _pq_adc_rank(enc_prior, q, books, k, refine=None, vecs=None,
-                        rotation=rotation)
+    side = _read_sidecar(index_path)
+    prior = _read_codes(spark, index_path, side, max_stream_batch=batch_id)
+    hits = _search_codes(prior, side, batch_df, k, nprobe=nprobe,
+                         refine=None, vectors=None, id_col=id_col,
+                         vec_col=vec_col, query_id_col=id_col,
+                         query_vec_col=vec_col)
     hits.write.mode("overwrite").parquet(
         os.path.join(out_path, f"_batch_id={batch_id}"))
 
-    enc_own = pq_encode(batch_df, books, id_col=id_col, vec_col=vec_col,
-                        rotation=rotation)
-    enc_own.write.mode("overwrite").parquet(
-        os.path.join(index_path, "stream", f"_batch_id={batch_id}"))
+    own = _CODECS[side["codec"]].encode(batch_df, side, id_col, vec_col)
+    _write_codes(own, os.path.join(index_path, "stream",
+                                   f"_batch_id={batch_id}"),
+                 side, "overwrite")
 
 
-def start_pq_ingest_stream(
+def start_ingest_stream(
     embeddings: DataFrame, *, index_path: str, out_path: str,
-    checkpoint_path: str, k: int = 10,
+    checkpoint_path: str, k: int = 10, nprobe: int | None = None,
     id_col: str = "vec_id", vec_col: str = "embedding",
     available_now: bool = False,
 ):
-    """Continuous PQ ingest over a stream of embedding rows. The index
-    at ``index_path`` must exist (``pq_write_index`` — the codebooks
-    are frozen there; stream batches encode with them, never retrain,
-    the standard PQ contract). Returns the StreamingQuery."""
+    """Continuous ingest over a stream of embedding rows. The index at
+    ``index_path`` must exist (a ``<family>_write_index`` — its trained
+    state is frozen there; stream batches encode with it, never
+    retrain). Returns the StreamingQuery."""
     def process(batch_df, batch_id: int) -> None:
-        pq_ingest_batch(batch_df, batch_id, index_path=index_path,
-                        out_path=out_path, k=k,
-                        id_col=id_col, vec_col=vec_col)
+        ingest_batch(batch_df, batch_id, index_path=index_path,
+                     out_path=out_path, k=k, nprobe=nprobe,
+                     id_col=id_col, vec_col=vec_col)
 
     writer = (embeddings.writeStream.foreachBatch(process)
               .option("checkpointLocation", checkpoint_path))
@@ -257,17 +252,20 @@ def _resolve_committed(checkpoint_path: str | None,
     return None
 
 
-def pq_fold_stream(spark, index_path: str, *,
-                   checkpoint_path: str | None = None,
-                   committed_through: int | None = None) -> int:
-    """Fold the flat PQ ingest stream's ``stream/_batch_id=N``
-    directories into ``stream/_batch_id=-1`` (``_fold_stream_dirs``) —
-    without this, a long-lived 100 TB ingest accumulates one directory
-    per micro-batch forever and every probe lists and unions all of
-    them (the classic small-file blow-up the LSH near-dup stream's
+def fold_stream(spark, index_path: str, *,
+                checkpoint_path: str | None = None,
+                committed_through: int | None = None) -> int:
+    """Fold the ingest stream's ``stream/_batch_id=N`` directories into
+    ``stream/_batch_id=-1`` (``_fold_stream_dirs``) — without this, a
+    long-lived 100 TB ingest accumulates one directory per micro-batch
+    forever and every probe lists and unions all of them (the classic
+    small-file blow-up the LSH near-dup stream's
     ``compact_minhash_index`` already solves). Probe results are
     byte-identical before/after: the fold moves rows between
-    directories, never changes them.
+    directories, never changes them. Cell codecs keep their CELL
+    partitioning (``_batch_id=-1/cell=C``), so directory-level cell
+    pruning — the whole point of the coarse quantizer — survives the
+    fold.
 
     Pass ``checkpoint_path`` (the ingest stream's checkpoint) to fold
     ONLY batches the stream has committed — the safe default for a
@@ -275,25 +273,10 @@ def pq_fold_stream(spark, index_path: str, *,
     replay over its own folded codes duplicates them. An explicit
     ``committed_through`` overrides; both ``None`` folds everything
     and is safe only after a clean termination."""
-    return _fold_stream_dirs(
-        spark, os.path.join(index_path, "stream"), partition_cols=(),
-        committed_through=_resolve_committed(checkpoint_path,
-                                             committed_through))
-
-
-def ivfpq_fold_stream(spark, index_path: str, *,
-                      checkpoint_path: str | None = None,
-                      committed_through: int | None = None) -> int:
-    """``pq_fold_stream`` for the IVFADC ingest stream: folded rows
-    keep their CELL partitioning (``_batch_id=-1/cell=C``), so
-    directory-level cell pruning — the whole point of the coarse
-    quantizer — survives the fold (consolidation, byte-identical
-    probes, and the post-fold PartitionFilters plan are all locked in
-    ``tests/test_round9.py``). Same ``checkpoint_path`` /
-    ``committed_through`` replay guard as ``pq_fold_stream``."""
+    cells = _CODECS[_read_sidecar(index_path)["codec"]].cells
     return _fold_stream_dirs(
         spark, os.path.join(index_path, "stream"),
-        partition_cols=("cell",),
+        partition_cols=("cell",) if cells else (),
         committed_through=_resolve_committed(checkpoint_path,
                                              committed_through))
 
@@ -306,12 +289,12 @@ def rerank_candidate_log(spark, out_path: str, vectors: DataFrame, *,
                          retire: bool = False) -> DataFrame:
     """Periodic EXACT re-rank over the ingest stream's candidate log —
     the batch half of the continuous/periodic split this module's
-    header promises: the stream emits raw-ADC top-k per batch
-    (approximate, codes-only); this job reads the ``out/_batch_id=N``
+    header promises: a pq or ivfpq ingest stream emits raw-ADC top-k
+    per batch (approximate, codes-only); this job reads the ``out/_batch_id=N``
     directories, fetches TRUE vectors for exactly the logged (query,
     candidate) pairs by id equi-join, and re-ranks each query's
     accumulated shortlist by exact squared L2 — the ``refine=`` stage
-    of ``pq_search_index``, applied to the log instead of a fresh
+    of ``search_index``, applied to the log instead of a fresh
     scan. The log deduplicates on (query_id, vec_id) first: a query
     probed in more than one ingest batch logs the same candidate once
     per batch, and ranking the raw pairs would let duplicates crowd
@@ -439,7 +422,7 @@ def maxsim_ingest_batch(batch_df: DataFrame, batch_id: int, *,
                         doc_id_col: str = "doc_id",
                         tokens_col: str = "tokens") -> None:
     """One micro-batch of the streaming MaxSim retriever — the
-    late-interaction twin of ``pq_ingest_batch``, public so a crash
+    late-interaction twin of ``ingest_batch``, public so a crash
     REPLAY is directly testable. Incoming rows carry a WHOLE document
     token bag each (``tokens`` = array of token vectors) — the natural
     multi-vector document row, and the atomicity that makes per-batch
@@ -510,61 +493,3 @@ def maxsim_topk_from_log(spark, out_path: str, k: int = 10) -> DataFrame:
     log = spark.read.option("basePath", out_path).parquet(
         *[os.path.join(out_path, f"_batch_id={i}") for i in present])
     return _maxsim_rank(log.select("query_id", "doc_id", "score"), k)
-
-
-def ivfpq_ingest_batch(batch_df: DataFrame, batch_id: int, *,
-                       index_path: str, out_path: str, k: int = 10,
-                       nprobe: int = 4, id_col: str = "vec_id",
-                       vec_col: str = "embedding") -> None:
-    """``pq_ingest_batch`` for the cell-partitioned IVFADC index: the
-    probe additionally prunes to nprobe cells per query (the whole
-    point of the coarse quantizer under continuous ingest — each
-    batch's neighbor search reads nprobe/n_cells of the accumulated
-    codes, not all of them), and the batch's own appends land under
-    ``stream/_batch_id=N/cell=C`` so later probes keep directory-level
-    pruning over streamed rows too. Same replay discipline: probe
-    strictly-earlier state, overwrite exactly your own directories."""
-    spark = batch_df.sparkSession
-    with open(os.path.join(index_path, "_ivfpq.json")) as f:
-        side = json.load(f)
-    cents, books = side["centroids"], side["books"]
-    residual = side.get("residual", False)
-    rotation = _side_rotation(side)
-
-    enc_prior = _ivfpq_read_codes(spark, index_path,
-                                  max_stream_batch=batch_id)
-    q = batch_df.select(F.col(id_col).alias("query_id"),
-                        as_double_array(F.col(vec_col)).alias("qv"))
-    hits = _ivfpq_probe(enc_prior, q, cents, books, k,
-                        nprobe=nprobe, refine=None, vecs=None,
-                        residual=residual, rotation=rotation)
-    hits.write.mode("overwrite").parquet(
-        os.path.join(out_path, f"_batch_id={batch_id}"))
-
-    own = _ivfpq_encode(batch_df, cents, books, residual=residual,
-                        rotation=rotation,
-                        id_col=id_col, vec_col=vec_col)
-    own.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_path, "stream", f"_batch_id={batch_id}"))
-
-
-def start_ivfpq_ingest_stream(
-    embeddings: DataFrame, *, index_path: str, out_path: str,
-    checkpoint_path: str, k: int = 10, nprobe: int = 4,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    available_now: bool = False,
-):
-    """Continuous IVFADC ingest (``ivfpq_write_index`` must have built
-    the index — centroids AND codebooks are frozen there; stream
-    batches quantize with them, never retrain). Returns the
-    StreamingQuery."""
-    def process(batch_df, batch_id: int) -> None:
-        ivfpq_ingest_batch(batch_df, batch_id, index_path=index_path,
-                           out_path=out_path, k=k, nprobe=nprobe,
-                           id_col=id_col, vec_col=vec_col)
-
-    writer = (embeddings.writeStream.foreachBatch(process)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

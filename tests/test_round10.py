@@ -203,10 +203,9 @@ class TestPQRotation:
                                                       sf_dir, tmp_path):
         """write(rotate=True) + append + search == the one-shot
         pq_adc_topk(rotate=True) over the full corpus — append and
-        probe both honor the pinned _rotation.json sidecar."""
+        probe both honor the rotation pinned in the sidecar."""
         from incubator_pulsar_spark.functions import similarity
         import json as _json
-        import os as _os
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
             .select("vec_id", "embedding")
@@ -216,12 +215,11 @@ class TestPQRotation:
         idx = str(tmp_path / "pqrot")
         books = similarity.pq_write_index(
             emb.filter(F.col("vec_id") % 5 != 0), idx,
-            dim=64, m=4, ksub=16, rotate=True)
-        assert _os.path.exists(f"{idx}/_rotation.json")
-        similarity.pq_append_index(
+            dim=64, m=4, ksub=16, rotate=True)["books"]
+        similarity.append_index(
             emb.filter(F.col("vec_id") % 5 == 0), idx)
 
-        got = sorted(map(tuple, similarity.pq_search_index(
+        got = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=5, refine=20, vectors=emb).collect()))
         # one-shot reference under the SAME (build-half) books: encode
         # everything rotated, rank, refine raw
@@ -236,7 +234,7 @@ class TestPQRotation:
             rotation=rot).collect()))
         assert got == want
         # sidecar round-trips the exact rotation
-        side = _json.load(open(f"{idx}/_rotation.json"))
+        side = _json.load(open(f"{idx}/_index.json"))["rotation"]
         assert (side["perm"], side["signs"]) == rot
 
     def test_rotation_changes_codes_not_exact_distances(self, spark,
@@ -268,7 +266,7 @@ class TestPQRotation:
         rotated space (codes equal pq_encode with the sidecar
         rotation), or later probes would mix spaces silently."""
         from incubator_pulsar_spark.functions import similarity
-        from incubator_pulsar_spark.streaming.ann import pq_ingest_batch
+        from incubator_pulsar_spark.streaming.ann import ingest_batch
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
             .select("vec_id", "embedding")
@@ -276,8 +274,8 @@ class TestPQRotation:
         batch = emb.filter(F.col("vec_id") % 2 == 1)
         idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
         books = similarity.pq_write_index(base, idx, dim=64, m=4,
-                                          ksub=16, rotate=True)
-        pq_ingest_batch(batch, 0, index_path=idx, out_path=out, k=3)
+                                          ksub=16, rotate=True)["books"]
+        ingest_batch(batch, 0, index_path=idx, out_path=out, k=3)
         got = {r.vec_id: list(r.codes) for r in
                spark.read.parquet(f"{idx}/stream").collect()}
         want = {r.vec_id: list(r.codes) for r in similarity.pq_encode(
@@ -454,7 +452,7 @@ class TestMaxSim:
         from incubator_pulsar_spark.functions import similarity
         from incubator_pulsar_spark.functions.similarity import (
             _ivfpq_encode, _ivfpq_probe)
-        from incubator_pulsar_spark.streaming.ann import ivfpq_ingest_batch
+        from incubator_pulsar_spark.streaming.ann import ingest_batch
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
             .select("vec_id", "embedding")
@@ -462,16 +460,17 @@ class TestMaxSim:
         b1 = emb.filter(F.col("vec_id") % 3 == 1)
         b2 = emb.filter(F.col("vec_id") % 3 == 2)
         idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
-        cents, books = similarity.ivfpq_write_index(
+        side = similarity.ivfpq_write_index(
             base, idx, dim=64, m=4, ksub=16, n_cells=4,
             residual=True, rotate=True)
-        side = _json.load(open(f"{idx}/_ivfpq.json"))
+        cents, books = side["centroids"], side["books"]
+        assert side == _json.load(open(f"{idx}/_index.json"))
         rot = (side["rotation"]["perm"], side["rotation"]["signs"])
         assert rot == similarity.pq_rotation(64)
 
-        similarity.ivfpq_append_index(b1, idx)
-        ivfpq_ingest_batch(b2, 0, index_path=idx, out_path=out, k=3,
-                           nprobe=2)
+        similarity.append_index(b1, idx)
+        ingest_batch(b2, 0, index_path=idx, out_path=out, k=3,
+                     nprobe=2)
         got = {r.vec_id: (list(r.codes), r.cell) for r in
                spark.read.parquet(f"{idx}/stream").collect()}
         want = {r.vec_id: (list(r.codes), r.cell) for r in _ivfpq_encode(
@@ -481,7 +480,7 @@ class TestMaxSim:
         q = emb.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"))
-        got_p = sorted(map(tuple, similarity.ivfpq_search_index(
+        got_p = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=5, nprobe=2).collect()))
         qv = q.select("query_id", similarity.as_double_array(
             F.col("query_vec")).alias("qv"))

@@ -26,7 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from incubator_pulsar_spark.functions import similarity
-from incubator_pulsar_spark.streaming.ann import (ivfpq_ingest_batch,
+from incubator_pulsar_spark.streaming.ann import (ingest_batch,
                                                   rerank_candidate_log)
 
 
@@ -155,7 +155,7 @@ class TestIvfpqRerankComposition:
                                                 tmp_path):
         """The gate's semantics in-engine: reranking the IVFADC
         ingest's logged nprobe-pruned top-R shortlist is row-identical
-        to the refine stage of ivfpq_search_index over the build-half
+        to the refine stage of search_index over the build-half
         index for the same queries — the cell-pruned twin of
         test_round9's flat-PQ lock."""
         emb = _emb(spark, sf_dir)
@@ -164,8 +164,8 @@ class TestIvfpqRerankComposition:
         similarity.ivfpq_write_index(even, idx,
                                      dim=64, m=4, ksub=16, n_cells=8)
         batch = emb.filter(F.col("vec_id") % 2 == 1)
-        ivfpq_ingest_batch(batch, 0, index_path=idx, out_path=out,
-                           k=50, nprobe=3)
+        ingest_batch(batch, 0, index_path=idx, out_path=out,
+                     k=50, nprobe=3)
         got = sorted(map(tuple, rerank_candidate_log(
             spark, out, emb, k=10).collect()))
 
@@ -178,7 +178,7 @@ class TestIvfpqRerankComposition:
                                      dim=64, m=4, ksub=16, n_cells=8)
         q = batch.select(F.col("vec_id").alias("query_id"),
                          F.col("embedding").alias("query_vec"))
-        want = sorted(map(tuple, similarity.ivfpq_search_index(
+        want = sorted(map(tuple, similarity.search_index(
             spark, idx2, q, k=10, nprobe=3, refine=50,
             vectors=emb).collect()))
         assert got == want
@@ -414,7 +414,7 @@ class TestOpqIndexLifecycle:
             similarity.pq_write_index(emb, d, dim=64, m=4, ksub=16,
                                       rotate=mode)
             rec[tag] = self._recall(
-                X, similarity.pq_search_index(spark, d, q, k=10).collect())
+                X, similarity.search_index(spark, d, q, k=10).collect())
         # deterministic fixture — measured 0.530 / 0.390 / 0.400
         assert rec["opq"] > rec["rr"]
         assert rec["opq"] > rec["raw"]
@@ -428,23 +428,22 @@ class TestOpqIndexLifecycle:
         rotated query table (no raise, k rows per query)."""
         import json
 
-        from incubator_pulsar_spark.streaming.ann import pq_ingest_batch
-
         emb, _, md5f, A = self._emb(spark)
         import numpy as np
 
         d = str(tmp_path / "idx")
         similarity.pq_write_index(emb, d, dim=64, m=4, ksub=16,
                                   rotate="opq")
-        R = similarity._pq_load_rotation(d)
+        side = json.load(open(f"{d}/_index.json"))
+        R = similarity._side_rotation(side)
         assert not isinstance(R, tuple)      # dense matrix pinned
-        books = json.load(open(f"{d}/_codebooks.json"))
+        books = side["books"]
 
         batch = spark.createDataFrame(
             [(1000 + i, (np.array(md5f(f"zz{i}", 8)) @ A).tolist())
              for i in range(20)],
             "vec_id LONG, embedding ARRAY<DOUBLE>")
-        assert similarity.pq_append_index(batch, d) == 20
+        assert similarity.append_index(batch, d) == 20
         want = {r.vec_id: list(r.codes) for r in similarity.pq_encode(
             batch, books, rotation=R).collect()}
         got = {r.vec_id: list(r.codes)
@@ -456,8 +455,8 @@ class TestOpqIndexLifecycle:
             [(2000 + i, (np.array(md5f(f"zs{i}", 8)) @ A).tolist())
              for i in range(10)],
             "vec_id LONG, embedding ARRAY<DOUBLE>")
-        pq_ingest_batch(batch2, 0, index_path=d,
-                        out_path=str(tmp_path / "out"), k=5)
+        ingest_batch(batch2, 0, index_path=d,
+                     out_path=str(tmp_path / "out"), k=5)
         hits = spark.read.parquet(str(tmp_path / "out/_batch_id=0"))
         assert hits.groupBy("query_id").count().filter(
             F.col("count") != 5).count() == 0
@@ -470,7 +469,7 @@ class TestOpqIndexLifecycle:
 
 class TestOpqIvfadc:
     """rotate="opq" on the cell-partitioned index: the trained matrix
-    pins in the _ivfpq.json sidecar and ingest/probes honor it; the
+    pins in the _index.json sidecar and ingest/probes honor it; the
     residual composition refuses auto-training (wrong objective
     space) rather than silently training on raw vectors."""
 
@@ -483,14 +482,14 @@ class TestOpqIvfadc:
         d = str(tmp_path / "idx")
         similarity.ivfpq_write_index(emb, d, dim=64, m=4, ksub=16,
                                      n_cells=8, rotate="opq")
-        side = json.load(open(f"{d}/_ivfpq.json"))
+        side = json.load(open(f"{d}/_index.json"))
         R = similarity._side_rotation(side)
         assert not isinstance(R, tuple) and len(R) == 64
         q = (emb.filter(F.col("vec_id") < 5)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("embedding").alias("query_vec")))
-        got = similarity.ivfpq_search_index(spark, d, q, k=10, nprobe=8,
-                                            refine=600, vectors=emb) \
+        got = similarity.search_index(spark, d, q, k=10, nprobe=8,
+                                      refine=600, vectors=emb) \
             .collect()
         # nprobe = n_cells AND refine = corpus: the raw-vector refine
         # re-ranks EVERY candidate, so the top-10 must be the exact

@@ -430,37 +430,20 @@ class TestBQIndex:
         the vectors, so the split cannot matter)."""
         emb = _emb(spark, sf_dir)
         d = str(tmp_path / "bq")
-        n0 = similarity.bq_write_index(
+        similarity.bq_write_index(
             emb.filter(F.col("vec_id") % 2 == 0), d, dim=64)
-        n1 = similarity.bq_append_index(
+        n1 = similarity.append_index(
             emb.filter(F.col("vec_id") % 2 == 1), d)
-        assert n0 + n1 == emb.count()
+        assert spark.read.parquet(f"{d}/base").count() == emb.count()
+        assert n1 == emb.filter(F.col("vec_id") % 2 == 1).count()
         q = emb.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"))
-        a = similarity.bq_search_index(spark, d, q, k=5, refine=20,
-                                       vectors=emb).collect()
+        a = similarity.search_index(spark, d, q, k=5, refine=20,
+                                    vectors=emb).collect()
         b = similarity.hamming_topk(emb, q, k=5, dim=64,
                                     refine=20).collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-    def test_append_leaves_prior_files_untouched(self, spark, tmp_path,
-                                                 sf_dir):
-        import os
-
-        emb = _emb(spark, sf_dir)
-        d = str(tmp_path / "bq")
-        similarity.bq_write_index(emb.filter(F.col("vec_id") % 2 == 0),
-                                  d, dim=64)
-        base = os.path.join(d, "base")
-        before = {f: os.path.getmtime(os.path.join(base, f))
-                  for f in os.listdir(base) if f.endswith(".parquet")}
-        similarity.bq_append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
-        after = {f: os.path.getmtime(os.path.join(base, f))
-                 for f in os.listdir(base) if f.endswith(".parquet")}
-        for f, t in before.items():
-            assert after[f] == t, f
-        assert len(after) > len(before)
 
     def test_meta_threshold_pinned(self, spark, tmp_path):
         """Appends encode under the SIDECAR's threshold, not a caller
@@ -472,7 +455,7 @@ class TestBQIndex:
                                     "vec_id long, embedding array<double>")
         d = str(tmp_path / "bq")
         similarity.bq_write_index(df0, d, dim=2, threshold=0.5)
-        similarity.bq_append_index(df1, d)
+        similarity.append_index(df1, d)
         sigs = {r.vec_id: r.sig
                 for r in spark.read.parquet(f"{d}/base").collect()}
         assert sigs[1] == [0]  # 0.25 < 0.5 threshold -> bit clear
@@ -809,14 +792,15 @@ class TestSQ8Index:
         train (never a full-corpus retrain)."""
         emb = _emb(spark, sf_dir)
         d = str(tmp_path / "sq8")
-        train = similarity.sq8_write_index(
+        side = similarity.sq8_write_index(
             emb.filter(F.col("vec_id") % 2 == 0), d, dim=64)
-        similarity.sq8_append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
+        train = side["mins"], side["maxs"]
+        similarity.append_index(emb.filter(F.col("vec_id") % 2 == 1), d)
         q = emb.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"))
-        a = similarity.sq8_search_index(spark, d, q, k=5, refine=20,
-                                        vectors=emb).collect()
+        a = similarity.search_index(spark, d, q, k=5, refine=20,
+                                    vectors=emb).collect()
         b = similarity.sq8_topk(emb, q, k=5, dim=64, train=train,
                                 refine=20).collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
@@ -832,7 +816,7 @@ class TestSQ8Index:
                                     "vec_id long, embedding array<double>")
         d = str(tmp_path / "sq8")
         similarity.sq8_write_index(df0, d, dim=1)
-        similarity.sq8_append_index(df1, d)
+        similarity.append_index(df1, d)
         got = {r.vec_id: r.codes[0]
                for r in spark.read.parquet(f"{d}/base").collect()}
         assert got == {0: 0, 1: 255, 2: 255, 3: 0}

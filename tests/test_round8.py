@@ -1,11 +1,12 @@
 """Round-8: persisted PQ index lifecycle + registry-head invariant.
 
-1. pq_write_index / pq_append_index / pq_search_index (VERDICT r7
+1. pq_write_index / append_index / search_index (VERDICT r7
    next-round #3): the persisted, incrementally-maintained form of the
    PQ family — probe results must be row-identical to the one-shot
-   pq_adc_topk given the same codebooks, appends must leave prior
-   index files byte-untouched (O(batch) maintenance), and the refine
-   contract must fail loudly without a true-vector source.
+   pq_adc_topk given the same codebooks, and appends must leave prior
+   index files byte-untouched (O(batch) maintenance). The refine
+   contract's loud failures are parametrized over every codec in
+   tests/test_vector_index.py.
 2. The registry head holds EXACTLY 50 entries (ADVICE r7 medium: r7
    shipped 51 and train_split_stats silently missed its driver proof).
 """
@@ -17,7 +18,6 @@ import json
 import os
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from incubator_pulsar_spark.functions import similarity
@@ -62,15 +62,16 @@ class TestPQIndex:
         emb = read_table(spark, sf_dir, "embeddings")
         q = self._queries(emb)
         idx = str(tmp_path / "pq")
-        books = similarity.pq_write_index(emb, idx, dim=64, m=4, ksub=16)
+        books = similarity.pq_write_index(emb, idx, dim=64, m=4,
+                                          ksub=16)["books"]
 
-        got = similarity.pq_search_index(spark, idx, q, k=5)
+        got = similarity.search_index(spark, idx, q, k=5)
         want = similarity.pq_adc_topk(emb, q, k=5, dim=64, books=books)
         assert sorted(map(tuple, got.collect())) == \
             sorted(map(tuple, want.collect()))
 
-        got_r = similarity.pq_search_index(spark, idx, q, k=5, refine=20,
-                                           vectors=emb)
+        got_r = similarity.search_index(spark, idx, q, k=5, refine=20,
+                                        vectors=emb)
         want_r = similarity.pq_adc_topk(emb, q, k=5, dim=64, books=books,
                                         refine=20)
         assert sorted(map(tuple, got_r.collect())) == \
@@ -90,33 +91,24 @@ class TestPQIndex:
         q = self._queries(emb)
 
         idx = str(tmp_path / "pq")
-        books = similarity.pq_write_index(old, idx, dim=64, m=4, ksub=16)
+        books = similarity.pq_write_index(old, idx, dim=64, m=4,
+                                          ksub=16)["books"]
         before = {p: os.path.getmtime(p)
                   for p in glob.glob(f"{idx}/base/*.parquet")}
-        n = similarity.pq_append_index(new, idx)
+        n = similarity.append_index(new, idx)
         assert n == new.count()
         after = {p: os.path.getmtime(p)
                  for p in glob.glob(f"{idx}/base/*.parquet")}
         assert all(after[p] == t for p, t in before.items())  # untouched
         assert len(after) > len(before)                       # appended
         # sidecar books unchanged by append
-        assert json.load(open(f"{idx}/_codebooks.json")) == books
+        assert json.load(open(f"{idx}/_index.json"))["books"] == books
 
-        got = sorted(map(tuple, similarity.pq_search_index(
+        got = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=5, refine=20, vectors=emb).collect()))
         want = sorted(map(tuple, similarity.pq_adc_topk(
             emb, q, k=5, dim=64, books=books, refine=20).collect()))
         assert got == want
-
-    def test_refine_requires_vectors(self, spark, sf_dir, tmp_path):
-        from incubator_pulsar_spark.session import read_table
-
-        emb = read_table(spark, sf_dir, "embeddings")
-        idx = str(tmp_path / "pq")
-        similarity.pq_write_index(emb, idx, dim=64, m=4, ksub=16)
-        with pytest.raises(ValueError, match="vectors"):
-            similarity.pq_search_index(spark, idx, self._queries(emb),
-                                       k=5, refine=20)
 
     def test_probe_is_codes_only_without_refine(self, spark, sf_dir,
                                                 tmp_path):
@@ -136,7 +128,7 @@ class TestPQIndex:
         q = spark.createDataFrame(
             [(r.query_id, list(r.query_vec)) for r in qrows],
             "query_id LONG, query_vec ARRAY<DOUBLE>")
-        out = similarity.pq_search_index(spark, idx, q, k=5)
+        out = similarity.search_index(spark, idx, q, k=5)
         out.count()
         plan = out._jdf.queryExecution().executedPlan().toString()
         scans = re.findall(r"Scan parquet[^\n]*", plan)
@@ -161,9 +153,9 @@ class TestIVFPQ:
         emb = read_table(spark, sf_dir, "embeddings")
         q = self._queries(emb)
         idx = str(tmp_path / "ivfpq")
-        _, books = similarity.ivfpq_write_index(emb, idx, dim=64, m=4,
-                                                ksub=16, n_cells=4)
-        got = sorted(map(tuple, similarity.ivfpq_search_index(
+        books = similarity.ivfpq_write_index(emb, idx, dim=64, m=4,
+                                             ksub=16, n_cells=4)["books"]
+        got = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=5, nprobe=4, refine=20,
             vectors=emb).collect()))
         want = sorted(map(tuple, similarity.pq_adc_topk(
@@ -173,7 +165,7 @@ class TestIVFPQ:
     def test_probe_prunes_cell_partitions(self, spark, sf_dir, tmp_path):
         """A narrow probe must read ONLY the probed cell directories —
         PartitionFilters on the codes scan (directory pruning IS the
-        inverted-file lookup, the ivf_search_index contract)."""
+        inverted-file lookup, the ivf codec's contract)."""
         from incubator_pulsar_spark.session import read_table
 
         emb = read_table(spark, sf_dir, "embeddings")
@@ -181,7 +173,7 @@ class TestIVFPQ:
         idx = str(tmp_path / "ivfpq")
         similarity.ivfpq_write_index(emb, idx, dim=64, m=4, ksub=16,
                                      n_cells=8)
-        out = similarity.ivfpq_search_index(spark, idx, q, k=5, nprobe=2)
+        out = similarity.search_index(spark, idx, q, k=5, nprobe=2)
         out.count()
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan
@@ -189,20 +181,9 @@ class TestIVFPQ:
         assert "cell" in pf and pf.strip(" [") != "", (
             "IVFADC probe scan did not prune cell partitions")
 
-    def test_refine_requires_vectors(self, spark, sf_dir, tmp_path):
-        from incubator_pulsar_spark.session import read_table
-
-        emb = read_table(spark, sf_dir, "embeddings")
-        idx = str(tmp_path / "ivfpq")
-        similarity.ivfpq_write_index(emb, idx, dim=64, m=4, ksub=16,
-                                     n_cells=4)
-        with pytest.raises(ValueError, match="vectors"):
-            similarity.ivfpq_search_index(spark, idx, self._queries(emb),
-                                          k=5, nprobe=2, refine=20)
-
     def test_append_is_incremental_and_consistent(self, spark, sf_dir,
                                                   tmp_path):
-        """ivfpq_append_index (the ivf/pq append analogue): prior cell
+        """append_index on an ivfpq index: prior cell
         files byte-untouched, codes encoded with the FROZEN sidecar
         (residual flag honored), and a probe over build+append equals
         the reference probe of the full corpus under those frozen
@@ -218,21 +199,22 @@ class TestIVFPQ:
         old = emb.filter(F.col("vec_id") % 5 != 0)
         new = emb.filter(F.col("vec_id") % 5 == 0)
         idx = str(tmp_path / "ivfpq")
-        cents, books = similarity.ivfpq_write_index(
+        built = similarity.ivfpq_write_index(
             old, idx, dim=64, m=4, ksub=16, n_cells=4, residual=True)
+        cents, books = built["centroids"], built["books"]
         before = {p: os.path.getmtime(p)
                   for p in glob.glob(f"{idx}/base/cell=*/*.parquet")}
-        n = similarity.ivfpq_append_index(new, idx)
+        n = similarity.append_index(new, idx)
         assert n == new.count()
         after = {p: os.path.getmtime(p)
                  for p in glob.glob(f"{idx}/base/cell=*/*.parquet")}
         assert all(after[p] == t for p, t in before.items())  # untouched
         assert len(after) >= len(before)
-        side = json.load(open(f"{idx}/_ivfpq.json"))
+        side = json.load(open(f"{idx}/_index.json"))
         assert side["books"] == books and side["residual"] is True
 
         q = self._queries(emb)
-        got = sorted(map(tuple, similarity.ivfpq_search_index(
+        got = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=5, nprobe=2).collect()))
         qv = q.selectExpr("query_id AS vec_id", "query_vec AS embedding")
         want = sorted(map(tuple, _ivfpq_probe(
@@ -255,9 +237,10 @@ class TestIVFPQ:
 
         emb = read_table(spark, sf_dir, "embeddings")
         idx = str(tmp_path / "ivfpqr")
-        cents, books = similarity.ivfpq_write_index(
+        side = similarity.ivfpq_write_index(
             emb, idx, dim=64, m=4, ksub=16, n_cells=4, residual=True)
-        assert json.load(open(f"{idx}/_ivfpq.json"))["residual"] is True
+        cents, books = side["centroids"], side["books"]
+        assert json.load(open(f"{idx}/_index.json"))["residual"] is True
 
         got = {r.vec_id: list(r.codes) for r in
                spark.read.parquet(f"{idx}/base").collect()}
@@ -282,17 +265,18 @@ class TestIVFPQ:
         from incubator_pulsar_spark.functions.similarity import \
             _ivfpq_encode
         from incubator_pulsar_spark.session import read_table
-        from incubator_pulsar_spark.streaming.ann import ivfpq_ingest_batch
+        from incubator_pulsar_spark.streaming.ann import ingest_batch
 
         emb = read_table(spark, sf_dir, "embeddings")
         base = emb.filter(F.col("vec_id") % 2 == 0)
         batch = emb.filter(F.col("vec_id") % 2 == 1)
         idx = str(tmp_path / "ivfpqr")
         out = str(tmp_path / "out")
-        cents, books = similarity.ivfpq_write_index(
+        side = similarity.ivfpq_write_index(
             base, idx, dim=64, m=4, ksub=16, n_cells=4, residual=True)
-        ivfpq_ingest_batch(batch, 0, index_path=idx, out_path=out, k=3,
-                           nprobe=2)
+        cents, books = side["centroids"], side["books"]
+        ingest_batch(batch, 0, index_path=idx, out_path=out, k=3,
+                     nprobe=2)
         got = {(r.vec_id): (list(r.codes), r.cell) for r in
                spark.read.parquet(f"{idx}/stream").collect()}
         want = {(r.vec_id): (list(r.codes), r.cell) for r in _ivfpq_encode(

@@ -1,7 +1,7 @@
 """Round-9 surfaces, verified (VERDICT r9 next-round #1/#2/#4/#5/#6):
 
-1. The ingest-stream FOLD (streaming.ann.pq_fold_stream /
-   ivfpq_fold_stream) actually consolidates — after two batches + fold
+1. The ingest-stream FOLD (streaming.ann.fold_stream) actually
+   consolidates — after two batches + fold
    the stream root holds exactly ``_batch_id=-1`` (with ``cell=C``
    under it for IVFADC), probe results are byte-identical
    before/after, the post-fold probed plan still shows cell
@@ -23,9 +23,6 @@
    pins ``residual: false`` with both measured errors), residual wins
    on a cell-structured fixture, and appends/probes honor the pinned
    flag.
-6. Appends encode ONCE (the r9 persist() fix, previously untested):
-   an accumulator inside the batch pipeline counts pipeline
-   executions.
 
 Reference-discipline analogue: the reference tests its compaction
 lifecycle the same way (pulsar-broker/src/test/java/org/apache/pulsar/
@@ -42,8 +39,8 @@ from pyspark.sql import functions as F
 
 from incubator_pulsar_spark.functions import similarity
 from incubator_pulsar_spark.streaming.ann import (
-    _checkpoint_committed_through, ivfpq_fold_stream, ivfpq_ingest_batch,
-    pq_fold_stream, pq_ingest_batch, rerank_candidate_log)
+    _checkpoint_committed_through, fold_stream, ingest_batch,
+    rerank_candidate_log)
 
 
 def _emb(spark, sf_dir):
@@ -70,7 +67,7 @@ def _pq_lifecycle(spark, emb, idx, out, *, n_batches=2, k=5):
                           == 2 * i + 1))
               for i in range(n_batches)]
     for i, b in enumerate(splits):
-        pq_ingest_batch(b, i, index_path=idx, out_path=out, k=k)
+        ingest_batch(b, i, index_path=idx, out_path=out, k=k)
     return splits
 
 
@@ -88,13 +85,13 @@ class TestFoldConsolidates:
         _pq_lifecycle(spark, emb, idx, out)
         q = _probe_q(emb)
 
-        before = sorted(map(tuple, similarity.pq_search_index(
+        before = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10, refine=50, vectors=emb).collect()))
         assert _batch_dirs(f"{idx}/stream") == ["_batch_id=0",
                                                 "_batch_id=1"]
-        assert pq_fold_stream(spark, idx) == 2
+        assert fold_stream(spark, idx) == 2
         assert _batch_dirs(f"{idx}/stream") == ["_batch_id=-1"]
-        after = sorted(map(tuple, similarity.pq_search_index(
+        after = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10, refine=50, vectors=emb).collect()))
         assert before == after
 
@@ -102,7 +99,7 @@ class TestFoldConsolidates:
         files = sorted(os.path.join(r, f)
                        for r, _, fs in os.walk(f"{idx}/stream")
                        for f in fs)
-        assert pq_fold_stream(spark, idx) == 0
+        assert fold_stream(spark, idx) == 0
         assert files == sorted(os.path.join(r, f)
                                for r, _, fs in os.walk(f"{idx}/stream")
                                for f in fs)
@@ -117,21 +114,21 @@ class TestFoldConsolidates:
         similarity.ivfpq_write_index(
             emb.filter(F.col("vec_id") % 2 == 0), idx,
             dim=64, m=4, ksub=16, n_cells=8)
-        ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
-                           index_path=idx, out_path=out, k=5, nprobe=3)
-        ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
-                           index_path=idx, out_path=out, k=5, nprobe=3)
+        ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
+                     index_path=idx, out_path=out, k=5, nprobe=3)
+        ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
+                     index_path=idx, out_path=out, k=5, nprobe=3)
         q = _probe_q(emb)
-        before = sorted(map(tuple, similarity.ivfpq_search_index(
+        before = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10, nprobe=3, refine=50,
             vectors=emb).collect()))
 
-        assert ivfpq_fold_stream(spark, idx) == 2
+        assert fold_stream(spark, idx) == 2
         assert _batch_dirs(f"{idx}/stream") == ["_batch_id=-1"]
         cells = sorted(os.listdir(f"{idx}/stream/_batch_id=-1"))
         assert cells and all(c.startswith("cell=") for c in cells)
 
-        after = sorted(map(tuple, similarity.ivfpq_search_index(
+        after = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10, nprobe=3, refine=50,
             vectors=emb).collect()))
         assert before == after
@@ -148,11 +145,11 @@ class TestFoldConsolidates:
         similarity.ivfpq_write_index(
             emb.filter(F.col("vec_id") % 2 == 0), idx,
             dim=64, m=4, ksub=16, n_cells=8)
-        ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
-                           index_path=idx, out_path=out, k=5, nprobe=3)
-        ivfpq_ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
-                           index_path=idx, out_path=out, k=5, nprobe=3)
-        assert ivfpq_fold_stream(spark, idx) == 2
+        ingest_batch(emb.filter(F.col("vec_id") % 4 == 1), 0,
+                     index_path=idx, out_path=out, k=5, nprobe=3)
+        ingest_batch(emb.filter(F.col("vec_id") % 4 == 3), 1,
+                     index_path=idx, out_path=out, k=5, nprobe=3)
+        assert fold_stream(spark, idx) == 2
 
         # queries as literals so the only parquet scans in the plan
         # are the index's own (r8 test_probe_is_codes_only pattern)
@@ -160,7 +157,7 @@ class TestFoldConsolidates:
         q = spark.createDataFrame(
             [(r.query_id, [float(x) for x in r.query_vec]) for r in qrows],
             "query_id LONG, query_vec ARRAY<DOUBLE>")
-        res = similarity.ivfpq_search_index(spark, idx, q, k=5, nprobe=2)
+        res = similarity.search_index(spark, idx, q, k=5, nprobe=2)
         res.count()
         plan = res._jdf.queryExecution().executedPlan().toString()
         pfs = [m.split("]")[0] for m in plan.split("PartitionFilters: [")[1:]]
@@ -180,14 +177,14 @@ class TestFoldCrashRecovery:
         idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
         _pq_lifecycle(spark, emb, idx, out)
         q = _probe_q(emb)
-        want = sorted(map(tuple, similarity.pq_search_index(
+        want = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10).collect()))
 
         os.rename(f"{idx}/stream", f"{idx}/stream.pre-fold")
-        assert pq_fold_stream(spark, idx) == 2   # recovered, then folded
+        assert fold_stream(spark, idx) == 2   # recovered, then folded
         assert _batch_dirs(f"{idx}/stream") == ["_batch_id=-1"]
         assert not os.path.exists(f"{idx}/stream.pre-fold")
-        got = sorted(map(tuple, similarity.pq_search_index(
+        got = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10).collect()))
         assert got == want
 
@@ -202,7 +199,7 @@ class TestFoldCrashRecovery:
         idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
         _pq_lifecycle(spark, emb, idx, out, n_batches=3)
         q = _probe_q(emb)
-        want = sorted(map(tuple, similarity.pq_search_index(
+        want = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10).collect()))
         n_all = spark.read.parquet(f"{idx}/stream").count()
 
@@ -217,7 +214,7 @@ class TestFoldCrashRecovery:
 
         monkeypatch.setattr(os, "rename", crashing_rename)
         with pytest.raises(RuntimeError, match="simulated crash"):
-            pq_fold_stream(spark, idx, committed_through=1)
+            fold_stream(spark, idx, committed_through=1)
         monkeypatch.setattr(os, "rename", real_rename)
 
         # crash state: swap done, tail stranded in the snapshot
@@ -226,14 +223,14 @@ class TestFoldCrashRecovery:
 
         # next call recovers: tail restored, snapshot deleted, no
         # further fold possible below committed_through (one dir <= 1)
-        assert pq_fold_stream(spark, idx, committed_through=1) == 0
+        assert fold_stream(spark, idx, committed_through=1) == 0
         assert _batch_dirs(f"{idx}/stream") == ["_batch_id=-1",
                                                 "_batch_id=2"]
         assert not os.path.exists(f"{idx}/stream.pre-fold")
         assert not os.path.exists(f"{idx}/stream/_fold_manifest.json")
         # every committed code row survived, exactly once
         assert spark.read.parquet(f"{idx}/stream").count() == n_all
-        got = sorted(map(tuple, similarity.pq_search_index(
+        got = sorted(map(tuple, similarity.search_index(
             spark, idx, q, k=10).collect()))
         assert got == want
 
@@ -268,7 +265,7 @@ class TestFoldReplayGuard:
         commits/ listing is what the fold reads — after two committed
         micro-batch runs, checkpoint_path= folds exactly those two."""
         from incubator_pulsar_spark.streaming.ann import \
-            start_pq_ingest_stream
+            start_ingest_stream
 
         emb = _emb(spark, sf_dir)
         base = emb.filter(F.col("vec_id") % 3 == 0)
@@ -278,7 +275,7 @@ class TestFoldReplayGuard:
 
         def run():
             stream = spark.readStream.schema(emb.schema).parquet(src)
-            sq = start_pq_ingest_stream(
+            sq = start_ingest_stream(
                 stream, index_path=idx, out_path=out,
                 checkpoint_path=ckpt, k=5, available_now=True)
             sq.awaitTermination(120)
@@ -290,7 +287,7 @@ class TestFoldReplayGuard:
             .parquet(src)
         run()
         assert _checkpoint_committed_through(ckpt) == 1
-        assert pq_fold_stream(spark, idx, checkpoint_path=ckpt) == 2
+        assert fold_stream(spark, idx, checkpoint_path=ckpt) == 2
         assert _batch_dirs(f"{idx}/stream") == ["_batch_id=-1"]
 
     def test_replay_after_guarded_fold_is_safe(self, spark, sf_dir,
@@ -308,9 +305,9 @@ class TestFoldReplayGuard:
             f"{out}/_batch_id=2").collect()))
         n_codes = spark.read.parquet(f"{idx}/stream").count()
 
-        assert pq_fold_stream(spark, idx, committed_through=1) == 2
+        assert fold_stream(spark, idx, committed_through=1) == 2
         # REPLAY batch 2 (uncommitted -> re-executed after restart)
-        pq_ingest_batch(splits[2], 2, index_path=idx, out_path=out, k=5)
+        ingest_batch(splits[2], 2, index_path=idx, out_path=out, k=5)
 
         replayed = sorted(map(tuple, spark.read.parquet(
             f"{out}/_batch_id=2").collect()))
@@ -331,8 +328,8 @@ class TestFoldReplayGuard:
         splits = _pq_lifecycle(spark, emb, idx, out, n_batches=3)
         n_codes = spark.read.parquet(f"{idx}/stream").count()
 
-        assert pq_fold_stream(spark, idx) == 3        # unguarded
-        pq_ingest_batch(splits[2], 2, index_path=idx, out_path=out, k=5)
+        assert fold_stream(spark, idx) == 3        # unguarded
+        ingest_batch(splits[2], 2, index_path=idx, out_path=out, k=5)
 
         # duplicates: batch 2's rows live in -1 and in _batch_id=2
         assert spark.read.parquet(f"{idx}/stream").count() == \
@@ -428,11 +425,11 @@ class TestRerank:
         similarity.pq_write_index(emb.filter(F.col("vec_id") % 2 == 0),
                                   idx, dim=64, m=4, ksub=16)
         batch = emb.filter(F.col("vec_id") % 2 == 1)
-        pq_ingest_batch(batch, 0, index_path=idx, out_path=out, k=50)
+        ingest_batch(batch, 0, index_path=idx, out_path=out, k=50)
         got = sorted(map(tuple, rerank_candidate_log(
             spark, out, emb, k=10).collect()))
 
-        books = json.load(open(f"{idx}/_codebooks.json"))
+        books = json.load(open(f"{idx}/_index.json"))["books"]
         enc = similarity.pq_encode(
             emb.filter(F.col("vec_id") % 2 == 0), books)
         q = batch.select(F.col("vec_id").alias("query_id"),
@@ -462,15 +459,15 @@ class TestResidualAuto:
         similarity.ivfpq_write_index(emb, raw_idx, dim=64, m=4, ksub=16,
                                      n_cells=8, residual=False)
 
-        side = json.load(open(f"{auto_idx}/_ivfpq.json"))
+        side = json.load(open(f"{auto_idx}/_index.json"))
         assert side["residual"] is False
         a = side["residual_auto"]
         assert a["raw_err"] < a["residual_err"]
 
         q = _probe_q(emb)
-        got = sorted(map(tuple, similarity.ivfpq_search_index(
+        got = sorted(map(tuple, similarity.search_index(
             spark, auto_idx, q, k=5, nprobe=3).collect()))
-        want = sorted(map(tuple, similarity.ivfpq_search_index(
+        want = sorted(map(tuple, similarity.search_index(
             spark, raw_idx, q, k=5, nprobe=3).collect()))
         assert got == want
 
@@ -504,7 +501,7 @@ class TestResidualAuto:
         idx = str(tmp_path / "auto")
         similarity.ivfpq_write_index(emb, idx, dim=64, m=4, ksub=16,
                                      n_cells=8, residual="auto")
-        side = json.load(open(f"{idx}/_ivfpq.json"))
+        side = json.load(open(f"{idx}/_index.json"))
         assert side["residual"] is True
         a = side["residual_auto"]
         assert a["residual_err"] < a["raw_err"]
@@ -522,60 +519,20 @@ class TestResidualAuto:
         similarity.ivfpq_write_index(old, auto_idx, dim=64, m=4, ksub=16,
                                      n_cells=8, residual="auto")
         assert json.load(
-            open(f"{auto_idx}/_ivfpq.json"))["residual"] is True
+            open(f"{auto_idx}/_index.json"))["residual"] is True
         similarity.ivfpq_write_index(old, expl_idx, dim=64, m=4, ksub=16,
                                      n_cells=8, residual=True)
 
-        similarity.ivfpq_append_index(new, auto_idx)
-        similarity.ivfpq_append_index(new, expl_idx)
+        similarity.append_index(new, auto_idx)
+        similarity.append_index(new, expl_idx)
         q = emb.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"))
-        got = sorted(map(tuple, similarity.ivfpq_search_index(
+        got = sorted(map(tuple, similarity.search_index(
             spark, auto_idx, q, k=5, nprobe=3).collect()))
-        want = sorted(map(tuple, similarity.ivfpq_search_index(
+        want = sorted(map(tuple, similarity.search_index(
             spark, expl_idx, q, k=5, nprobe=3).collect()))
         assert got == want
-
-
-# ------------------------------------------- appends encode only once
-
-class TestSingleEncodeAppend:
-    def _counted(self, spark, df):
-        """Wrap df in a mapInPandas stage that counts the rows flowing
-        through it — if the append pipeline executed twice (the bug the
-        r9 persist() fix removed), the accumulator reads 2x."""
-        acc = spark.sparkContext.accumulator(0)
-
-        def count_rows(batches):
-            for pdf in batches:
-                acc.add(len(pdf))
-                yield pdf
-
-        return df.mapInPandas(count_rows, df.schema), acc
-
-    def test_pq_append_encodes_once(self, spark, sf_dir, tmp_path):
-        emb = _emb(spark, sf_dir)
-        idx = str(tmp_path / "pq")
-        similarity.pq_write_index(emb.filter(F.col("vec_id") % 5 != 0),
-                                  idx, dim=64, m=4, ksub=16)
-        new = emb.filter(F.col("vec_id") % 5 == 0)
-        counted, acc = self._counted(spark, new)
-        n = similarity.pq_append_index(counted, idx)
-        assert n == new.count()
-        assert acc.value == n
-
-    def test_ivfpq_append_encodes_once(self, spark, sf_dir, tmp_path):
-        emb = _emb(spark, sf_dir)
-        idx = str(tmp_path / "ivfpq")
-        similarity.ivfpq_write_index(
-            emb.filter(F.col("vec_id") % 5 != 0), idx,
-            dim=64, m=4, ksub=16, n_cells=4)
-        new = emb.filter(F.col("vec_id") % 5 == 0)
-        counted, acc = self._counted(spark, new)
-        n = similarity.ivfpq_append_index(counted, idx)
-        assert n == new.count()
-        assert acc.value == n
 
 
 class TestFoldGuardEdges:
@@ -591,9 +548,9 @@ class TestFoldGuardEdges:
         for n in ("0", "1", "2"):
             (ckpt / n).write_text("{}")
         # checkpoint says 2 committed, but the caller protects batch 2
-        assert pq_fold_stream(spark, idx,
-                              checkpoint_path=str(tmp_path / "ckpt"),
-                              committed_through=1) == 2
+        assert fold_stream(spark, idx,
+                           checkpoint_path=str(tmp_path / "ckpt"),
+                           committed_through=1) == 2
         assert _batch_dirs(f"{idx}/stream") == ["_batch_id=-1",
                                                 "_batch_id=2"]
 
@@ -608,4 +565,4 @@ class TestFoldGuardEdges:
         _pq_lifecycle(spark, emb, idx, out)
         os.makedirs(f"{idx}/stream.pre-fold/_batch_id=9")
         with pytest.raises(RuntimeError, match="reconcile"):
-            pq_fold_stream(spark, idx)
+            fold_stream(spark, idx)

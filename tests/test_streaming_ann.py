@@ -26,7 +26,7 @@ def _rank_against(enc_src, books, queries, k):
 def test_pq_ingest_stream_matches_batch_and_replays_idempotently(
         spark, tmp_path, sf_dir):
     from incubator_pulsar_spark.streaming.ann import (
-        pq_ingest_batch, start_pq_ingest_stream)
+        ingest_batch, start_ingest_stream)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
         .select("vec_id", "embedding")
@@ -38,11 +38,12 @@ def test_pq_ingest_stream_matches_batch_and_replays_idempotently(
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     src = str(tmp_path / "src")
-    books = similarity.pq_write_index(base, idx, dim=64, m=4, ksub=16)
+    books = similarity.pq_write_index(base, idx, dim=64, m=4,
+                                      ksub=16)["books"]
 
     def run():
         stream = spark.readStream.schema(emb.schema).parquet(src)
-        q = start_pq_ingest_stream(
+        q = start_ingest_stream(
             stream, index_path=idx, out_path=out, checkpoint_path=ckpt,
             k=5, available_now=True)
         q.awaitTermination(120)
@@ -72,7 +73,7 @@ def test_pq_ingest_stream_matches_batch_and_replays_idempotently(
     probe = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"))
-    got_all = sorted(map(tuple, similarity.pq_search_index(
+    got_all = sorted(map(tuple, similarity.search_index(
         spark, idx, probe, k=5).collect()))
     want_all = sorted(map(tuple, similarity.pq_adc_topk(
         emb, probe, k=5, dim=64, books=books).collect()))
@@ -82,7 +83,7 @@ def test_pq_ingest_stream_matches_batch_and_replays_idempotently(
     # crash-replay path). Probe output and stream codes must rewrite
     # themselves — same rows, no duplicates, batch-1 rows untouched.
     for _ in range(2):
-        pq_ingest_batch(b1, 0, index_path=idx, out_path=out, k=5)
+        ingest_batch(b1, 0, index_path=idx, out_path=out, k=5)
     hits2 = spark.read.parquet(out)
     assert sorted(map(tuple, hits2.filter(F.col("_batch_id") == 0)
                       .drop("_batch_id").collect())) == got0
@@ -113,7 +114,7 @@ def test_ivfpq_ingest_stream_matches_batch_and_replays_idempotently(
         spark, tmp_path, sf_dir):
     from incubator_pulsar_spark.functions.similarity import _ivfpq_probe
     from incubator_pulsar_spark.streaming.ann import (
-        ivfpq_ingest_batch, start_ivfpq_ingest_stream)
+        ingest_batch, start_ingest_stream)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
         .select("vec_id", "embedding")
@@ -125,12 +126,13 @@ def test_ivfpq_ingest_stream_matches_batch_and_replays_idempotently(
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     src = str(tmp_path / "src")
-    cents, books = similarity.ivfpq_write_index(base, idx, dim=64, m=4,
-                                                ksub=16, n_cells=4)
+    side = similarity.ivfpq_write_index(base, idx, dim=64, m=4,
+                                        ksub=16, n_cells=4)
+    cents, books = side["centroids"], side["books"]
 
     def run():
         stream = spark.readStream.schema(emb.schema).parquet(src)
-        q = start_ivfpq_ingest_stream(
+        q = start_ingest_stream(
             stream, index_path=idx, out_path=out, checkpoint_path=ckpt,
             k=5, nprobe=2, available_now=True)
         q.awaitTermination(120)
@@ -161,7 +163,7 @@ def test_ivfpq_ingest_stream_matches_batch_and_replays_idempotently(
     probe = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"))
-    got_all = sorted(map(tuple, similarity.ivfpq_search_index(
+    got_all = sorted(map(tuple, similarity.search_index(
         spark, idx, probe, k=5, nprobe=2).collect()))
     want_all = sorted(map(tuple, _ivfpq_probe(
         _ivfpq_enc(emb, cents, books), _q(probe.selectExpr(
@@ -172,8 +174,8 @@ def test_ivfpq_ingest_stream_matches_batch_and_replays_idempotently(
     # replay idempotency: re-run batch 0's body twice — hit rows and
     # stream code counts unchanged
     for _ in range(2):
-        ivfpq_ingest_batch(b1, 0, index_path=idx, out_path=out, k=5,
-                           nprobe=2)
+        ingest_batch(b1, 0, index_path=idx, out_path=out, k=5,
+                     nprobe=2)
     hits2 = spark.read.parquet(out)
     assert sorted(map(tuple, hits2.filter(F.col("_batch_id") == 0)
                       .drop("_batch_id").collect())) == got0
