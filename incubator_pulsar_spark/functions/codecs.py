@@ -17,9 +17,8 @@ Spark-first split of responsibilities:
   (org.apache.spark.sql.avro) and ``from_protobuf/to_protobuf``
   (spark-protobuf). Those modules ship with a full Spark distribution
   but not with the pip pyspark used here, so the wrappers are
-  package-gated exactly like ``streaming/tws.py`` gates protobuf: probe
-  once, raise a clear error naming the missing package, and let tests
-  ``skipif`` on the probe.
+  package-gated: probe once, raise a clear error naming the missing
+  package, and let tests ``skipif`` on the probe.
 
 At scale both codecs run JVM-side per column batch (no Python
 boundary); the schema JSON is a literal in the plan.

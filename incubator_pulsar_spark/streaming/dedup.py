@@ -5,24 +5,27 @@ broker keeps ``highestSequencedPushed`` per producer (:110-115) and drops
 any message whose sequence_id ≤ that high-water mark (:186-187). The map
 is snapshotted every N entries (:142) so recovery replays only the tail.
 
-Spark-first: ``applyInPandasWithState`` keyed by producer. State = one
-LONG (the high-water mark) per producer — identical memory profile to
-the reference's map; the state-store checkpoint IS the snapshot
-mechanism (no custom snapshot cursor needed). Arrival order within a
-micro-batch follows the ``arrival_col`` sort, mirroring publish order.
+Spark-first: a pure per-producer step folded by ``keyed.keyed_fold``.
+State = one LONG (the high-water mark) per producer — identical memory
+profile to the reference's map; the state-store checkpoint IS the
+snapshot mechanism (no custom snapshot cursor needed). Arrival order
+within a micro-batch follows the ``arrival_col`` sort over the
+producer's whole batch, mirroring publish order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+from functools import partial
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-STATE_SCHEMA = T.StructType([T.StructField("highest_seq", T.LongType())])
+from .keyed import keyed_fold
+
+DEDUP_STATE_SCHEMA = T.StructType([T.StructField("highest_seq", T.LongType())])
 
 
 def dedup_stream(
@@ -36,32 +39,36 @@ def dedup_stream(
     the surviving high-water mark persists across micro-batches in the
     state store.
 
-    Output schema == input schema. One shuffle by producer per batch
-    (bounded cardinality — producers, not message keys).
+    Output schema == input schema; the input columns ride the fold as
+    ``_c0``, ``_c1``, ... clear of its ``key`` (the producer). One
+    shuffle by producer per batch (producers, not message keys).
+    Checkpoints written before this operator folded through
+    ``keyed_fold`` (one state row per producer) do not restart.
     """
-    out_schema = stream.schema
+    carried = [f"_c{i}" for i in range(len(stream.columns))]
+    keyed = stream.select(
+        F.col(producer_col).cast("string").alias("key"),
+        F.col(sequence_id_col).cast("long").alias("seq_id"),
+        F.col(arrival_col).alias("arrival"),
+        *[F.col(c).alias(n) for c, n in zip(stream.columns, carried)])
+    return keyed_fold(keyed, partial(dedup_step, carried=carried),
+                      DEDUP_STATE_SCHEMA, stream.schema)
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (highest,) = state.get if state.exists else (None,)
-        for pdf in pdfs:
-            pdf = pdf.sort_values(arrival_col, kind="mergesort")
-            keep = []
-            for i, seq in zip(pdf.index, pdf[sequence_id_col]):
-                s = None if pd.isna(seq) else int(seq)
-                if s is None or highest is None or s > highest:
-                    keep.append(i)
-                    if s is not None:
-                        highest = s
-            if keep:
-                yield pdf.loc[keep]
-        if highest is not None:
-            state.update((highest,))
 
-    return (
-        stream.groupBy(producer_col)
-        .applyInPandasWithState(fn, out_schema, STATE_SCHEMA, "append",
-                                "NoTimeout")
-    )
+def dedup_step(key, st, rows, ctx, *, carried):
+    """``dedup_stream``'s per-producer fold (the ``keyed_fold`` step):
+    a row survives iff its ``seq_id`` is NULL or above every id that
+    arrived before it; it emits its ``carried`` values."""
+    (highest,) = st or (None,)
+    rows = rows.sort_values("arrival", kind="mergesort")
+    keep = []
+    for seq in rows["seq_id"]:
+        s = None if pd.isna(seq) else int(seq)
+        keep.append(s is None or highest is None or s > highest)
+        if keep[-1] and s is not None:
+            highest = s
+    out = list(rows.loc[keep, carried].itertuples(index=False, name=None))
+    return (highest,), out, highest is not None and (highest,) != st, False
 
 
 def dedup_within_watermark(

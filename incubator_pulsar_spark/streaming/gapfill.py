@@ -4,9 +4,9 @@ have become final since the last batch, carrying the last observed
 per-slot mean across empty slots.
 
 State per key is three scalars (last emitted slot, carried value,
-carried-flag) — slot-bounded, never event-bounded — via
-``applyInPandasWithState``. Ordering contract: slots at or before the
-last emitted slot are dropped (the same finality a watermark gives a
+carried-flag) — slot-bounded, never event-bounded — folded by
+``keyed.keyed_fold``. Ordering contract: slots at or before the last
+emitted slot are dropped (the same finality a watermark gives a
 windowed aggregate; replaying an availableNow pass over an unchanged
 checkpoint emits nothing twice). Batch/stream parity is pytest-proven:
 after any sequence of batches, the emitted grid equals the batch
@@ -15,8 +15,7 @@ after any sequence of batches, the emitted grid equals the batch
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+from functools import partial
 
 import pandas as pd
 
@@ -24,11 +23,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-STATE_SCHEMA = T.StructType([
+from .keyed import keyed_fold
+
+GAPFILL_STATE_SCHEMA = T.StructType([
     T.StructField("last_slot", T.LongType()),
     T.StructField("carry", T.DoubleType()),
     T.StructField("has_carry", T.BooleanType()),
 ])
+# the output columns after the key columns
+GAPFILL_OUT_SCHEMA = T.StructType([
+    T.StructField("slot", T.LongType()),
+    T.StructField("n_events", T.LongType()),
+    T.StructField("value_locf", T.DoubleType()),
+    T.StructField("filled", T.BooleanType()),
+])
+_JSON_TS_MICROS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+               "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"}
 
 
 def gapfill_stream(
@@ -37,56 +47,46 @@ def gapfill_stream(
 ) -> DataFrame:
     """Per-key dense slot emission (append mode): key_cols + (slot,
     n_events, value_locf, filled), one row per newly-final slot per
-    micro-batch."""
-    pre = stream.select(
-        *key_cols,
+    micro-batch.
+
+    The fold's ``key`` is the JSON of the key columns (injective:
+    NULLs kept, timestamps to the microsecond); the typed key values
+    ride along as ``_k0``, ``_k1``, ... Checkpoints written before this
+    operator folded through ``keyed_fold`` (one state row per key) do
+    not restart.
+    """
+    carried = [f"_k{i}" for i in range(len(key_cols))]
+    keyed = stream.select(
+        F.to_json(F.struct(*key_cols), _JSON_TS_MICROS).alias("key"),
+        *[F.col(c).alias(n) for c, n in zip(key_cols, carried)],
         (F.floor(F.unix_timestamp(F.col(ts_col)) / slot_seconds)
          .cast("long").alias("slot")),
-        F.col(value_col).cast("double").alias("_v"),
-    )
-    out_schema = T.StructType(
-        [f for f in pre.schema.fields if f.name not in ("slot", "_v")]
-        + [T.StructField("slot", T.LongType()),
-           T.StructField("n_events", T.LongType()),
-           T.StructField("value_locf", T.DoubleType()),
-           T.StructField("filled", T.BooleanType())])
+        F.col(value_col).cast("double").alias("_v"))
+    out_schema = T.StructType(stream.select(*key_cols).schema.fields
+                              + GAPFILL_OUT_SCHEMA.fields)
+    return keyed_fold(keyed, partial(gapfill_step, key_cols=carried),
+                      GAPFILL_STATE_SCHEMA, out_schema)
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        last_slot, carry, has_carry = (
-            state.get if state.exists else (None, None, False))
-        # (n_rows, n_nonnull, sum_nonnull) per slot — mean derived once
-        # at emit so multi-chunk batches merge exactly
-        per_slot: dict[int, list] = {}
-        for pdf in pdfs:
-            for slot, sub in pdf.groupby("slot", sort=False):
-                vals = sub["_v"].dropna()
-                acc = per_slot.setdefault(int(slot), [0, 0, 0.0])
-                acc[0] += len(sub)
-                acc[1] += len(vals)
-                acc[2] += float(vals.sum())
 
-        rows: dict[str, list] = {c: [] for c in
-                                 [*key_cols, "slot", "n_events",
-                                  "value_locf", "filled"]}
-        if per_slot:
-            lo = min(per_slot) if last_slot is None else last_slot + 1
-            hi = max(per_slot)
-            for slot in range(lo, hi + 1):
-                n, nn, s = per_slot.get(slot, (0, 0, 0.0))
-                obs = (s / nn) if nn else None
-                if obs is not None:
-                    carry, has_carry = obs, True
-                for c, kv in zip(key_cols, key):
-                    rows[c].append(kv)
-                rows["slot"].append(slot)
-                rows["n_events"].append(n)
-                rows["value_locf"].append(carry if has_carry else None)
-                rows["filled"].append(n == 0)
-            state.update((hi, carry, has_carry))
-        yield pd.DataFrame(rows)
-
-    return (
-        pre.groupBy(*key_cols)
-        .applyInPandasWithState(fn, out_schema, STATE_SCHEMA, "append",
-                                "NoTimeout")
-    )
+def gapfill_step(key, st, rows, ctx, *, key_cols):
+    """``gapfill_stream``'s per-key fold (the ``keyed_fold`` step):
+    ``rows`` carry ``slot``, ``_v`` and the key values in ``key_cols``."""
+    last_slot, carry, has_carry = st or (None, None, False)
+    rows = rows[rows["slot"].notna() if last_slot is None
+                else rows["slot"] > last_slot]
+    if rows.empty:
+        return st, [], False, False
+    # (n_rows, mean of the non-NULL values) per observed slot
+    agg = rows.groupby("slot")["_v"].agg(["size", "mean"])
+    per_slot = {int(s): (int(n), m)
+                for s, n, m in zip(agg.index, agg["size"], agg["mean"])}
+    kv = tuple(rows[c].iloc[0] for c in key_cols)
+    lo = min(per_slot) if last_slot is None else last_slot + 1
+    hi = max(per_slot)
+    out = []
+    for slot in range(lo, hi + 1):
+        n, obs = per_slot.get(slot, (0, None))
+        if not pd.isna(obs):
+            carry, has_carry = float(obs), True
+        out.append((*kv, slot, n, carry if has_carry else None, n == 0))
+    return (hi, carry, has_carry), out, True, False

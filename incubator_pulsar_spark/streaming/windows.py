@@ -10,21 +10,25 @@ Spark-first:
 - time windows: ``withWatermark`` + ``F.window`` — Spark's watermark is
   computed as min across partitions of max event time − delay, the SAME
   formula the reference uses across input topics.
-- count windows: no Spark primitive; ``applyInPandasWithState`` buffers
-  per key and emits one output row per full pane of N. Per-key counting
-  only (global count windows serialize; SURVEY §7 watch list).
+- count windows: no Spark primitive; a pure per-key step folded by
+  ``keyed.keyed_fold`` buffers per key and emits one output row per
+  full pane of N. Per-key counting only (global count windows
+  serialize; SURVEY §7 watch list). Each step sorts its key's whole
+  batch by ``order`` (stable, so arrival order breaks ties).
+  Checkpoints written before the count windows folded through
+  ``keyed_fold`` (one state row per key) do not restart.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from typing import Any
-
-import pandas as pd
+from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .keyed import keyed_fold
 
 
 def tumbling_stream(
@@ -75,6 +79,38 @@ def session_stream(
     )
 
 
+COUNT_WINDOW_STATE_SCHEMA = T.StructType([
+    T.StructField("window_id", T.LongType()),
+    T.StructField("n", T.LongType()),
+    T.StructField("sum_value", T.DoubleType()),
+    T.StructField("min_seq", T.LongType()),
+    T.StructField("max_seq", T.LongType()),
+])
+COUNT_WINDOW_OUT_SCHEMA = T.StructType([
+    T.StructField("key", T.StringType()),
+    T.StructField("window_id", T.LongType()),
+    T.StructField("window_size", T.LongType()),
+    T.StructField("sum_value", T.DoubleType()),
+    T.StructField("min_seq", T.LongType()),
+    T.StructField("max_seq", T.LongType()),
+])
+SLIDING_COUNT_OUT_SCHEMA = T.StructType(
+    [T.StructField("window_end_pos", T.LongType()) if f.name == "window_id"
+     else f for f in COUNT_WINDOW_OUT_SCHEMA.fields])
+
+
+def _keyed(stream: DataFrame, key_col: str, order_col: str,
+           value_col: str | None = None) -> DataFrame:
+    """The fold input of a count window: string ``key``, long
+    ``order`` and (when aggregated) double ``value``, NULL as 0."""
+    cols = [F.col(key_col).cast("string").alias("key"),
+            F.col(order_col).cast("long").alias("order")]
+    if value_col is not None:
+        cols.append(F.coalesce(F.col(value_col).cast("double"), F.lit(0.0))
+                    .alias("value"))
+    return stream.select(*cols)
+
+
 def count_window_stream(
     stream: DataFrame,
     *,
@@ -86,59 +122,41 @@ def count_window_stream(
     """Per-key tumbling COUNT window over a stream
     (CountTriggerPolicy.java:34 / CountEvictionPolicy.java:32).
 
-    State per key: window ordinal + rows buffered so far (< count of
-    them). When the buffer reaches ``count`` the pane fires: one output
-    row (key, window_id, window_size, sum_value, min_seq, max_seq).
-    Partial panes stay buffered across micro-batches — exactly
-    WindowManager's pane deque, checkpointed.
+    State per key: window ordinal + running aggregates of the rows
+    buffered so far (< count of them) — O(1), not O(count) rows. When
+    the buffer reaches ``count`` the pane fires: one output row (key,
+    window_id, window_size, sum_value, min_seq, max_seq). Partial panes
+    stay buffered across micro-batches — WindowManager's pane deque,
+    checkpointed.
 
     Output aggregate is a fixed sum/min/max set; for arbitrary UDAFs
     feed the emitted pane ids back through ``applyInPandas``.
     """
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("window_id", T.LongType()),
-        T.StructField("window_size", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-        T.StructField("min_seq", T.LongType()),
-        T.StructField("max_seq", T.LongType()),
-    ])
-    # buffered pane: running aggregates only — O(1) state per key, not
-    # O(count) rows (partial agg like the reference's incremental panes)
-    state_schema = T.StructType([
-        T.StructField("window_id", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-        T.StructField("min_seq", T.LongType()),
-        T.StructField("max_seq", T.LongType()),
-    ])
+    return keyed_fold(_keyed(stream, key_col, order_col, value_col),
+                      partial(count_window_step, count=count),
+                      COUNT_WINDOW_STATE_SCHEMA, COUNT_WINDOW_OUT_SCHEMA)
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        wid, n, sv, mn, mx = state.get if state.exists else (0, 0, 0.0, None, None)
-        out_rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col, kind="mergesort")
-            for seq, val in zip(pdf[order_col], pdf[value_col]):
-                s, v = int(seq), (0.0 if pd.isna(val) else float(val))
-                n += 1
-                sv += v
-                mn = s if mn is None else min(mn, s)
-                mx = s if mx is None else max(mx, s)
-                if n == count:
-                    out_rows.append((key[0], wid, n, sv, mn, mx))
-                    wid, n, sv, mn, mx = wid + 1, 0, 0.0, None, None
-        state.update((wid, n, sv, mn, mx))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=[f.name for f in out_schema.fields])
 
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(order_col).alias(order_col),
-        F.col(value_col).alias(value_col),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+def count_window_step(key, st, rows, ctx, *, count):
+    """``count_window_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    wid, n, sv, mn, mx = st or (0, 0, 0.0, None, None)
+    rows = rows.sort_values("order", kind="mergesort")
+    out = []
+    for s, v in zip(rows["order"], rows["value"]):
+        s = int(s)
+        n, sv = n + 1, sv + float(v)
+        mn, mx = (s, s) if mn is None else (min(mn, s), max(mx, s))
+        if n == count:
+            out.append((key, wid, n, sv, mn, mx))
+            wid, n, sv, mn, mx = wid + 1, 0, 0.0, None, None
+    return (wid, n, sv, mn, mx), out, bool(len(rows)), False
+
+
+SLIDING_COUNT_STATE_SCHEMA = T.StructType([
+    T.StructField("n_seen", T.LongType()),
+    T.StructField("buf_seq", T.ArrayType(T.LongType())),
+    T.StructField("buf_val", T.ArrayType(T.DoubleType())),
+])
 
 
 def sliding_count_window_stream(
@@ -154,56 +172,49 @@ def sliding_count_window_stream(
     ``length`` records fires every ``slide`` records
     (CountTriggerPolicy + CountEvictionPolicy with length > slide).
 
-    State per key = the last ``length-1`` (seq, value) pairs plus the
+    State per key = the last ``length`` (seq, value) pairs plus the
     total record count — the same deque WindowManager keeps, bounded at
     O(length) per key. Each arrival increments the count; when count is
     a multiple of ``slide`` the pane (trailing ≤length rows) fires as
     one output row.
     """
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("window_end_pos", T.LongType()),
-        T.StructField("window_size", T.LongType()),
-        T.StructField("sum_value", T.DoubleType()),
-        T.StructField("min_seq", T.LongType()),
-        T.StructField("max_seq", T.LongType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("buf_seq", T.ArrayType(T.LongType())),
-        T.StructField("buf_val", T.ArrayType(T.DoubleType())),
-    ])
+    return keyed_fold(_keyed(stream, key_col, order_col, value_col),
+                      partial(sliding_count_step, length=length,
+                              slide=slide),
+                      SLIDING_COUNT_STATE_SCHEMA, SLIDING_COUNT_OUT_SCHEMA)
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        n_seen, buf_seq, buf_val = (0, [], [])
-        if state.exists:
-            s = state.get
-            n_seen, buf_seq, buf_val = int(s[0]), list(s[1] or []), list(s[2] or [])
-        out_rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col, kind="mergesort")
-            for seq, val in zip(pdf[order_col], pdf[value_col]):
-                buf_seq.append(int(seq))
-                buf_val.append(0.0 if pd.isna(val) else float(val))
-                if len(buf_seq) > length:
-                    buf_seq.pop(0)
-                    buf_val.pop(0)
-                n_seen += 1
-                if n_seen % slide == 0:
-                    out_rows.append((key[0], n_seen, len(buf_seq), sum(buf_val),
-                                     min(buf_seq), max(buf_seq)))
-        state.update((n_seen, buf_seq, buf_val))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=[f.name for f in out_schema.fields])
 
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(order_col).alias(order_col),
-        F.col(value_col).alias(value_col),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+def sliding_count_step(key, st, rows, ctx, *, length, slide):
+    """The ``keyed_fold`` step of ``sliding_count_window_stream``."""
+    n_seen, buf_seq, buf_val = st or (0, [], [])
+    buf_seq, buf_val = list(buf_seq or []), list(buf_val or [])
+    rows = rows.sort_values("order", kind="mergesort")
+    out = []
+    for s, v in zip(rows["order"], rows["value"]):
+        buf_seq.append(int(s))
+        buf_val.append(float(v))
+        if len(buf_seq) > length:
+            buf_seq.pop(0)
+            buf_val.pop(0)
+        n_seen += 1
+        if n_seen % slide == 0:
+            out.append((key, n_seen, len(buf_seq), sum(buf_val),
+                        min(buf_seq), max(buf_seq)))
+    return (n_seen, buf_seq, buf_val), out, bool(len(rows)), False
+
+
+PANE_DELTAS_STATE_SCHEMA = T.StructType([
+    T.StructField("p", T.LongType()),
+    T.StructField("deque", T.ArrayType(T.LongType())),
+    T.StructField("evicted", T.ArrayType(T.LongType())),
+])
+# ``order`` is renamed to the operator's ``order_col`` on the way out
+PANE_DELTAS_OUT_SCHEMA = T.StructType([
+    T.StructField("key", T.StringType()),
+    T.StructField("window_end_pos", T.LongType()),
+    T.StructField("order", T.LongType()),
+    T.StructField("delta", T.StringType()),
+])
 
 
 def pane_deltas_stream(
@@ -226,47 +237,27 @@ def pane_deltas_stream(
     to the batch ``operators.windows.pane_deltas`` on the same data
     (asserted in tests).
     """
-    out_schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("window_end_pos", T.LongType()),
-        T.StructField(order_col, T.LongType()),
-        T.StructField("delta", T.StringType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("p", T.LongType()),
-        T.StructField("deque", T.ArrayType(T.LongType())),
-        T.StructField("evicted", T.ArrayType(T.LongType())),
-    ])
+    return keyed_fold(_keyed(stream, key_col, order_col),
+                      partial(pane_deltas_step, length=length, slide=slide),
+                      PANE_DELTAS_STATE_SCHEMA, PANE_DELTAS_OUT_SCHEMA
+                      ).withColumnRenamed("order", order_col)
 
-    def fn(key: Any, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        p, deque, evicted = (state.get if state.exists else (0, [], []))
-        p, deque, evicted = int(p), list(deque or []), list(evicted or [])
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(order_col, kind="mergesort")
-            for seq in pdf[order_col]:
-                s = int(seq)
-                p += 1
-                deque.append(s)
-                if len(deque) > length:
-                    evicted.append(deque.pop(0))
-                if p % slide == 0:
-                    base = p - len(deque)
-                    for i, ds in enumerate(deque):
-                        pos = base + 1 + i
-                        delta = "new" if pos > p - slide else "carried"
-                        out.append((key[0], p, ds, delta))
-                    for es in evicted:
-                        out.append((key[0], p, es, "expired"))
-                    evicted = []
-        state.update((p, deque, evicted))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
 
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(order_col).cast("long").alias(order_col),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+def pane_deltas_step(key, st, rows, ctx, *, length, slide):
+    """``pane_deltas_stream``'s per-key fold (the ``keyed_fold`` step)."""
+    p, deque, evicted = st or (0, [], [])
+    deque, evicted = list(deque or []), list(evicted or [])
+    rows = rows.sort_values("order", kind="mergesort")
+    out = []
+    for s in rows["order"]:
+        p += 1
+        deque.append(int(s))
+        if len(deque) > length:
+            evicted.append(deque.pop(0))
+        if p % slide == 0:
+            base = p - len(deque)
+            out += [(key, p, ds, "new" if base + 1 + i > p - slide
+                     else "carried") for i, ds in enumerate(deque)]
+            out += [(key, p, es, "expired") for es in evicted]
+            evicted = []
+    return (p, deque, evicted), out, bool(len(rows)), False

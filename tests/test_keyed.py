@@ -1,4 +1,4 @@
-"""The keyed-state fold (``streaming/keyed.py``) and its seven steps.
+"""The keyed-state fold (``streaming/keyed.py``) and its twelve steps.
 
 The step tests are Spark-free: each step is a pure per-key function,
 so carries, late-row accounting and NULL runs are checked by calling
@@ -16,8 +16,10 @@ import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from incubator_pulsar_spark.streaming import behavior, interval, scd2
+from incubator_pulsar_spark.streaming import (behavior, dedup, gapfill,
+                                              interval, scd2, windows)
 from incubator_pulsar_spark.streaming.keyed import FoldContext, keyed_fold
 
 NO_WM = FoldContext(None)
@@ -198,6 +200,103 @@ class TestScd2EventTimeStep:
         assert st == ("b", 4_000, 3, 0, [], [])
 
 
+class TestCountWindowStep:
+    step = staticmethod(partial(windows.count_window_step, count=3))
+
+    def test_pane_carries_across_batches(self):
+        st, (o1, o2) = _replay(self.step, "u", [
+            _rows(order=[4, 2, 1, 3], value=[4.0, 2.0, 1.0, 3.0]),
+            _rows(order=[6, 5], value=[6.0, 5.0])])
+        assert o1 == [("u", 0, 3, 6.0, 1, 3)]
+        assert o2 == [("u", 1, 3, 15.0, 4, 6)]
+        assert st == (2, 0, 0.0, None, None)
+
+    def test_null_key(self):
+        _, (out,) = _replay(self.step, None, [
+            _rows(order=[1, 2, 3], value=[0.0, 0.0, 1.0])])
+        assert out == [(None, 0, 3, 1.0, 1, 3)]
+
+
+class TestSlidingCountStep:
+    step = staticmethod(partial(windows.sliding_count_step, length=3,
+                                slide=2))
+
+    def test_pane_carries_across_batches(self):
+        st, (o1, o2) = _replay(self.step, "u", [
+            _rows(order=[3, 1, 2], value=[3.0, 1.0, 2.0]),
+            _rows(order=[4], value=[4.0])])
+        assert o1 == [("u", 2, 2, 3.0, 1, 2)]
+        assert o2 == [("u", 4, 3, 9.0, 2, 4)]
+        assert st == (4, [2, 3, 4], [2.0, 3.0, 4.0])
+
+    def test_null_key(self):
+        _, (out,) = _replay(self.step, None, [
+            _rows(order=[1, 2], value=[1.0, 1.0])])
+        assert out == [(None, 2, 2, 2.0, 1, 2)]
+
+
+class TestPaneDeltasStep:
+    step = staticmethod(partial(windows.pane_deltas_step, length=2,
+                                slide=2))
+
+    def test_eviction_carries_across_batches(self):
+        st, (o1, o2) = _replay(self.step, "k", [
+            _rows(order=[3, 2, 1]), _rows(order=[4])])
+        assert o1 == [("k", 2, 1, "new"), ("k", 2, 2, "new")]
+        # 1 (evicted in batch 1) and 2 expire at the batch-2 trigger
+        assert o2 == [("k", 4, 3, "new"), ("k", 4, 4, "new"),
+                      ("k", 4, 1, "expired"), ("k", 4, 2, "expired")]
+        assert st == (4, [3, 4], [])
+
+    def test_null_key(self):
+        _, (out,) = _replay(self.step, None, [_rows(order=[1, 2])])
+        assert out == [(None, 2, 1, "new"), (None, 2, 2, "new")]
+
+
+class TestDedupStep:
+    step = staticmethod(partial(dedup.dedup_step, carried=["_c0"]))
+
+    def test_high_water_mark_carries_across_batches(self):
+        st, (o1, o2) = _replay(self.step, "p", [
+            _rows(arrival=[2, 1], seq_id=[5, 7], _c0=["b", "a"]),
+            _rows(arrival=[3, 4], seq_id=[7, 8], _c0=["c", "d"])])
+        assert o1 == [("a",)]  # arrival 2 (id 5) regressed below 7
+        assert o2 == [("d",)]
+        assert st == (8,)
+
+    def test_null_key_and_null_id(self):
+        st, out, changed, _ = self.step(
+            None, None, _rows(arrival=[1, 2], seq_id=[None, None],
+                              _c0=["a", "b"]), NO_WM)
+        assert out == [("a",), ("b",)]  # NULL ids always pass
+        assert st == (None,) and not changed
+
+
+class TestGapfillStep:
+    step = staticmethod(partial(gapfill.gapfill_step, key_cols=["_k0"]))
+
+    def test_carry_and_final_slots(self):
+        st, (o1, o2) = _replay(self.step, '{"k":"a"}', [
+            _rows(_k0=["a", "a", "a"], slot=[3, 1, 1],
+                  _v=[9.0, 2.0, None]),
+            # slots 2 and 3 are at or before last_slot: dropped
+            _rows(_k0=["a", "a", "a"], slot=[2, 3, 5], _v=[7.0, 7.0, None])])
+        assert o1 == [("a", 1, 2, 2.0, False), ("a", 2, 0, 2.0, True),
+                      ("a", 3, 1, 9.0, False)]
+        assert o2 == [("a", 4, 0, 9.0, True), ("a", 5, 1, 9.0, False)]
+        assert st == (5, 9.0, True)
+
+    def test_only_final_slots_change_nothing(self):
+        st = (5, 1.0, True)
+        assert self.step("k", st, _rows(_k0=["a"], slot=[4], _v=[3.0]),
+                         NO_WM) == (st, [], False, False)
+
+    def test_null_key_value(self):
+        _, (out,) = _replay(self.step, "{}", [
+            _rows(_k0=[None], slot=[7], _v=[float("nan")])])
+        assert out == [(None, 7, 1, None, False)]
+
+
 # ---------------------------------------------------------------- parity
 
 _SRC = "key string, order long, value string"
@@ -206,6 +305,10 @@ _SRC = "key string, order long, value string"
 def _cases():
     """name -> (prep(source) -> keyed, step, state schema, out schema,
     timeout); built lazily because Columns need a live session."""
+    def counted(df):
+        return df.select("key", "order",
+                         (F.col("order") % 7).cast("double").alias("value"))
+
     def et(df):
         ts = F.timestamp_micros(F.col("order") * 1_000_000)
         return (df.withColumn("ts", ts).withWatermark("ts", "10 seconds")
@@ -240,6 +343,38 @@ def _cases():
         "scd2_event_time": (et, scd2.scd2_event_time_step,
                             scd2.SCD2_ET_STATE_SCHEMA,
                             scd2.SCD2_OUT_SCHEMA, "EventTimeTimeout"),
+        "count_window": (counted, partial(windows.count_window_step,
+                                          count=3),
+                         windows.COUNT_WINDOW_STATE_SCHEMA,
+                         windows.COUNT_WINDOW_OUT_SCHEMA, "NoTimeout"),
+        "sliding_count": (counted, partial(windows.sliding_count_step,
+                                           length=3, slide=2),
+                          windows.SLIDING_COUNT_STATE_SCHEMA,
+                          windows.SLIDING_COUNT_OUT_SCHEMA, "NoTimeout"),
+        "pane_deltas": (lambda df: df.select("key", "order"),
+                        partial(windows.pane_deltas_step, length=3,
+                                slide=2),
+                        windows.PANE_DELTAS_STATE_SCHEMA,
+                        windows.PANE_DELTAS_OUT_SCHEMA, "NoTimeout"),
+        # the ids regress (order 10 -> id 5 after order 40 -> id 2, ...)
+        "dedup": (lambda df: df.select(
+            "key", (F.col("order") * 7 % 13).alias("seq_id"),
+            F.col("order").alias("arrival"),
+            *[F.col(c).alias(f"_c{i}") for i, c in enumerate(df.columns)]),
+            partial(dedup.dedup_step, carried=["_c0", "_c1", "_c2"]),
+            dedup.DEDUP_STATE_SCHEMA, T.DataType.fromDDL(_SRC),
+            "NoTimeout"),
+        # slot = order // 10: k0's late 5 and k1's 30 land in final slots
+        "gapfill": (lambda df: df.select(
+            F.to_json(F.struct("key")).alias("key"),
+            F.col("key").alias("_k0"),
+            (F.col("order") / 10).cast("long").alias("slot"),
+            F.ascii("value").cast("double").alias("_v")),
+            partial(gapfill.gapfill_step, key_cols=["_k0"]),
+            gapfill.GAPFILL_STATE_SCHEMA,
+            T.StructType([T.StructField("key", T.StringType()),
+                          *gapfill.GAPFILL_OUT_SCHEMA.fields]),
+            "NoTimeout"),
     }
 
 
@@ -337,7 +472,8 @@ class TestBucketParity:
 
     @pytest.mark.parametrize("name", [
         "markov", "retention", "twap", "entropy", "interval", "scd2",
-        "scd2_event_time"])
+        "scd2_event_time", "count_window", "sliding_count", "pane_deltas",
+        "dedup", "gapfill"])
     def test_buckets_match_per_key(self, spark, tmp_path, monkeypatch,
                                    name):
         from incubator_pulsar_spark.streaming import keyed

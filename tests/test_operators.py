@@ -434,64 +434,6 @@ def test_stream_late_data_route(spark, tmp_path):
     assert on_time == {1, 2, 3}
 
 
-class TestTransformWithState:
-    """transformWithStateInPandas operators (Spark 4 stateful API).
-
-    Plan construction is always testable; EXECUTION needs google.protobuf
-    (the worker's state-server protocol), so the run test self-skips
-    where that dependency is absent."""
-
-    def _stream(self, spark, tmp_path, rows, schema):
-        src = tmp_path / "src"
-        src.mkdir()
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append").parquet(str(src))
-        return spark.readStream.schema(schema).parquet(str(src))
-
-    def test_count_window_plan_builds(self, spark, tmp_path):
-        from incubator_pulsar_spark.streaming.tws import count_window_stream_tws
-
-        stream = self._stream(
-            spark, tmp_path, [("a", 1, 1.0)], "key string, sequence long, value double")
-        out = count_window_stream_tws(stream, count=4)
-        assert [f.name for f in out.schema.fields] == [
-            "key", "window_id", "window_size", "sum_value", "min_seq", "max_seq"]
-        assert out.isStreaming
-
-    def test_delayed_plan_builds(self, spark, tmp_path):
-        from incubator_pulsar_spark.streaming.tws import delayed_delivery_stream_tws
-
-        stream = self._stream(
-            spark, tmp_path, [("a", 1, 1.0, 0)],
-            "key string, sequence long, value double, deliver_at_ms long")
-        out = delayed_delivery_stream_tws(stream)
-        assert [f.name for f in out.schema.fields] == [
-            "key", "sequence", "value", "deliver_at_ms"]
-        assert out.isStreaming
-
-    def test_count_window_executes(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from incubator_pulsar_spark.streaming.tws import (count_window_stream_tws,
-                                                          tws_available)
-
-        if not tws_available():
-            _pytest.skip("google.protobuf absent: transformWithState "
-                         "worker protocol unavailable in this container")
-        rows = [("a", i, float(i)) for i in range(10)] + [("b", i, 1.0) for i in range(5)]
-        stream = self._stream(spark, tmp_path, rows,
-                              "key string, sequence long, value double")
-        out = count_window_stream_tws(stream, count=4)
-        q = (out.writeStream.format("parquet").option("path", str(tmp_path / "out"))
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        got = sorted(
-            (r.key, r.window_id, r.window_size, r.sum_value)
-            for r in spark.read.parquet(str(tmp_path / "out")).collect())
-        assert got == [("a", 0, 4, 6.0), ("a", 1, 4, 22.0), ("b", 0, 4, 4.0)]
-
-
 def test_stream_windowed_agg_with_late_capture(spark, tmp_path):
     """Composition: the late router feeds a watermarked tumbling window —
     on-time rows aggregate, late arrivals land in the side topic AND

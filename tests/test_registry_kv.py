@@ -293,7 +293,7 @@ def test_proto_nested_same_bare_name_does_not_clobber():
 
 
 def test_avro_payload_roundtrip_if_available(spark):
-    """Package-gated (like tws/protobuf): executes only on a full Spark
+    """Package-gated (like protobuf): executes only on a full Spark
     distribution where org.apache.spark.sql.avro is on the classpath."""
     from incubator_pulsar_spark.functions import codecs
 

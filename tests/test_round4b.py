@@ -596,10 +596,9 @@ class TestStreamingDigest:
                                                  sf_dir):
         """Two availableNow passes over a growing topic: the LAST
         emitted digest per group equals the batch digest of the union —
-        sum/count mergeability IS the streaming story."""
+        sum/count mergeability IS the streaming story: ``topic_digest``
+        runs unchanged on a stream as a built-in streaming agg."""
         from incubator_pulsar_spark.operators.digest import topic_digest
-        from incubator_pulsar_spark.streaming.digest import (
-            topic_digest_stream)
 
         ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
             .select("event_type", "event_id", "user_id")
@@ -611,8 +610,8 @@ class TestStreamingDigest:
 
         def run(tag):
             stream = spark.readStream.schema(first.schema).parquet(src)
-            out = topic_digest_stream(stream, ["event_type"],
-                                      ["event_id", "user_id"])
+            out = topic_digest(stream, ["event_type"],
+                               ["event_id", "user_id"])
 
             def write(df, batch_id):
                 df.withColumn("pass_tag", F.lit(tag)) \

@@ -151,6 +151,60 @@ def test_count_window_stream_emits_full_panes_across_batches(spark, tmp_path):
         (0, 3, 6.0), (1, 3, 15.0)]
 
 
+def test_stream_order_spans_arrow_chunks(spark, tmp_path):
+    """``applyInPandasWithState`` hands a group's rows over in chunks
+    of ``spark.sql.execution.arrow.maxRecordsPerBatch``: an operator
+    that orders each chunk on its own, not the whole batch, diverges
+    from its batch twin. One key arriving as 3, 4, 1, 2 in two-row
+    chunks must still dedup, fire panes and track evictions in
+    sequence order."""
+    from incubator_pulsar_spark.operators.dedup import dedup_by_sequence
+    from incubator_pulsar_spark.operators.windows import (
+        pane_deltas, sliding_count_window)
+
+    path = str(tmp_path / "t")
+    ids = {1: 1, 2: 3, 3: 1, 4: 2}  # 3 and 4 regress below 2's id
+    spark.createDataFrame(
+        [Row(key="u", producer_name="p", sequence=s, sequence_id=ids[s],
+             value=float(s)) for s in (3, 4, 1, 2)]
+    ).coalesce(1).write.parquet(path)
+    batch = spark.read.parquet(path)
+
+    def run(out, tag):
+        sink = str(tmp_path / f"out_{tag}")
+        _run_to_parquet(out, sink, str(tmp_path / f"ck_{tag}"))
+        return spark.read.parquet(sink).collect()
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        kept = run(sdedup.dedup_stream(_stream(spark, path)), "dedup")
+        panes = run(swin.count_window_stream(_stream(spark, path),
+                                             count=2), "count")
+        sliding = run(swin.sliding_count_window_stream(
+            _stream(spark, path), length=2, slide=1), "sliding")
+        deltas = run(swin.pane_deltas_stream(
+            _stream(spark, path), length=2, slide=1), "deltas")
+    finally:
+        spark.conf.set(conf, prev)
+
+    assert sorted(r.sequence for r in kept) == sorted(
+        r.sequence for r in dedup_by_sequence(batch).collect()) == [1, 2]
+    assert sorted((r.window_id, r.min_seq, r.max_seq) for r in panes) == [
+        (0, 1, 2), (1, 3, 4)]
+    want = sliding_count_window(batch, length=2, slide=1,
+                                aggs=[F.sum("value").alias("sum_value")])
+    assert sorted((r.window_end_pos, r.window_size, r.sum_value)
+                  for r in sliding) == sorted(
+        (r.window_end_pos, r.window_size, r.sum_value)
+        for r in want.collect())
+    assert sorted((r.window_end_pos, r.sequence, r.delta)
+                  for r in deltas) == sorted(
+        (r.window_end_pos, r.sequence, r.delta)
+        for r in pane_deltas(batch, length=2, slide=1).collect())
+
+
 def test_tumbling_stream_watermark(spark, tmp_path, topic_dir):
     out = swin.tumbling_stream(
         _stream(spark, topic_dir), ts_col="event_time", length="2 minutes",
@@ -961,6 +1015,12 @@ def test_gapfill_stream_matches_batch_across_passes(spark, tmp_path):
     # third pass over the unchanged checkpoint emits nothing new
     n_before = spark.read.parquet(sink).count()
     run()
+    assert spark.read.parquet(sink).count() == n_before
+    # rows in already-final slots emit nothing and never move the
+    # finality mark back (else the 00:50 pass re-emits 00:30-00:45)
+    for ts in ("2024-01-01 00:20:00", "2024-01-01 00:50:00"):
+        mk([Row(k="a", ts=ts, v=1.0)]).write.mode("append").parquet(src)
+        run()
     assert spark.read.parquet(sink).count() == n_before
 
 
