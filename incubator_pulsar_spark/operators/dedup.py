@@ -7,8 +7,8 @@ sequence_id ≤ the highest seen for its producer is dropped, :186-187),
 snapshotted every N entries (:142).
 
 Spark-first batch semantics: a message survives iff its sequence_id is
-strictly greater than every sequence_id that arrived *before* it (in
-publish order) from the same producer. That is a running-max window —
+NULL or strictly greater than every sequence_id that arrived *before* it
+(in publish order) from the same producer. That is a running-max window —
 one shuffle by producer, sort within partitions only (window function),
 no global sort.
 
@@ -35,7 +35,10 @@ def dedup_by_sequence(
     """Drop rows whose sequence_id regressed for their producer.
 
     MessageDeduplication.java:186 — ``sequenceId <= highestSequencedPushed``
-    ⇒ duplicate. The first row of each producer always survives.
+    ⇒ duplicate. The first row of each producer always survives, and so
+    does a row with a NULL sequence_id: with no id it cannot be judged a
+    duplicate, and it leaves the producer's high-water mark as it was
+    (the rule of ``streaming.dedup.dedup_step``).
     """
     w = (
         Window.partitionBy(producer_col)
@@ -45,7 +48,8 @@ def dedup_by_sequence(
     prev_max = F.max(F.col(sequence_id_col)).over(w)
     return (
         df.withColumn("_prev_max", prev_max)
-        .filter(F.col("_prev_max").isNull() | (F.col(sequence_id_col) > F.col("_prev_max")))
+        .filter(F.col(sequence_id_col).isNull() | F.col("_prev_max").isNull()
+                | (F.col(sequence_id_col) > F.col("_prev_max")))
         .drop("_prev_max")
     )
 

@@ -680,7 +680,8 @@ TABLEVIEW_SQL = f"SELECT * FROM ({TABLEVIEW_SQL.strip()}) WHERE value IS NOT NUL
 def dedup_sequence_ids(spark, sf_dir):
     """Per-producer sequence-id dedup (MessageDeduplication.java:186):
     producer := event_type, sequence_id := round(value*100), arrival :=
-    event_id. Rows whose seq id regressed for their producer drop."""
+    event_id. Rows whose seq id regressed for their producer drop; a
+    NULL seq id (NULL value) is kept, as the stream form keeps it."""
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("seq_id"),
@@ -702,7 +703,7 @@ WITH t AS (
   FROM t
 )
 SELECT event_id, event_type, seq_id FROM m
-WHERE prev_max IS NULL OR seq_id > prev_max
+WHERE seq_id IS NULL OR prev_max IS NULL OR seq_id > prev_max
 """
 
 

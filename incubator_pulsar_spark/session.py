@@ -12,6 +12,11 @@ Scale posture: these defaults are chosen to behave the same on
   hot path).
 - ``maxPartitionBytes`` left at 128m: at 100 TB that is ~800k input splits,
   which is the right granularity for 1000 executors x 8 cores.
+- Python workers fork from the engine's daemon
+  (``spark.python.daemon.module`` = ``worker_daemon``): it is
+  ``pyspark.daemon`` except that a task no longer re-reads the central
+  directory of every unchanged zip on ``sys.path`` (``pyspark.zip``:
+  150-290 ms per task on CPython 3.11, paid in every micro-batch).
 """
 
 from __future__ import annotations
@@ -49,6 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "incubator_pulsar_spark.worker_daemon")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

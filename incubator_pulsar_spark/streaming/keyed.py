@@ -1,5 +1,10 @@
-"""One keyed-state fold for the stream operators of ``behavior.py``,
-``interval.py`` and ``scd2.py``.
+"""One keyed-state fold for the twelve append-mode stream operators:
+``markov_stream``, ``retention_stream``, ``twap_stream`` and
+``entropy_stream`` (``behavior.py``), ``interval_stream``
+(``interval.py``), ``scd2_stream`` and ``scd2_stream_event_time``
+(``scd2.py``), ``count_window_stream``, ``sliding_count_window_stream``
+and ``pane_deltas_stream`` (``windows.py``), ``dedup_stream``
+(``dedup.py``) and ``gapfill_stream`` (``gapfill.py``).
 
 Each of those operators is a pure per-key ``step`` plus its per-key
 state schema; ``keyed_fold`` owns the ``applyInPandasWithState``
@@ -21,6 +26,13 @@ The step contract::
 - ``out_rows`` are tuples in the output schema's field order;
 - ``changed`` asks for the state to be written, ``rearm`` for the
   event-time timer to fire again once the watermark moves.
+
+The other stateful operators keep their own ``applyInPandasWithState``:
+the sketches of ``sketches.py`` run in update mode (each batch
+re-emits a group's running estimate), and ``delayed_delivery_stream``
+(``delay.py``) needs a processing-time timeout and ``state.remove()``.
+The fold is append-only, event-time or no timeout, and never removes
+state.
 """
 
 from __future__ import annotations

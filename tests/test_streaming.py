@@ -125,6 +125,25 @@ def test_dedup_stream_matches_batch_and_is_stateful(spark, tmp_path, topic_dir):
     assert got2 == want + [7]
 
 
+def test_dedup_keeps_null_sequence_id_in_batch_and_stream(spark, tmp_path):
+    """A row with no sequence id cannot be judged a duplicate: one
+    producer's ids 1, NULL, 2 keep all three rows in both forms."""
+    from incubator_pulsar_spark.operators.dedup import dedup_by_sequence
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [Row(producer_name="p", sequence=s, sequence_id=i)
+         for s, i in ((1, 1), (2, None), (3, 2))],
+        "producer_name STRING, sequence LONG, sequence_id LONG",
+    ).coalesce(1).write.parquet(path)
+    batch = dedup_by_sequence(spark.read.parquet(path))
+    sink = str(tmp_path / "out")
+    _run_to_parquet(sdedup.dedup_stream(_stream(spark, path)), sink,
+                    str(tmp_path / "ck"))
+    assert sorted(r.sequence for r in batch.collect()) == [1, 2, 3]
+    assert sorted(r.sequence for r in spark.read.parquet(sink).collect()) == [1, 2, 3]
+
+
 def test_count_window_stream_emits_full_panes_across_batches(spark, tmp_path):
     path = str(tmp_path / "t")
     rows1 = [Row(key="u", value=float(i), sequence=i,
